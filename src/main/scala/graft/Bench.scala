@@ -244,7 +244,9 @@ object Bench {
       case (name, t, true, _) if baseline.getOrElse(name, -1.0) > 0 =>
         t / baseline(name)
     })
-    val pass1 = firstPass.map { case (name, _, _, t1) => (name, t1) }
+    // a failed query has no pass-1 time: null in queries_pass1, as
+    // cold_total leaves it out
+    val pass1 = firstPass.map { case (name, _, ok, t1) => (name, if (ok) Some(t1) else None) }
     val contended = scala.collection.mutable.ListBuffer[(String, Double, Double)]()
     val results = firstPass.map { case (name, t, ok, _) =>
       val base = baseline.getOrElse(name, -1.0)
@@ -270,9 +272,10 @@ object Bench {
     val failed = results.collect { case (k, _, false) => "\"" + k + "\"" }.mkString("[", ",", "]")
     val parts = scanParts.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val total = results.collect { case (_, v, true) => v }.sum
-    val coldTotal = pass1.collect { case (_, v) if v >= 0 => v }.sum
+    val coldTotal = pass1.flatMap(_._2).sum
     val fullQs = results.map { case (k, v, _) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val pass1Qs = pass1.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val pass1Qs = pass1.map { case (k, v) => "\"" + k + "\":" + v.fold("null")(_.toString) }
+      .mkString("{", ",", "}")
     val contJson = contended.map { case (n, t, t2) =>
       s"""{"q":"$n","min2":${ms(t)},"retry":${ms(t2)}}"""
     }.mkString("[", ",", "]")

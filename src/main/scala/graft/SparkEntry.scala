@@ -55,15 +55,16 @@ object SparkEntry {
     * cardinalities a custkey ≥ 1e6 would SILENTLY collide customer and
     * supplier nodes (corrupted graph, no error). In-column guard — one
     * comparison per row riding the build projection, no extra driver
-    * action (guide §1.2) — fails the build with a named error instead. */
+    * action (guide §1.2) — fails the build with a named error instead.
+    * A NULL id cannot collide with anything and passes through as NULL. */
   private[graft] def custIdBelowOffset(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    when(c < 1000000L, c).otherwise(raise_error(lit(
+    when(c.isNull || c < 1000000L, c).otherwise(raise_error(lit(
       "trade-graph build: o_custkey >= 1000000 collides with the " +
         "+1e6 supplier-id offset — raise the offset convention")))
   /** [[custIdBelowOffset]] as a Spark-SQL fragment for the SQL-built
     * edge sets (graph_reciprocity). */
-  private def custIdBelowOffsetSql(c: String): String =
-    s"CASE WHEN $c < 1000000 THEN $c ELSE raise_error(" +
+  private[graft] def custIdBelowOffsetSql(c: String): String =
+    s"CASE WHEN $c IS NULL OR $c < 1000000 THEN $c ELSE raise_error(" +
       "'trade-graph build: o_custkey >= 1000000 collides with the " +
       "+1e6 supplier-id offset — raise the offset convention') END"
 

@@ -35,8 +35,8 @@ import JqExpr._
   * sharpening is syntactic on the access target. Variables are values
   * (safe); `as` bodies run on the ORIGINAL input and are analyzed;
   * assignments return the modified input (whole-input by definition);
-  * every builtin call in input position is whole-input (`select` alone
-  * would leak the full input as its output). */
+  * every builtin call in input position but `empty` is whole-input
+  * (`select` alone would leak the full input as its output). */
 object Footprint {
 
   /** Needed top-level fields → per-field need: `None` = whole subtree,
@@ -152,6 +152,9 @@ object Footprint {
     case If(c, t, Some(eb)) => unionAll(Seq(fp(c), fp(t), fp(eb)))
     case TryCatch(b, h) => unionAll(Seq(fp(b)) ++ h.map(fp)) // handler fp over-approximates
 
+    // `empty` emits nothing and reads nothing. A user `def empty` is in
+    // scope only inside a FuncDef, which certifies nothing.
+    case FuncCall("empty", Nil) => empty
     case FuncCall(_, _) => None // builtin in input position observes the input
     case FuncDef(_, _, _, _) => None // user defs: call sites not tracked
 

@@ -25,10 +25,9 @@ case class JqString(child: Expression, program: String)
   @transient private lazy val compiled = Jq.compileCached(program)
 
   override def eval(input: InternalRow): Any = {
-    val raw = child.eval(input)
-    val jsonText = if (raw == null) null else raw.asInstanceOf[UTF8String].toString
+    val json = child.eval(input).asInstanceOf[UTF8String]
     try {
-      val it = compiled.applyToText(jsonText)
+      val it = compiled.applyToUtf8(json)
       if (!it.hasNext) null
       else {
         val n = it.next()
@@ -39,7 +38,7 @@ case class JqString(child: Expression, program: String)
     } catch {
       case e: JqError =>
         throw new RuntimeException(
-          s"""jq returned an error "${e.getMessage}" from input: $jsonText""", e)
+          s"""jq returned an error "${e.getMessage}" from input: $json""", e)
     }
   }
 
@@ -59,10 +58,9 @@ case class JqExtractAll(child: Expression, program: String)
   @transient private lazy val compiled = Jq.compileCached(program)
 
   override def eval(input: InternalRow): Any = {
-    val raw = child.eval(input)
-    val jsonText = if (raw == null) null else raw.asInstanceOf[UTF8String].toString
+    val json = child.eval(input).asInstanceOf[UTF8String]
     try {
-      val out = compiled.applyToText(jsonText).map { n =>
+      val out = compiled.applyToUtf8(json).map { n =>
         if (n.isTextual) UTF8String.fromString(n.textValue())
         else UTF8String.fromString(Json.serialize(n))
       }.toArray[Any]
@@ -70,7 +68,7 @@ case class JqExtractAll(child: Expression, program: String)
     } catch {
       case e: JqError =>
         throw new RuntimeException(
-          s"""jq returned an error "${e.getMessage}" from input: $jsonText""", e)
+          s"""jq returned an error "${e.getMessage}" from input: $json""", e)
     }
   }
 

@@ -17,7 +17,8 @@ import graft.jq.{Jq, JqError, Json}
   * Planned through Spark's own `Generate` node, so it works in `SELECT`,
   * `LATERAL VIEW [OUTER]`, and composes with whole-stage-codegen'd parents
   * and children. The jq program is compiled once per executor JVM
-  * (`Jq.compileCached`); per row we parse the JSON, bind `$error` per the
+  * (`Jq.compileCached`); per row we parse the JSON from its UTF-8 bytes
+  * (`CompiledJq.applyToUtf8`, no String decode), bind `$error` per the
   * reference's corrupt-input contract, stream jq outputs and marshal each
   * directly to an InternalRow (no Row boxing).
   *
@@ -45,9 +46,8 @@ case class JsonQueryGenerator(child: Expression, program: String, typeArgs: Seq[
   @transient private lazy val fieldNames: Array[String] = schema.fieldNames
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val raw = child.eval(input)
-    val jsonText = if (raw == null) null else raw.asInstanceOf[UTF8String].toString
-    val outs = compiled.applyToText(jsonText)
+    val json = child.eval(input).asInstanceOf[UTF8String]
+    val outs = compiled.applyToUtf8(json)
     new Iterator[InternalRow] {
       // jq errors surface lazily while iterating; match the reference's
       // failure contract (JsonQueryUDTF.java:101)
@@ -56,7 +56,7 @@ case class JsonQueryGenerator(child: Expression, program: String, typeArgs: Seq[
         catch {
           case e: JqError =>
             throw new RuntimeException(
-              s"""jq returned an error "${e.getMessage}" from input: $jsonText""", e)
+              s"""jq returned an error "${e.getMessage}" from input: $json""", e)
         }
       override def hasNext: Boolean = guard(outs.hasNext)
       override def next(): InternalRow = {

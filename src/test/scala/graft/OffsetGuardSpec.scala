@@ -23,6 +23,15 @@ class OffsetGuardSpec extends AnyFunSuite {
     assert(out.toSeq == Seq(0L, 1L, 999999L))
   }
 
+  test("a NULL custkey passes through as NULL in the Column and SQL forms") {
+    val df = Seq(Some(5L), None).toDF("c")
+    val viaColumn = df.select(SparkEntry.custIdBelowOffset(col("c")).as("c"))
+    val viaSql = df.selectExpr(s"${SparkEntry.custIdBelowOffsetSql("c")} AS c")
+    for (out <- Seq(viaColumn, viaSql))
+      assert(out.collect().map(r => Option(r.get(0))).toSeq.sortBy(_.isDefined) ==
+        Seq(None, Some(5L)))
+  }
+
   test("a custkey at the offset fails loudly, never corrupts the graph") {
     val e = intercept[Exception] {
       Seq(5L, 1000000L).toDF("c")

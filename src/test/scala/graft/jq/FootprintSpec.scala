@@ -33,6 +33,8 @@ class FootprintSpec extends AnyFunSuite {
     assert(fpOf(".a // .b") == w("a", "b"))
     assert(fpOf("try .a catch .b") == w("a", "b"))
     assert(fpOf(".missing?") == w("missing"))
+    // `empty` reads nothing: the corrupt-row skip idiom prunes to .k
+    assert(fpOf("if $error then empty else .k end") == w("k"))
   }
 
   test("footprint tracks one more path level for static access chains") {
@@ -79,7 +81,7 @@ class FootprintSpec extends AnyFunSuite {
       ".k | select(. > 2)", "[.a[] | {v: .}]", ".miss", ".miss?",
       "\"k=\\(.k)\"", ".a as $x | ($x | length) + .k",
       "reduce .a[] as $i (0; . + $i)", "try (.k + \"x\") catch \"caught\"",
-      "if $error == null then .k else -1 end",
+      "if $error == null then .k else -1 end", "if $error then empty else .k end",
       // level-2 chains: subfield pruning inside .z / .a
       ".z.deep", ".z.deep.more", "{d: .z.deep, k}", ".a.b, .a.b",
       ".z.deep // .k", ".a.b?", "try .a.b catch \"no\"")

@@ -157,7 +157,7 @@ class JqPropertySpec extends AnyFunSuite {
     // analysis certifies a footprint, the pruned lane must be observably
     // identical to the full parse (outputs AND error messages)
     val leaf = Gen.oneOf(".a", ".b", ".k", ".n", ".a.b", ".xs[0]", "1", "\"s\"",
-      "null", ".", ".[]", "keys", "length", "tojson", ". as $x | .a")
+      "null", "empty", ".", ".[]", "keys", "length", "tojson", "(. as $x | .a)")
     def genProg(depth: Int): Gen[String] =
       if (depth <= 0) leaf
       else Gen.frequency(
