@@ -322,7 +322,7 @@ object Builtins {
         }.mkString("\t")
     case "sh" =>
       def quote(e: JsonNode): String =
-        if (e.isNumber || e.isBoolean) e.toString
+        if (e.isNumber || e.isBoolean || e.isNull) e.toString
         else if (e.isArray || e.isObject) // jq 1.6: only scalars can be shell-quoted
           throw JqError.of(s"${Json.typeName(e)}${preview(e)} can not be escaped for shell")
         else "'" + toStringValue(e).replace("'", "'\\''") + "'"
@@ -728,35 +728,13 @@ object Builtins {
       }
     },
 
-    v0("to_entries") { in =>
-      one(arr(Json.fields(in).map { case (k, v) =>
-        obj(List("key" -> text(k), "value" -> v))
-      }.toList))
-    },
-    v0("from_entries") { in =>
-      val out = F.objectNode()
-      elems(in, "object-ized").foreach { e =>
-        val keyNode = List("key", "k", "name", "Name")
-          .iterator.map(e.get).find(n => n != null && !n.isNull).getOrElse(NullN)
-        val key =
-          if (keyNode.isTextual) keyNode.textValue()
-          else if (keyNode.isNull) "null"
-          else serialize(keyNode)
-        val value =
-          if (e.isObject && e.has("value")) e.get("value")
-          else if (e.isObject && e.has("v")) e.get("v")
-          else NullN
-        out.set[JsonNode](key, value): Unit
-      }
-      one(out)
-    },
+    v0("to_entries")(in => one(toEntries(in))),
+    v0("from_entries")(in => one(fromEntries(in, stringKeys = false))),
     ("with_entries", 1) -> { (args, in, env) =>
-      // to_entries | map(f) | from_entries
-      val entries = Json.fields(in).map { case (k, v) =>
-        obj(List("key" -> text(k), "value" -> v))
-      }.toList
-      val mapped = entries.flatMap(e => eval(args.head, e, env).toList)
-      table(("from_entries", 0))(Nil, arr(mapped), env)
+      // to_entries | map(f) | from_entries, whose keys must be strings in
+      // jq 1.6: an array's index keys are an error there
+      val mapped = Json.elements(toEntries(in)).flatMap(e => eval(args.head, e, env).toList).toList
+      one(fromEntries(arr(mapped), stringKeys = true))
     },
 
     ("paths", 0) -> { (_, in, _) =>
@@ -767,8 +745,10 @@ object Builtins {
         eval(args.head, v, env).filter(truthy).take(1).map(_ => arr(p))
       })
     },
+    // jq 1.6: paths(scalars), and select drops null and false leaves
     v0("leaf_paths")(in =>
-      JqStream.from(Interp.allPaths(in, Vector.empty, leavesOnly = true).filter(_.nonEmpty).map(arr))),
+      JqStream.from(Interp.allPaths(in, Vector.empty, leavesOnly = true)
+        .filter(p => p.nonEmpty && truthy(Interp.getPath(in, p))).map(arr))),
     v1("getpath") { (in, p) =>
       one(Interp.getPath(in, Json.elements(requireArray(p, "used as a path")).toVector))
     },
@@ -1184,6 +1164,36 @@ object Builtins {
   }
 
   // -- impl helpers -------------------------------------------------------
+
+  /** jq's `[keys_unsorted[] as $k | {key: $k, value: .[$k]}]`: an array
+    * gives index keys, a scalar has no keys. */
+  private def toEntries(in: JsonNode): JsonNode =
+    arr(Json.elements(keysOf(in, sorted = false)).map { k =>
+      obj(List("key" -> k, "value" -> (if (k.isTextual) in.get(k.textValue) else in.get(k.intValue))))
+    }.toList)
+
+  /** The object of the entries' key (the first non-null of key, k, name,
+    * Name) and value (value, else v). A key that is not a string is
+    * serialized, or with `stringKeys` an error as jq 1.6 has it. */
+  private def fromEntries(in: JsonNode, stringKeys: Boolean): JsonNode = {
+    val out = F.objectNode()
+    elems(in, "object-ized").foreach { e =>
+      val keyNode = List("key", "k", "name", "Name")
+        .iterator.map(e.get).find(n => n != null && !n.isNull).getOrElse(NullN)
+      val key =
+        if (keyNode.isTextual) keyNode.textValue()
+        else if (stringKeys)
+          throw JqError.of(s"Cannot use ${Json.typeName(keyNode)}${preview(keyNode)} as object key")
+        else if (keyNode.isNull) "null"
+        else serialize(keyNode)
+      val value =
+        if (e.isObject && e.has("value")) e.get("value")
+        else if (e.isObject && e.has("v")) e.get("v")
+        else NullN
+      out.set[JsonNode](key, value): Unit
+    }
+    out
+  }
 
   private def keysOf(in: JsonNode, sorted: Boolean): JsonNode =
     if (in.isObject) {

@@ -334,6 +334,18 @@ class JqEngineSpec extends AnyFunSuite {
     assert(run1("from_entries", """[{"name":"b","v":2}]""") == """{"b":2}""")
     assert(run1("with_entries(.value += 1)", """{"a":1}""") == """{"a":2}""")
   }
+  // jq 1.6: to_entries reads keys_unsorted, so an array has index keys
+  test("to_entries and with_entries on non-objects, as jq 1.6") {
+    assert(run1("to_entries", "[1,2]") == """[{"key":0,"value":1},{"key":1,"value":2}]""")
+    assert(run1("to_entries", "[]") == "[]")
+    assert(intercept[JqError](run("to_entries", "null")).getMessage == "null (null) has no keys")
+    assert(intercept[JqError](run("to_entries", "\"ab\"")).getMessage == "string (\"ab\") has no keys")
+    assert(intercept[JqError](run("with_entries(.)", "[5,6]")).getMessage ==
+      "Cannot use number (0) as object key")
+    assert(intercept[JqError](run("with_entries(.)", "null")).getMessage == "null (null) has no keys")
+    assert(run1("with_entries({key: \"a\", value})", "[5]") == """{"a":5}""")
+    assert(run1("with_entries(.)", "[]") == "{}")
+  }
   test("transpose") { assert(run1("transpose", "[[1,2],[3,4],[5]]") == "[[1,3,5],[2,4,null]]") }
   test("walk") {
     assert(run1("walk(if type == \"number\" then . + 1 else . end)", "[1,[2]]") == "[2,[3]]")
@@ -354,6 +366,8 @@ class JqEngineSpec extends AnyFunSuite {
   test("paths/leaf_paths") {
     assert(run1("[paths]", """{"a":[1]}""") == """[["a"],["a",0]]""")
     assert(run1("[leaf_paths]", """{"a":[1,{"b":2}]}""") == """[["a",0],["a",1,"b"]]""")
+    // jq 1.6: leaf_paths is paths(scalars), which drops null and false leaves
+    assert(run1("[leaf_paths]", """[1,false,null,"a",{"b":null}]""") == "[[0],[3]]")
   }
   test("getpath/setpath/delpaths") {
     assert(run1("""getpath(["a","b"])""", """{"a":{"b":4}}""") == "4")
@@ -651,6 +665,9 @@ class JqEngineSpec extends AnyFunSuite {
     assert(run1("@sh", "\"a b\"") == """"'a b'"""")
     assert(run1("@sh", """["a b","c'd"]""") == """"'a b' 'c'\\''d'"""")
     assert(run1("@sh", "[1,true]") == "\"1 true\"")
+    // jq 1.6 prints null bare
+    assert(run1("@sh", "[null,false,\"x\"]") == "\"null false 'x'\"")
+    assert(run1("@sh", "null") == "\"null\"")
     // jq 1.6: nested arrays/objects cannot be shell-quoted
     intercept[JqError](run("@sh", """["a",["b"]]"""))
   }

@@ -1,21 +1,26 @@
 package graft.jq
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.ObjectMapper
+import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.SplittableRandom
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Differential spec for the UTF-8 byte lane: for every input,
-  * `Jq.parseUtf8WithError` / `CompiledJq.applyToUtf8` must give exactly
-  * what the `String` lane gives on `toString` of the same value — the
-  * same input node and the same full `$error` object (message, class,
-  * input) — on the full and on pruned footprints, wherever the bytes sit
-  * (a whole array, a slice at a non-zero offset, off-heap memory). */
+/** Differential spec for the UTF-8 lane: [[Utf8Json]] either refuses a
+  * value or reads it to exactly the node the `String` lane builds from its
+  * `toString` — same node classes, field order and chars — with `$error`
+  * null, on the full and on pruned footprints, wherever the bytes sit (a
+  * whole array, a slice at a non-zero offset, off-heap memory); and
+  * `CompiledJq.applyToUtf8` gives what `applyToText` gives on every value. */
 class Utf8LaneSpec extends AnyFunSuite {
 
   private def b(s: String): Array[Byte] = s.getBytes(UTF_8)
   private def bytes(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray
+  private def hex(raw: Array[Byte]): String = raw.map(x => Integer.toHexString(x & 0xFF)).mkString(" ")
+  private def check(ok: Boolean, what: => String): Unit = if (!ok) fail(what)
 
   /** the lane-agreement corpus of FootprintSpec and JqPropertySpec */
   private val laneCorpus: Seq[Array[Byte]] = Seq(
@@ -31,7 +36,7 @@ class Utf8LaneSpec extends AnyFunSuite {
     """{"a": 1, "b": {"c": [1,2]}, "k": "x", "n": 5, "xs": [1,2,3], "zz": {"big": [1,2,3]}}""",
     """{"a": [7], "xs": []}""", """{"k": {"deep": true}, "other": "skipped"}""",
     """[1, 2]""", """7""", """{"bad""", """{"keep": 1, "drop": {"bad": }}""",
-    """{"k": 1}""" + "\u0000", // a NUL past the sniffed bytes
+    """{"k": 1}""" + "\u0000", // a NUL past the value
     """{"k": "a""" + "\u0000\u0001" + """b"}""", // unquoted control chars
     "[" * 1200 + "]" * 1200, // past Jackson's nesting limit
     """{"k": 123456789012345678901234567890, "a": 1.5e300}""",
@@ -42,7 +47,6 @@ class Utf8LaneSpec extends AnyFunSuite {
     """{"é": 1, "k": "Ωmega", "a": {"ß": 2, "b": "ça"}}""",
     """"😀 alone"""", """["über", "é"]""",
     "{\"k\": \"\\u00e9 escaped\", \"a\": {\"b\": \"\\ud83d\\ude00\"}}",
-    // trailing garbage after a non-ASCII character: the byte column differs
     """{"k": "café"} trailing""", """{"k": "über" x""", """{"a": {"b": "日本"}, }""",
     """{"k": "é", "drop": {"bad": }}""").map(b)
 
@@ -53,15 +57,15 @@ class Utf8LaneSpec extends AnyFunSuite {
     b("""{"k": """") ++ bytes(0xC0, 0x80) ++ b(""""}"""), // overlong NUL
     b("""{"k": """") ++ bytes(0xED, 0xA0, 0x80) ++ b(""""}"""), // surrogate
     b("""{"k": """") ++ bytes(0xF4, 0x90, 0x80, 0x80) ++ b(""""}"""), // past U+10FFFF
+    b("""{"drop": """") ++ bytes(0xC0, 0x80, 0xFF) ++ b("""", "k": 2}"""), // in a skipped string
     bytes(0xFF, 0xFE) ++ b("""{"k": 1}""")) // a UTF-16LE BOM
 
-  // what Jackson's encoding sniffer reads as another encoding, on ASCII
-  // and on valid non-ASCII values
+  // what Jackson's byte parser would read as another encoding
   private val sniffed: Seq[Array[Byte]] = Seq(
     bytes(0xEF, 0xBB, 0xBF) ++ b("""{"k": 1}"""), // UTF-8 BOM
     bytes(0) ++ b("""{"k": 1}"""), bytes(0) ++ b("""{"k": "é"}"""), // leading NUL
     b("""{"k": 1}""").flatMap(c => Seq(c, 0.toByte)), // UTF-16LE-looking 7B 00 22 00 …
-    b("\"") ++ bytes(0) ++ b("é\""), // UTF-16LE-looking 22 00, then non-ASCII
+    b("\"") ++ bytes(0) ++ b("é\""), // a NUL inside a string
     bytes(0, 0, 0, 0x7B, 0, 0, 0, 0x7D), bytes(0, 0, 0) ++ b("\"é\""), // UTF-32BE-looking
     b("[0") ++ bytes(0) ++ b("]"), b("[0,") ++ bytes(0) ++ b("\"é\"]")) // NUL at a later byte
 
@@ -71,8 +75,56 @@ class Utf8LaneSpec extends AnyFunSuite {
     None, Some(Map.empty), Some(Map("k" -> None)),
     Some(Map("a" -> Some(Set("b")), "k" -> None)))
 
-  private def show(r: (JsonNode, JsonNode)): (String, String) =
-    (Json.serialize(r._1), Json.serialize(r._2))
+  /** The node spelled out: node classes, field order, every char. */
+  private def shape(n: JsonNode): String = {
+    val sb = new java.lang.StringBuilder
+    def chars(s: String): Unit = {
+      sb.append('"')
+      for (c <- s)
+        if (c >= ' ' && c <= '~' && c != '"' && c != '\\') sb.append(c)
+        else sb.append(f"\\u${c.toInt}%04x")
+      sb.append('"')
+    }
+    // one frame per level: the spec nests to the parser's depth limit
+    def spell(n: JsonNode): Unit =
+      if (n.isObject) {
+        sb.append('{')
+        val it = n.properties().iterator()
+        while (it.hasNext) {
+          val e = it.next(); chars(e.getKey); sb.append(':'); spell(e.getValue)
+          if (it.hasNext) sb.append(',')
+        }
+        sb.append('}')
+      } else if (n.isArray) {
+        sb.append('[')
+        var k = 0
+        while (k < n.size) { if (k > 0) sb.append(','); spell(n.get(k)); k += 1 }
+        sb.append(']')
+      } else if (n.isTextual) chars(n.textValue)
+      else if (n.isNumber) sb.append(n.getClass.getSimpleName).append('(').append(n.numberValue).append(')')
+      else sb.append(n.getClass.getSimpleName).append('(').append(n).append(')')
+    spell(n)
+    sb.toString
+  }
+
+  private val readers = (needs ++ fuzzNeeds).distinct.map(n => n -> new Utf8Json(n, Jq.readConstraints)).toMap
+
+  /** What the reader reads `json` to under `need`, spelled out; None when
+    * it refuses. An accepted value must be the String lane's, no `$error`. */
+  private def read(json: UTF8String, need: Option[Footprint.Fields], what: => String = ""): Option[String] = {
+    val r = readers.getOrElse(need, new Utf8Json(need, Jq.readConstraints))
+    Option(r.read(json)).map { got =>
+      val (v, err) = Jq.parseTextWithError(json.toString, need)
+      assert(err.isNull, s"accepted what the String lane rejects ($what, footprint $need): $err")
+      assert(shape(got) == shape(v), s"node mismatch ($what, footprint $need)")
+      shape(got)
+    }
+  }
+
+  private def read(raw: Array[Byte], need: Option[Footprint.Fields]): Option[String] =
+    read(UTF8String.fromBytes(raw), need, hex(raw))
+
+  private def read(text: String, need: Option[Footprint.Fields]): Option[String] = read(b(text), need)
 
   /** The same bytes three ways: a whole array, a slice at a non-zero offset
     * of a larger array (as an UnsafeRow holds it), and off-heap. */
@@ -89,50 +141,123 @@ class Utf8LaneSpec extends AnyFunSuite {
   }
 
   test("the byte lane parses to the String lane's input and $error on every input and footprint") {
+    var accepted = 0
     for (raw <- corpus; need <- needs) placements(raw) { (where, json) =>
-      val text = json.toString
-      assert(show(Jq.parseUtf8WithError(json, need)) == show(Jq.parseTextWithError(text, need)),
-        s"lane mismatch ($where, footprint $need) on ${raw.map(x => f"${x & 0xFF}%02x").mkString(" ")}")
+      if (read(json, need, s"$where: ${hex(raw)}").isDefined) accepted += 1
+    }
+    assert(accepted > corpus.size) // most well-formed inputs are read, on all placements
+  }
+
+  test("numbers: IntNode in int range, LongNode to 18 digits, longer integers refused, doubles") {
+    def node(text: String) = read(text, None)
+    assert(node("2147483647").contains("IntNode(2147483647)"))
+    assert(node("-2147483648").contains("IntNode(-2147483648)"))
+    assert(node("2147483648").contains("LongNode(2147483648)"))
+    assert(node("-2147483649").contains("LongNode(-2147483649)"))
+    assert(node("999999999999999999").contains("LongNode(999999999999999999)"))
+    assert(node("-0").isDefined)
+    assert(node("[-0, 0]").isDefined)
+    assert(node("1234567890123456789").isEmpty)
+    assert(node("-1000000000000000000").isEmpty)
+    assert(node("""{"k": 1, "big": 12345678901234567890}""").isEmpty)
+    assert(node("1e400").contains("DoubleNode(Infinity)"))
+    for (d <- Seq("-0.0", "1E+2", "0.1e-5", "2.5", "-1e-400", "123456789.123456789e3"))
+      assert(node(d).isDefined, d)
+    for (bad <- Seq("01", "-", "1.", ".5", "1e", "1e+", "+1", "-01", "1.e5", "0x10", "NaN", "Infinity", "[1,]"))
+      assert(node(bad).isEmpty, bad)
+    // a number too long for the parser is refused even where it is skipped
+    val long = "1" + "0" * Jq.readConstraints.getMaxNumberLength + ".5"
+    assert(read(s"""{"k": 1, "drop": $long}""", Some(Map("k" -> None))).isEmpty)
+  }
+
+  test("strings: escapes, a lone surrogate, raw control chars, invalid UTF-8 kept and skipped") {
+    assert(read("\"\\ud800\"", None).contains("\"\\ud800\""))
+    assert(read("\"\\ud83d\\ude00 \\u00E9\\n\\t\\\"\\\\\\/\\b\\f\\r\"", None).isDefined)
+    assert(read("[\"\\x\"]", None).isEmpty)
+    assert(read("[\"\\u12g4\"]", None).isEmpty)
+    assert(read("{\"k\": 1, \"drop\": \"\\q\"}", Some(Map("k" -> None))).isEmpty) // skipped, still checked
+    assert(read("\"a\u0000\u0001\u001f\tb\"", None).contains("\"a\\u0000\\u0001\\u001f\\u0009b\""))
+    for (bad <- Seq(bytes(0x80), bytes(0xC3), bytes(0xC0, 0x80), bytes(0xED, 0xA0, 0x80), bytes(0xFF))) {
+      // kept: refused, so the String lane decodes it
+      assert(read(b("""{"k": "a""") ++ bad ++ b(""""}"""), None).isEmpty, hex(bad))
+      assert(read(b("""{"k": "a""") ++ bad ++ b(""""}"""), Some(Map("k" -> None))).isEmpty, hex(bad))
+      // skipped: opaque — toString makes it U+FFFD, which the String lane accepts
+      assert(read(b("""{"drop": "a""") ++ bad ++ b("""", "k": 1}"""), Some(Map("k" -> None)))
+        .contains("""{"k":IntNode(1)}"""), hex(bad))
+      assert(read(b("""{"k": 1, "drop": {"x": ["a""") ++ bad ++ b(""""]}}"""), Some(Map("k" -> None)))
+        .isDefined, hex(bad))
+    }
+    // a byte ≥ 0x80 outside a string
+    assert(read(b("[1,") ++ bytes(0xC3, 0xA9) ++ b("]"), None).isEmpty)
+  }
+
+  test("keys: non-ASCII, escaped, duplicate, and a footprint name with no UTF-8 form") {
+    assert(read("""{"é": 1, "k": 2}""", None).contains("{\"\\u00e9\":IntNode(1),\"k\":IntNode(2)}"))
+    assert(read("""{"é": 1, "k": 2}""", Some(Map("é" -> None))).contains("{\"\\u00e9\":IntNode(1)}"))
+    assert(read("{\"\\u006b\": 5, \"x\": 1}", Some(Map("k" -> None))).contains("""{"k":IntNode(5)}"""))
+    assert(read("{\"\\u006B\": 5}", None).contains("""{"k":IntNode(5)}"""))
+    assert(read(b("""{"k": 1, """") ++ bytes(0xC3) ++ b("""": 2}"""), Some(Map("k" -> None))).isEmpty)
+    // the last value, at the first key's position
+    for (need <- Seq(None, Some(Map("k" -> None, "a" -> None))))
+      assert(read("""{"k": 1, "a": 2, "k": 3}""", need).contains("""{"k":IntNode(3),"a":IntNode(2)}"""))
+    assert(read("""{"a": {"b": 1, "c": 2, "b": 3}}""", Some(Map("a" -> Some(Set("b")))))
+      .contains("""{"a":{"b":IntNode(3)}}"""))
+    // "\ud800".getBytes(UTF_8) is "?": a plain "?" key must not match it
+    val surrogate: Option[Footprint.Fields] = Some(Map("\ud800" -> None))
+    assert(read("""{"?": 1}""", surrogate).contains("{}"))
+    assert(read("{\"\\ud800\": 1}", surrogate).contains("{\"\\ud800\":IntNode(1)}"))
+  }
+
+  test("nesting to the parser's depth limit is read, past it refused; BOM, empty and blank input") {
+    val max = Jq.readConstraints.getMaxNestingDepth
+    for (need <- needs) {
+      assert(read("[" * max + "]" * max, need).isDefined)
+      assert(read("[" * (max + 1) + "]" * (max + 1), need).isEmpty)
+      assert(read("""{"a":""" * max + "1" + "}" * max, need).isDefined)
+      assert(read("""{"z":""" * (max + 1) + "1" + "}" * (max + 1), need).isEmpty) // skipped, still counted
+      assert(read(bytes(0xEF, 0xBB, 0xBF) ++ b("""{"k": 1}"""), need).isEmpty)
+      assert(read("", need).contains("NullNode(null)"))
+      assert(read(" \r\n\t", need).contains("NullNode(null)"))
+      assert(read("\u000b1", need).isEmpty)
     }
   }
 
-  // Spark's own answer, with the sniff: the lane check must be
-  // `!isFullAscii && isValid` on values Jackson reads as UTF-8
-  private def byteLaneReference(json: UTF8String): Boolean = {
-    val head = (0 until math.min(4, json.numBytes)).map(json.getByte)
-    !json.isFullAscii && json.isValid && !head.contains(0.toByte) && head.headOption.forall(_ >= 0)
+  test("a refusal creates no stack trace") {
+    assert(Utf8Json.Refused.getStackTrace.isEmpty)
+    assert(new Utf8Json(None, Jq.readConstraints).read(UTF8String.fromString("{")) == null)
   }
 
-  test("the lane check agrees with UTF8String.isFullAscii/isValid and the sniff") {
+  // every byte pair, and 3- and 4-byte sequences with edge continuation
+  // bytes, inside a kept and a skipped string at every 8-byte alignment
+  test("kept strings are read iff well-formed UTF-8; skipped always") {
     val edges = Seq(0x00, 0x41, 0x7F, 0x80, 0x8F, 0x90, 0x9F, 0xA0, 0xBF, 0xC0, 0xFF)
     val tails: Seq[Seq[Int]] =
-      (0 until 256).flatMap(x => (0 until 256).map(y => Seq(x, y))) ++ // every byte pair
+      ((0 until 256).flatMap(x => (0 until 256).map(y => Seq(x, y))) ++
         (0xC0 to 0xFF).flatMap(x => for (y <- edges; z <- edges) yield Seq(x, y, z)) ++
-        (0xF0 to 0xF7).flatMap(x => for (y <- edges; z <- edges; w <- edges) yield Seq(x, y, z, w))
-    // ASCII around the tail: the eight-byte ASCII steps land on every alignment
+        (0xF0 to 0xF7).flatMap(x => for (y <- edges; z <- edges; w <- edges) yield Seq(x, y, z, w)))
+        .filterNot(t => t.contains('"'.toInt) || t.contains('\\'.toInt))
+    val keepK: Option[Footprint.Fields] = Some(Map("k" -> None))
     for (pre <- Seq(0, 1, 3, 7, 8, 9); post <- Seq(0, 1, 8); tail <- tails) {
-      val raw = b("[" + "a" * pre) ++ tail.map(_.toByte) ++ b("b" * post)
-      val json = UTF8String.fromBytes(raw)
-      assert(Jq.takesByteLane(json) == byteLaneReference(json), tail.map(x => f"$x%02x").mkString(" "))
-    }
-    for (raw <- corpus) placements(raw) { (where, json) =>
-      assert(Jq.takesByteLane(json) == byteLaneReference(json), s"$where: ${new String(raw, UTF_8)}")
+      val text = b("a" * pre) ++ tail.map(_.toByte) ++ b("b" * post)
+      val valid = UTF8String.fromBytes(tail.map(_.toByte).toArray).isValid
+      val kept = b("[\"") ++ text ++ b("\"]")
+      check(read(kept, None).isDefined == valid, hex(kept))
+      check(read(b("""{"drop": """") ++ text ++ b("""", "k": 1}"""), keepK).isDefined, hex(text))
     }
   }
 
-  // a misread offset that still parses cannot hide behind the fallback
+  // a misread offset that still parses cannot hide behind a refusal
   test("a slice parses its own bytes, not its neighbours'") {
     val first = b("""{"k": "é"}""")
     val second = b("""{"k": "ü"}""")
     val json = UTF8String.fromBytes(first ++ second, first.length, second.length)
-    assert(Json.serialize(Jq.parseUtf8WithError(json, None)._1) == """{"k":"ü"}""")
+    assert(Json.serialize(new Utf8Json(None, Jq.readConstraints).read(json)) == """{"k":"ü"}""")
+    assert(Jq.compile(".k").applyToUtf8(json).map(Json.serialize).toList == List("\"ü\""))
   }
 
   test("a null value is a null input with no $error on both lanes") {
-    for (need <- needs) {
-      val (v, err) = Jq.parseUtf8WithError(null, need)
-      assert(v.isNull && err.isNull)
-    }
+    assert(Jq.compile("[., $error]").applyToUtf8(null).map(Json.serialize).toList == List("[null,null]"))
+    assert(Jq.compile("[., $error]").applyToText(null).map(Json.serialize).toList == List("[null,null]"))
   }
 
   test("jq programs give the same outputs on applyToUtf8 and applyToText") {
@@ -145,11 +270,10 @@ class Utf8LaneSpec extends AnyFunSuite {
         try Right(it.map(Json.serialize).toList) catch { case e: JqError => Left(e.getMessage) }
       assert(run(c.applyToUtf8(json)) == run(c.applyToText(json.toString)), s"program '$p'")
     }
-    assert(Jq.compile("[., $error]").applyToUtf8(null).map(Json.serialize).toList == List("[null,null]"))
   }
 
-  // Each fallback guards a real disagreement: Jackson's byte parser, used
-  // directly, answers differently from the String lane on these inputs.
+  // Jackson's own byte parser answers differently from the String lane on
+  // these inputs; the UTF-8 lane answers as the String lane does.
   test("each fallback to the String lane covers a case where a plain byte parse disagrees") {
     val mapper = new ObjectMapper()
     mapper.getFactory.enable(com.fasterxml.jackson.core.JsonParser.Feature.ALLOW_UNQUOTED_CONTROL_CHARS)
@@ -168,10 +292,100 @@ class Utf8LaneSpec extends AnyFunSuite {
       "UTF-8 BOM" -> (bytes(0xEF, 0xBB, 0xBF) ++ b("""{"k": 1}""")),
       "NUL-led" -> (bytes(0) ++ b("""{"k": "é"}""")),
       "UTF-16-looking" -> (b("\"") ++ bytes(0) ++ b("é\"")))
+    val c = Jq.compile("[., $error]")
     for ((what, raw) <- cases) {
       assert(plainBytes(raw) != stringLane(raw), s"$what: the plain byte parse already agrees")
-      assert(show(Jq.parseUtf8WithError(UTF8String.fromBytes(raw), None)) ==
-        show(Jq.parseWithError(new String(raw, UTF_8))), what)
+      assert(c.applyToUtf8(UTF8String.fromBytes(raw)).map(Json.serialize).toList ==
+        c.applyToText(new String(raw, UTF_8)).map(Json.serialize).toList, what)
     }
+  }
+
+  // ---- seeded generator and mutator ----
+
+  private lazy val fuzzNeeds: Seq[Option[Footprint.Fields]] = Seq(
+    None, Some(Map.empty), Some(Map("k" -> None)),
+    Some(Map("a" -> Some(Set("b")), "k" -> None)),
+    Some(Map("é" -> None, "z" -> Some(Set("k", "é")))))
+
+  private val keyPool = Array("k", "a", "b", "z", "drop", "é", "\\u006b", "\\u0061", "ß", "", "k")
+  private val wordPool: Array[Array[Byte]] = Array("word", " ", "\\n", "\\\"", "\\\\", "\\u00e9", "\\u00E9",
+    "\\ud83d\\ude00", "\\ud800", "\\udc00x", "é", "日本", "😀", "\t", "\u0001", "\u001f", "\\/").map(b)
+  private val invalidPool: Array[Array[Byte]] = Array(bytes(0x80), bytes(0xC3), bytes(0xED, 0xA0, 0x80),
+    bytes(0xF4, 0x90, 0x80, 0x80), bytes(0xC0, 0x80), bytes(0xFF), bytes(0xE2, 0x82))
+  private val numberPool = Array("0", "-0", "2147483647", "2147483648", "-2147483648", "-2147483649",
+    "999999999999999999", "1000000000000000000", "12345678901234567890", "1e400", "-0.0", "1.5",
+    "2.5E-3", "1E+2", "0.1", "-1e-400", "9007199254740993", "4.9e-324", "1.7976931348623157e308")
+  private val junk: Array[Array[Byte]] = Array(",", "]", "}", "\"", "\\", " x", "0", "-", ":", "{", "[",
+    "e", ".", "tru", "null").map(b) ++ Array(bytes(0), bytes(0x80), bytes(0xC3), bytes(0xEF, 0xBB, 0xBF))
+
+  private val blanks = Array(" ", "\n", "\t", "\r", "  ")
+  private val literals = Array("true", "false", "null")
+
+  private def ws(r: SplittableRandom, out: ByteArrayOutputStream): Unit =
+    if (r.nextInt(4) == 0) out.write(b(blanks(r.nextInt(blanks.length))))
+
+  private def gen(r: SplittableRandom, out: ByteArrayOutputStream, depth: Int): Unit = {
+    ws(r, out)
+    r.nextInt(if (depth >= 4) 6 else 10) match {
+      case 0 | 1 =>
+        out.write(b("\""))
+        for (_ <- 0 until r.nextInt(4))
+          out.write(if (r.nextInt(12) == 0) invalidPool(r.nextInt(invalidPool.length))
+            else wordPool(r.nextInt(wordPool.length)))
+        out.write(b("\""))
+      case 2 | 3 =>
+        out.write(b(if (r.nextInt(3) == 0) numberPool(r.nextInt(numberPool.length))
+          else (r.nextInt() >> r.nextInt(32)).toString))
+      case 4 => out.write(b(literals(r.nextInt(literals.length))))
+      case 5 => out.write(b(r.nextLong().toString))
+      case 6 | 7 | 8 =>
+        out.write(b("{"))
+        for (i <- 0 until r.nextInt(5)) {
+          if (i > 0) out.write(b(","))
+          ws(r, out)
+          out.write(b("\"" + keyPool(r.nextInt(keyPool.length)) + "\""))
+          ws(r, out)
+          out.write(b(":"))
+          gen(r, out, depth + 1)
+        }
+        ws(r, out)
+        out.write(b("}"))
+      case _ =>
+        out.write(b("["))
+        for (i <- 0 until r.nextInt(4)) { if (i > 0) out.write(b(",")); gen(r, out, depth + 1) }
+        out.write(b("]"))
+    }
+    ws(r, out)
+  }
+
+  private def mutate(r: SplittableRandom, raw: Array[Byte]): Array[Byte] = {
+    var x = raw
+    for (_ <- 0 until 1 + r.nextInt(3)) {
+      val at = if (x.isEmpty) 0 else r.nextInt(x.length)
+      val piece = junk(r.nextInt(junk.length))
+      x = r.nextInt(4) match {
+        case 0 if x.nonEmpty => x.patch(at, Nil, 1) // delete a byte
+        case 1 => x.patch(at, piece, 0) // insert
+        case 2 if x.nonEmpty => x.patch(at, piece, 1) // replace
+        case _ => x.take(at) // truncate
+      }
+    }
+    x
+  }
+
+  test("seeded fuzz: 120k generated and mutated inputs on five footprints read as on the String lane") {
+    val r = new SplittableRandom(20261019L)
+    var accepted, refused = 0
+    for (_ <- 0 until 120000) {
+      val out = new ByteArrayOutputStream()
+      gen(r, out, if (r.nextInt(3) == 0) 4 else 0)
+      val doc = out.toByteArray
+      val raw = if (r.nextInt(3) == 0) mutate(r, doc) else doc
+      val json = UTF8String.fromBytes(raw)
+      for (need <- fuzzNeeds)
+        if (read(json, need, hex(raw)).isDefined) accepted += 1 else refused += 1
+    }
+    info(s"$accepted reads accepted, $refused refused")
+    assert(accepted > 200000 && refused > 50000)
   }
 }
