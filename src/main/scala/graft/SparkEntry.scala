@@ -88,7 +88,7 @@ object SparkEntry {
       val bwd = li.where(col("l_returnflag") === "R")
         .select((col("l_suppkey") + 1000000).as("src"),
           custIdBelowOffset(col("o_custkey")).as("dst"))
-      pipeline.Materialize(fwd.union(bwd))
+      pipeline.Materialize.cut(fwd.union(bwd))
     }
 
   /** Session-scoped SCC memo over [[orderFlowEdges]]: `graph_scc` and
@@ -113,7 +113,7 @@ object SparkEntry {
     }
   private def orderFlowScc(s: SparkSession, dir: String): DataFrame =
     memoized(sccMemo, s, dir)(
-      pipeline.Materialize(pipeline.Graph.stronglyConnectedComponents(
+      pipeline.Materialize.cut(pipeline.Graph.stronglyConnectedComponents(
         orderFlowEdges(s, dir), "src", "dst")))
 
   /** The bidirected WEIGHTED customer↔supplier trade graph (weight =
@@ -130,7 +130,7 @@ object SparkEntry {
         .join(s.table("lineitem"), col("o_orderkey") === col("l_orderkey"))
         .groupBy(custIdBelowOffset(col("o_custkey")).as("c"), col("l_suppkey").as("sp"))
         .agg(countDistinct(col("o_orderkey")).as("w"))
-      pipeline.Materialize(
+      pipeline.Materialize.cut(
         e0.select(col("c").as("src"), (col("sp") + 1000000L).as("dst"), col("w"))
           .union(e0.select((col("sp") + 1000000L).as("src"), col("c").as("dst"),
             col("w"))))
@@ -156,7 +156,7 @@ object SparkEntry {
   private val tradeEdgesMemo =
     new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, DataFrame]]()
   private def tradeEdges(s: SparkSession, dir: String): DataFrame =
-    memoized(tradeEdgesMemo, s, dir)(pipeline.Materialize(tradeGraphEdges(s, dir)))
+    memoized(tradeEdgesMemo, s, dir)(pipeline.Materialize.cut(tradeGraphEdges(s, dir)))
 
   /** Session-scoped SHARED landmark pass over [[tradeGraphEdges]] (r15,
     * the [[orderFlowScc]] lifecycle applied to the centrality family):
@@ -170,7 +170,7 @@ object SparkEntry {
     new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, DataFrame]]()
   private def tradeLandmarks(s: SparkSession, dir: String): DataFrame =
     memoized(landmarkMemo, s, dir)(
-      pipeline.Materialize(pipeline.Graph.landmarkDistanceTable(
+      pipeline.Materialize.cut(pipeline.Graph.landmarkDistanceTable(
         tradeEdges(s, dir), "src", "dst", nSeeds = 8, rounds = 4,
         saltPrefixes = Seq("hc:", "cc:", "ec:"))))
 
@@ -190,7 +190,7 @@ object SparkEntry {
   private def coPurchaseWedges(s: SparkSession, dir: String): DataFrame =
     memoized(coPurchaseMemo, s, dir) {
       val li = s.table("lineitem").where(col("l_orderkey") % 4 === 0)
-      pipeline.Materialize(li.as("x").join(li.as("y"),
+      pipeline.Materialize.cut(li.as("x").join(li.as("y"),
           col("x.l_orderkey") === col("y.l_orderkey") &&
             col("x.l_partkey") < col("y.l_partkey"))
         .select(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst")))
@@ -205,7 +205,7 @@ object SparkEntry {
     new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, DataFrame]]()
   private def coPurchaseProjection(s: SparkSession, dir: String): DataFrame =
     memoized(coPurchaseProjMemo, s, dir)(
-      pipeline.Materialize(pipeline.Graph.bipartiteProjection(
+      pipeline.Materialize.cut(pipeline.Graph.bipartiteProjection(
         s.table("lineitem").where(col("l_orderkey") % 4 === 0),
         "l_orderkey", "l_partkey")))
 
@@ -223,14 +223,14 @@ object SparkEntry {
       val docs = s.table("documents")
       val pairs = docs.select(col("doc_id").as("a"), (col("doc_id") + 1).as("b"))
         .join(docs.select(col("doc_id").as("b")), "b")
-      pipeline.Materialize(
+      pipeline.Materialize.cut(
         pipeline.Dedup.verifyJaccard(pairs, docs, "doc_id", "text", shingle = 3))
     }
   private val docGroupsMemo =
     new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, DataFrame]]()
   private def docDupGroups(s: SparkSession, dir: String): DataFrame =
     memoized(docGroupsMemo, s, dir)(
-      pipeline.Materialize(pipeline.Dedup.connectedComponents(
+      pipeline.Materialize.cut(pipeline.Dedup.connectedComponents(
         s.table("documents").select(col("doc_id").as("id")),
         docPairJaccard(s, dir)
           .where(col("n_int") * 100 >= col("n_union") * 55)
@@ -2346,7 +2346,7 @@ object SparkEntry {
       // actually contribute after exact dedup and the per-lang quality
       // median gate? raw → unique → kept, all integer token counts,
       // yield in ppm of raw
-      val base = pipeline.Materialize(
+      val base = pipeline.Materialize.cut(
         pipeline.TextAnalysis.qualityScore(
           pipeline.Dedup.exact(s.table("documents"), "doc_id", "text"), "text")
           .select(col("doc_id"), col("source"), col("lang"),
@@ -2373,7 +2373,7 @@ object SparkEntry {
       // quality score (exact R-7 percentile, proven cross-engine)
       // materialized: q feeds both the median aggregate and the join —
       // without the cut the quality/langId scan runs twice
-      val q = pipeline.Materialize(
+      val q = pipeline.Materialize.cut(
         pipeline.TextAnalysis.qualityScore(s.table("documents"), "text")
           .withColumn("lang", pipeline.TextAnalysis.langId(col("text")))
           .select("doc_id", "lang", "quality_score"))

@@ -60,10 +60,6 @@ private[functions] final class QuantState(val k: Int) {
     n
   }
 
-  /** True iff no compaction has ever fired anywhere in the state's
-    * history: every item still sits at level 0 with weight 1. */
-  def isExact: Boolean = levels.length == 1
-
   /** Weighted R-7 quantiles (the same linear-interpolation rule as Spark's
     * `percentile` and DuckDB's `quantile_cont`): h = p·(N−1) over the
     * weight-expanded sorted multiset. In the exact regime this IS R-7 on

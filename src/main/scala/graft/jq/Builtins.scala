@@ -54,9 +54,6 @@ object Builtins {
     if (i == 0 && j == s.length) s else s.substring(i, j)
   }
 
-  private def toStringValue(v: JsonNode): String =
-    if (v.isTextual) v.textValue() else serialize(v)
-
   private def math1(name: String)(f: Double => Double): ((String, Int), Builtin) =
     v0(name)(in => one(num(f(requireNumber(in, name)))))
 
@@ -288,10 +285,10 @@ object Builtins {
   // -- formats ------------------------------------------------------------
 
   def applyFormat(name: String, v: JsonNode): String = name match {
-    case "text" => toStringValue(v)
+    case "text" => render(v)
     case "json" => serialize(v)
     case "html" =>
-      toStringValue(v).flatMap {
+      render(v).flatMap {
         case '<' => "&lt;"
         case '>' => "&gt;"
         case '&' => "&amp;"
@@ -300,7 +297,7 @@ object Builtins {
         case c => c.toString
       }
     case "uri" =>
-      toStringValue(v).getBytes(StandardCharsets.UTF_8).flatMap { b =>
+      render(v).getBytes(StandardCharsets.UTF_8).flatMap { b =>
         val c = b.toChar
         if (c.isLetterOrDigit && c < 128 || "-_.~".indexOf(c.toInt) >= 0) c.toString
         else f"%%${b & 0xff}%02X"
@@ -325,14 +322,14 @@ object Builtins {
         if (e.isNumber || e.isBoolean || e.isNull) e.toString
         else if (e.isArray || e.isObject) // jq 1.6: only scalars can be shell-quoted
           throw JqError.of(s"${Json.typeName(e)}${preview(e)} can not be escaped for shell")
-        else "'" + toStringValue(e).replace("'", "'\\''") + "'"
+        else "'" + render(e).replace("'", "'\\''") + "'"
       if (v.isArray) Json.elements(v).map(quote).mkString(" ") else quote(v)
     case "base64" =>
-      java.util.Base64.getEncoder.encodeToString(toStringValue(v).getBytes(StandardCharsets.UTF_8))
+      java.util.Base64.getEncoder.encodeToString(render(v).getBytes(StandardCharsets.UTF_8))
     case "base64d" =>
-      new String(java.util.Base64.getDecoder.decode(toStringValue(v)), StandardCharsets.UTF_8)
-    case "base32" => base32Encode(toStringValue(v).getBytes(StandardCharsets.UTF_8))
-    case "base32d" => new String(base32Decode(toStringValue(v)), StandardCharsets.UTF_8)
+      new String(java.util.Base64.getDecoder.decode(render(v)), StandardCharsets.UTF_8)
+    case "base32" => base32Encode(render(v).getBytes(StandardCharsets.UTF_8))
+    case "base32d" => new String(base32Decode(render(v)), StandardCharsets.UTF_8)
     case other => throw JqError.of(s"$other is not a valid format")
   }
 
@@ -619,7 +616,7 @@ object Builtins {
       one(text(new String(cps, 0, cps.length)))
     },
 
-    v0("tostring")(in => one(text(toStringValue(in)))),
+    v0("tostring")(in => one(text(render(in)))),
     v0("tonumber") { in =>
       if (in.isNumber) one(in)
       else if (in.isTextual) {
@@ -1003,7 +1000,7 @@ object Builtins {
       val out = F.objectNode()
       Json.elements(requireArray(in, "indexed")).foreach { row =>
         eval(args.head, row, env).headOption.foreach { k =>
-          out.set[JsonNode](if (k.isTextual) k.textValue() else serialize(k), row)
+          out.set[JsonNode](render(k), row)
         }
       }
       one(out)
@@ -1012,7 +1009,7 @@ object Builtins {
       val out = F.objectNode()
       eval(args(0), in, env).foreach { row =>
         eval(args(1), row, env).headOption.foreach { k =>
-          out.set[JsonNode](if (k.isTextual) k.textValue() else serialize(k), row)
+          out.set[JsonNode](render(k), row)
         }
       }
       one(out)

@@ -6,10 +6,8 @@ import JqExpr._
 
 /** jq runtime error; payload is a JSON value (usually a string), caught by
   * `try`/`?`, surfaced with reference-compatible message otherwise. */
-final class JqError(val payload: JsonNode) extends RuntimeException(JqError.messageOf(payload))
+final class JqError(val payload: JsonNode) extends RuntimeException(Json.render(payload))
 object JqError {
-  def messageOf(p: JsonNode): String =
-    if (p.isTextual) p.textValue() else Json.serialize(p)
   def of(msg: String): JqError = new JqError(Json.text(msg))
 }
 
@@ -349,7 +347,7 @@ object Interp {
         case Right(x) =>
           val v = evalOne(x, in, env)
           sb.append(si.format match {
-            case None => if (v.isTextual) v.textValue() else Json.serialize(v)
+            case None => Json.render(v)
             case Some(f) => Builtins.applyFormat(f, v)
           })
       }
@@ -593,7 +591,7 @@ object Interp {
       case Right(e) :: rest =>
         eval(e, in, env).flatMap { v =>
           val s = si.format match {
-            case None => if (v.isTextual) v.textValue() else Json.serialize(v)
+            case None => Json.render(v)
             case Some(f) => Builtins.applyFormat(f, v)
           }
           build(rest, new StringBuilder(acc.toString).append(s))

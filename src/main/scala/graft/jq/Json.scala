@@ -123,6 +123,9 @@ object Json {
     * relies on in ResultObjectMarshaller.java:52). */
   def serialize(n: JsonNode): String = n.toString
 
+  /** jq's `tostring`: a string's text as is, any other value as compact JSON. */
+  def render(n: JsonNode): String = if (n.isTextual) n.textValue() else serialize(n)
+
   def elements(n: JsonNode): Iterator[JsonNode] = n.elements().asScala
   def fields(n: JsonNode): Iterator[(String, JsonNode)] =
     n.properties().iterator().asScala.map(e => (e.getKey, e.getValue))

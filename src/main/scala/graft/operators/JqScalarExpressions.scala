@@ -7,14 +7,15 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.jq.{Jq, JqError, Json}
+import graft.jq.Jq
 
 /** Scalar sugar over the jq engine (Spark-first additions; the reference
   * only ships the UDTF, but scalar extraction is the dominant usage in
   * SELECT contexts and avoids a Generate node entirely).
   *
   * jq_string(json, prog): first jq output rendered as string (text nodes
-  * unwrapped, others compact JSON); NULL when jq yields no output.
+  * unwrapped, others compact JSON); NULL when jq yields no output or a
+  * JSON null.
   */
 case class JqString(child: Expression, program: String)
     extends UnaryExpression with CodegenFallback {
@@ -26,19 +27,13 @@ case class JqString(child: Expression, program: String)
 
   override def eval(input: InternalRow): Any = {
     val json = child.eval(input).asInstanceOf[UTF8String]
-    try {
+    JqOutput.guard(json) {
       val it = compiled.applyToUtf8(json)
       if (!it.hasNext) null
       else {
         val n = it.next()
-        if (n.isNull) null
-        else if (n.isTextual) UTF8String.fromString(n.textValue())
-        else UTF8String.fromString(Json.serialize(n))
+        if (n.isNull) null else JqOutput.render(n)
       }
-    } catch {
-      case e: JqError =>
-        throw new RuntimeException(
-          s"""jq returned an error "${e.getMessage}" from input: $json""", e)
     }
   }
 
@@ -47,8 +42,9 @@ case class JqString(child: Expression, program: String)
   override def prettyName: String = "jq_string"
 }
 
-/** jq_extract_all(json, prog): every jq output as a compact-JSON string,
-  * collected into array<string> (NULL never — empty array when no outputs). */
+/** jq_extract_all(json, prog): every jq output rendered as jq_string does,
+  * a JSON null as "null", collected into array<string> (NULL never — empty
+  * array when no outputs). */
 case class JqExtractAll(child: Expression, program: String)
     extends UnaryExpression with CodegenFallback {
 
@@ -59,16 +55,8 @@ case class JqExtractAll(child: Expression, program: String)
 
   override def eval(input: InternalRow): Any = {
     val json = child.eval(input).asInstanceOf[UTF8String]
-    try {
-      val out = compiled.applyToUtf8(json).map { n =>
-        if (n.isTextual) UTF8String.fromString(n.textValue())
-        else UTF8String.fromString(Json.serialize(n))
-      }.toArray[Any]
-      new GenericArrayData(out)
-    } catch {
-      case e: JqError =>
-        throw new RuntimeException(
-          s"""jq returned an error "${e.getMessage}" from input: $json""", e)
+    JqOutput.guard(json) {
+      new GenericArrayData(compiled.applyToUtf8(json).map(JqOutput.render).toArray[Any])
     }
   }
 

@@ -47,20 +47,12 @@ case class JsonQueryGenerator(child: Expression, program: String, typeArgs: Seq[
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val json = child.eval(input).asInstanceOf[UTF8String]
-    val outs = compiled.applyToUtf8(json)
+    // jq errors surface on the first output and lazily while iterating
+    val outs = JqOutput.guard(json)(compiled.applyToUtf8(json))
     new Iterator[InternalRow] {
-      // jq errors surface lazily while iterating; match the reference's
-      // failure contract (JsonQueryUDTF.java:101)
-      private def guard[A](a: => A): A =
-        try a
-        catch {
-          case e: JqError =>
-            throw new RuntimeException(
-              s"""jq returned an error "${e.getMessage}" from input: $json""", e)
-        }
-      override def hasNext: Boolean = guard(outs.hasNext)
+      override def hasNext: Boolean = JqOutput.guard(json)(outs.hasNext)
       override def next(): InternalRow = {
-        val node = guard(outs.next())
+        val node = JqOutput.guard(json)(outs.next())
         val row = new Array[Any](marshallers.length)
         if (whole) {
           row(0) = marshallers(0)(node)
@@ -129,6 +121,22 @@ object JsonQueryGenerator {
   }
 }
 
+/** What the three jq operators share with the reference: an output
+  * rendered as a string (text as is, any other value as compact JSON,
+  * ResultObjectMarshaller.java:52) and the wording of a jq runtime error
+  * (JsonQueryUDTF.java:101). Each caller decides what a JSON null gives. */
+private[operators] object JqOutput {
+  def render(n: JsonNode): UTF8String = UTF8String.fromString(Json.render(n))
+
+  def guard[A](json: UTF8String)(a: => A): A =
+    try a
+    catch {
+      case e: JqError =>
+        throw new RuntimeException(
+          s"""jq returned an error "${e.getMessage}" from input: $json""", e)
+    }
+}
+
 /** JsonNode → Catalyst value, compiled once per output type.
   * Coercions mirror ResultObjectMarshaller.java:45-97: Jackson asInt /
   * asLong / asDouble / asBoolean for primitives; strings keep text nodes
@@ -136,10 +144,7 @@ object JsonQueryGenerator {
   * fields become null. */
 object JsonMarshaller {
   def compile(dt: DataType): JsonNode => Any = dt match {
-    case StringType =>
-      n => if (n == null || n.isNull) null
-           else if (n.isTextual) UTF8String.fromString(n.textValue())
-           else UTF8String.fromString(Json.serialize(n))
+    case StringType => n => if (n == null || n.isNull) null else JqOutput.render(n)
     case IntegerType => n => if (n == null || n.isNull) null else Int.box(n.asInt())
     case LongType => n => if (n == null || n.isNull) null else Long.box(n.asLong())
     case FloatType => n => if (n == null || n.isNull) null else Float.box(n.asDouble().toFloat)

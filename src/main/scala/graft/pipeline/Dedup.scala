@@ -18,13 +18,10 @@ import graft.functions.{Bloom, BloomAgg, BloomMightContain, CosineSim, Hamming64
   * No all-pairs stage exists anywhere: blocking always precedes verify,
   * which is what keeps these plans viable at 10^9+ documents.
   *
-  * Cache lifecycle: intermediates consumed more than once go through
-  * [[Materialize]], whose strategy is session-configurable
-  * (`spark.graft.materialize`): `localCheckpoint` by default (leak-free in
-  * long-lived local sessions — blocks are RDD-owned and ContextCleaner-
-  * freed), `checkpoint` or `persist` for multi-executor clusters where
-  * executor loss must not lose non-replicated local blocks. See the
-  * Materialize scaladoc for the trade-offs.
+  * Cache lifecycle: intermediates consumed more than once are cut by
+  * [[Materialize]] (`localCheckpoint`: RDD-owned blocks the ContextCleaner
+  * frees, so nothing leaks in a long-lived session; not replicated, so an
+  * executor loss fails the job).
   */
 object Dedup {
 
@@ -773,24 +770,6 @@ object Dedup {
       posexplode(array(keyCols: _*)).as(Seq("combo", "key")))
   }
 
-  private def simhashBanded(df: DataFrame, idCol: String, textCol: String,
-                            shingle: Int, maxHamming: Int, blocks: Int): DataFrame =
-    banded64(
-      df.select(col(idCol).as("id"), simhashCol(col(textCol), shingle).as("fp")),
-      maxHamming, blocks)
-
-  /** Histogram of blocking-bucket sizes (size → number of buckets), the
-    * quantity that decides whether the simhash self-join stays linear.
-    * Diagnostic — drives one aggregation over the banded keys. */
-  def simhashBucketStats(df: DataFrame, idCol: String, textCol: String,
-                         shingle: Int = 3, maxHamming: Int = 3,
-                         blocks: Int = 6): Seq[(Long, Long)] =
-    simhashBanded(df, idCol, textCol, shingle, maxHamming, blocks)
-      .groupBy("combo", "key").agg(count(lit(1)).as("sz"))
-      .groupBy("sz").agg(count(lit(1)).as("n"))
-      .orderBy("sz")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-
   /** Connected components over an undirected pair set (a, b): returns
     * (id, group_id) with group_id = the smallest id in the component —
     * turns near-dup PAIRS into dedup GROUPS (keep one doc per group).
@@ -851,14 +830,6 @@ object Dedup {
     var prevSum = labelSum(labels)
     var converged = false
     var i = 0
-    // Frames whose release is DEFERRED until the frame derived from them
-    // has been forced by an action. Under the persist strategy Materialize
-    // is a lazy cache mark: releasing an input before the derived frame's
-    // first action would guarantee its recompute (and the recompute chain
-    // compounds round over round — the self-join doubles the fan-in). The
-    // next round's labelSum(hooked) transitively forces the current labels
-    // frame, after which last round's inputs are safe to drop.
-    var deferred: Seq[DataFrame] = Nil
     while (!converged && i < maxIters) {
       // hooked is checkpointed because the jump self-joins it: without
       // it, BOTH join sides would recompute the edge-join + groupBy
@@ -866,9 +837,6 @@ object Dedup {
         .groupBy("x").agg(min("label").as("label"))
         .withColumnRenamed("x", "id"))
       val sH = labelSum(hooked) // forces hooked AND (first use) labels
-      deferred.foreach(Materialize.release)
-      deferred = Nil
-      val prev = labels
       if (sH.compareTo(prevSum) == 0) {
         // hook-fixpoint ⟺ converged: labels are constant across every edge,
         // so each component already carries its minimum — skip the jump.
@@ -877,18 +845,14 @@ object Dedup {
         // force pointwise equality throughout.)
         converged = true
         labels = hooked
-        Materialize.release(prev) // forced computing hooked — safe to drop
       } else {
         prevSum = sH
         val jumped = hooked.as("h1").join(hooked.as("h2"), col("h1.label") === col("h2.id"))
           .select(col("h1.id").as("id"), col("h2.label").as("label"))
         labels = Materialize.cutLazy(jumped)
-        deferred = Seq(hooked, prev) // released after jumped's first action
       }
       i += 1
     }
-    Materialize.release(edges)
-    deferred.foreach(Materialize.release) // cap path: nothing forced them
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents: labels still changing after maxIters=$maxIters rounds " +
@@ -965,7 +929,6 @@ object Dedup {
       .distinct()
     // the contracted fixpoint: batch + touched-representative sized
     val comp = connectedComponents(nodes, cEdges.select("a", "b"), maxIters)
-    Materialize.release(cEdges)
     val remap = comp.select(col("id").as("__rep"), col("group_id").as("__newgid"))
     // batch rows: every batch id is a contracted node (reps are stored ids,
     // disjoint from the batch by the check above)
@@ -1281,7 +1244,6 @@ object Dedup {
           .select(lag("__rep", 1).over(w).as("a"), col("__rep").as("b"))
           .where(col("a").isNotNull)
           .collect() // first action on the new blocks frame — populates it
-        Materialize.release(prev) // new blocks forced above; prev superseded
         depth += 1
       }
     }

@@ -126,11 +126,6 @@ object Graph {
     val basePpm = 1000000L - dampingPpm
     var ranks = nodes.select(col("node"),
       when(col("__seed"), lit(1000000L)).otherwise(lit(0L)).as("rank_ppm"))
-    // released at the END: under the persist strategy nothing forces a
-    // round's frame until the next round's cut (or the caller's action),
-    // so an in-loop release would schedule recomputes; rounds hold only
-    // node-sized frames, far below the edge table this loop never copies
-    val retired = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     for (i <- 1 to iterations) {
       // decimal multiply: rank·w would overflow BIGINT at hub weights;
       // unweighted (w = 1) reduces to rank DIV Σ1 = rank DIV outdeg.
@@ -151,15 +146,8 @@ object Graph {
         .select(nodes("node"),
           expr(s"CAST((CASE WHEN __seed THEN $basePpm ELSE 0 END) + ($dampingPpm * coalesce(__s, CAST(0 AS DECIMAL(38,0)))) DIV 1000000 AS BIGINT)")
             .as("rank_ppm"))
-      ranks = if (i % cutEvery == 0 && i < iterations) {
-        val cut = Materialize.cut(next)
-        retired += cut
-        cut
-      } else next
+      ranks = if (i % cutEvery == 0 && i < iterations) Materialize.cut(next) else next
     }
-    Materialize.release(ej)
-    Materialize.release(nodes)
-    retired.foreach(Materialize.release)
     ranks
   }
 
@@ -242,7 +230,6 @@ object Graph {
         .repartition(col("nbr")))
     var labels = adj.select(col("node")).distinct()
       .select(col("node"), col("node").as("label"))
-    val retired = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     for (i <- 1 to iterations) {
       // explicit aliases: labels derives from adj on round 1, so the
       // unqualified columns would be an ambiguous self-join
@@ -253,14 +240,8 @@ object Graph {
       val next = votes.groupBy("__n")
         .agg(max(struct(col("__c"), (-col("label")).as("__neg"))).as("__m"))
         .select(col("__n").as("node"), (-col("__m.__neg")).as("label"))
-      labels = if (i % cutEvery == 0 && i < iterations) {
-        val cut = Materialize.cut(next)
-        retired += cut
-        cut
-      } else next
+      labels = if (i % cutEvery == 0 && i < iterations) Materialize.cut(next) else next
     }
-    Materialize.release(adj)
-    retired.foreach(Materialize.release)
     labels
   }
 
@@ -439,7 +420,7 @@ object Graph {
       val spark = edges.sparkSession
       import spark.implicits._
       if (picked.isEmpty) Seq.empty[(Long, Long, Long)].toDF("a", "b", "w")
-      else Materialize(picked.reduce(_ union _).distinct())
+      else Materialize.cut(picked.reduce(_ union _).distinct())
     } finally pinned.foreach(_.unpersist())
   }
 
@@ -493,8 +474,6 @@ object Graph {
     var labels = Materialize.cutLazy(
       adj.groupBy("node").agg(count(lit(1)).as("__k"))
         .select(col("node"), col("node").as("community"), col("__k")))
-    val retired = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    retired += labels // superseded by round 1's cut
     for (i <- 1 to rounds) {
       // r16 optimization: community totals ride the LABEL frame (|V|-sized
       // joins on the community key), so the old per-round cand⋈tot join —
@@ -569,11 +548,7 @@ object Graph {
       // same blocks, computed once inside the caller's single action (r16
       // — the MST flat-persist discipline applied to the move loops).
       labels = Materialize.cutLazy(next)
-      retired += labC
-      retired += labelsT
-      if (i < rounds) retired += labels
     }
-    retired.foreach(Materialize.release)
     labels.select("node", "community")
   }
 
@@ -674,8 +649,6 @@ object Graph {
         .join(selfW, Seq("node"), "left")
         .select(col("node"), col("node").as("community"),
           (col("__kw") + lit(2L) * coalesce(col("sw"), lit(0L))).as("__k")))
-    val retired = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    retired += labels
     for (i <- 1 to rounds) {
       // r16 optimization: same restructure as [[louvainMoves]] — totals
       // ride the label frame, own-community fallback is an in-row struct
@@ -722,11 +695,7 @@ object Graph {
           .otherwise(col("__own")).as("community"),
         col("__k"))
       labels = Materialize.cutLazy(next)
-      retired += labC
-      retired += labelsT
-      if (i < rounds) retired += labels
     }
-    retired.foreach(Materialize.release)
     labels.select("node", "community")
   }
 
@@ -756,7 +725,7 @@ object Graph {
     val e = edges.select(col(leftCol).cast("long").as("l"),
       col(rightCol).cast("long").as("r")).distinct()
     val deg = e.groupBy("l").agg(count(lit(1)).as("__d"))
-    val kept = Materialize(
+    val kept = Materialize.cut(
       e.join(deg.where(col("__d") <= maxDegree), Seq("l"), "left_semi")
         .repartition(col("l")))
     kept.as("x").join(kept.as("y"),
@@ -823,12 +792,6 @@ object Graph {
       stable = cnt == prev
       prev = cnt
     }
-    // no release: under the eager strategies the per-round frames are
-    // ContextCleaner-owned; under `persist` they are never-computed-
-    // until-action caches that dedup each round's DIAMOND reference
-    // (degree build + semi-joins read the same frame) — unpersisting
-    // them here would forfeit that reuse (the Materialize contract for
-    // lazily-referenced intermediates)
     e.select(col("a").as("node")).union(e.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("core_degree"))
       .where(col("core_degree") >= k)
@@ -930,10 +893,6 @@ object Graph {
       if (frontier.count() == 0L) done = true
       dists = merged.select("node", "dist")
     }
-    // no release: the per-round cuts follow the kCore/Materialize contract
-    // (under `persist` the superseded frames were computed by this loop's
-    // per-round action and stay session-cached; the returned frame is the
-    // final cut and references none of them)
     dists
   }
 
@@ -1986,11 +1945,6 @@ object Graph {
     val triangles = wedges.join(
       oriented.select(col("u").as("v"), col("v").as("w")), Seq("v", "w"),
       "left_semi")
-    // und/oriented are single-shot intermediates the RETURNED plan still
-    // references lazily — per the Materialize contract the operator must
-    // NOT release them (under the persist strategy that would unpersist
-    // never-computed caches and forfeit all reuse); they follow the
-    // session cache lifecycle like the LSH bucket tables
     val tri = triangles
       .select(explode(array(col("u"), col("v"), col("w"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("n_triangles"))

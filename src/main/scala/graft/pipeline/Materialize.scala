@@ -1,63 +1,22 @@
 package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
 
 /** Materialization of intermediates that are consumed more than once
   * (LSH bucket tables, shingle-set sides of a verify join, per-round CC
-  * labels). Strategy is session-configurable via `spark.graft.materialize`
-  * because no single mechanism is right for every deployment:
-  *
-  *  - `localCheckpoint` (default): eager, lineage-cut, executor-local
-  *    blocks owned by the RDD and freed by the ContextCleaner when the
-  *    result is unreferenced — nothing leaks in a long-lived session
-  *    (`Dataset.persist` parks a CacheManager entry forever unless someone
-  *    unpersists). The trade-off: blocks are NOT replicated, so on a
-  *    multi-executor cluster losing an executor loses its blocks and fails
-  *    the job. Right default for local / single-JVM sessions.
-  *  - `checkpoint`: reliable checkpoint to `SparkContext.setCheckpointDir`
-  *    storage — survives executor loss; the setting for long jobs on big
-  *    clusters where re-running from source is worse than checkpoint I/O.
-  *  - `persist`: MEMORY_AND_DISK cache with lineage kept, so lost blocks
-  *    are RECOMPUTED instead of failing the job — the fault-tolerant
-  *    choice when no checkpoint dir is provisioned. Lifecycle under
-  *    persist: iterative operators (connectedComponents) release each
-  *    round's frame once the next is materialized; SINGLE-SHOT
-  *    intermediates (LSH bucket tables, shingle sets) cannot be released
-  *    by the operator — the returned plan still references them lazily —
-  *    so they follow the session CacheManager lifecycle. A long-lived
-  *    session using the persist strategy should `spark.catalog.clearCache()`
-  *    between pipeline runs, or prefer `checkpoint`; the default
-  *    localCheckpoint strategy has no such residue (ContextCleaner-owned).
+  * labels): Spark's `localCheckpoint`, which cuts the lineage to a
+  * `LogicalRDD` over executor-local blocks. The blocks belong to the RDD
+  * and the ContextCleaner frees them once the result is unreferenced, so
+  * nothing leaks in a long-lived session and no caller releases anything.
+  * The limit: the blocks are NOT replicated, so on a multi-executor
+  * cluster losing an executor loses its blocks and fails the job.
   */
 private[graft] object Materialize {
-  val ConfKey = "spark.graft.materialize"
 
-  def apply(df: DataFrame): DataFrame =
-    df.sparkSession.conf.get(ConfKey, "localCheckpoint") match {
-      case "checkpoint"      => df.checkpoint(eager = true)
-      case "persist"         => df.persist(StorageLevel.MEMORY_AND_DISK)
-      case "localCheckpoint" => df.localCheckpoint(eager = true)
-      case other => throw new IllegalArgumentException(
-        s"$ConfKey must be localCheckpoint | checkpoint | persist, got '$other'")
-    }
-
-  /** [[apply]] for ITERATIVE per-round frames: additionally guarantees the
-    * returned frame's Catalyst plan is FLAT. The eager checkpoint
-    * strategies already return LogicalRDD plans; plain `persist` keeps
-    * the full logical plan, and a self-join loop's plan doubles per round
-    * — analysis and plan-string generation go exponential long before any
-    * data moves. Under `persist` the plan is first cut
-    * (`GraftShim.flattenPlan` — the RDD keeps its lineage, so
-    * recompute-on-block-loss is retained) and the flat frame is what gets
-    * cached, so [[release]] unpersists it. */
-  def cut(df: DataFrame): DataFrame =
-    df.sparkSession.conf.get(ConfKey, "localCheckpoint") match {
-      case "persist" =>
-        org.apache.spark.sql.graftshim.GraftShim.flattenPlan(df)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      case _ => apply(df)
-    }
+  /** Eager cut: the blocks are written before this returns, and the
+    * returned frame's plan is flat (a self-join loop's plan would otherwise
+    * double per round). */
+  def cut(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
 
   /** [[cut]] for iterative frames whose convergence check IMMEDIATELY
     * follows: the materialization is marked but NOT eagerly forced, so
@@ -69,21 +28,5 @@ private[graft] object Materialize {
     * jobs per loop, the r14 verdict's "check convergence cheaper" ask.
     * Contract: the caller MUST run a full-scan action on (a child of)
     * the returned frame before the next round reads it twice. */
-  def cutLazy(df: DataFrame): DataFrame =
-    df.sparkSession.conf.get(ConfKey, "localCheckpoint") match {
-      case "checkpoint"      => df.checkpoint(eager = false)
-      case "persist" =>
-        org.apache.spark.sql.graftshim.GraftShim.flattenPlan(df)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      case "localCheckpoint" => df.localCheckpoint(eager = false)
-      case other => throw new IllegalArgumentException(
-        s"$ConfKey must be localCheckpoint | checkpoint | persist, got '$other'")
-    }
-
-  /** Releases an intermediate once superseded. Only the persist strategy
-    * parks a CacheManager entry that needs explicit release; the checkpoint
-    * strategies' blocks are RDD-owned / on reliable storage, so release is
-    * genuinely a no-op there (not a per-call CacheManager lookup miss). */
-  def release(df: DataFrame): Unit =
-    if (df.sparkSession.conf.get(ConfKey, "localCheckpoint") == "persist") df.unpersist()
+  def cutLazy(df: DataFrame): DataFrame = df.localCheckpoint(eager = false)
 }

@@ -62,9 +62,6 @@ object PcaExact {
     * toward zero. */
   val ProjShift = 65536L
 
-  def quantize1024(vec: Column): Column =
-    transform(vec, x => floor(x.cast("double") * lit(1024.0) + lit(0.5)).cast("long"))
-
   /** r integer direction vectors (row k = component k), unnormalized —
     * only the DIRECTION matters for the projected-space ranking. */
   final case class Model(d: Int, r: Int, vecs: Array[Array[Long]])

@@ -51,13 +51,10 @@ import org.apache.spark.sql.functions._
   * every current caller scans a DISTINCT-key frame, so ROWS-frame tie
   * arbitrariness cannot differ from the global window's.
   *
-  * Fault tolerance: the load-bearing [[Materialize]] defaults to
-  * `localCheckpoint`, whose blocks are executor-local and NOT replicated
-  * — on a multi-executor cluster an executor loss fails the query loudly
-  * (never wrongly). Long jobs on real clusters should set
-  * `spark.graft.materialize=checkpoint` (with a checkpoint dir) or
-  * `persist` (lineage kept, lost blocks recomputed) — see [[Materialize]]
-  * for the full strategy trade-offs. */
+  * Fault tolerance: the load-bearing [[Materialize]] is `localCheckpoint`,
+  * whose blocks are executor-local and NOT replicated — on a
+  * multi-executor cluster an executor loss fails the query loudly (never
+  * wrongly). */
 private[graft] object RangeScan {
 
   /** One running aggregate to compute: `out` = fn(`src`) over all rows
@@ -94,7 +91,7 @@ private[graft] object RangeScan {
     val parts = math.max(1,
       df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt)
     val pCols = partitionBy.map(col)
-    val bucketed = Materialize(
+    val bucketed = Materialize.cut(
       df.repartitionByRange(parts, (pCols ++ order): _*)
         .withColumn("__rs_b", spark_partition_id()))
 

@@ -304,28 +304,6 @@ object Similarity {
         col("__e.id").as("neighbor_id"), col("__e.score").as("cos_scaled"))
   }
 
-  /** Deterministic pseudo-random hyperplane component for (table, plane, dim). */
-  private def planeComponent(table: Int, plane: Int, dim: Int): Double = {
-    val h = Mix.splitmix64((table.toLong << 40) ^ (plane.toLong << 20) ^ dim.toLong ^ 0x9e37L)
-    // map to [-1, 1)
-    (h >>> 11).toDouble / (1L << 52).toDouble * 2.0 - 1.0
-  }
-
-  /** Random-hyperplane LSH bucket id for one table: sign bits of
-    * `numPlanes` projections packed into an int. */
-  def lshBucket(vec: Column, table: Int, numPlanes: Int, dim: Int): Column = {
-    // hyperplane components are literals baked into the plan (seeded, so
-    // executors agree without shipping state)
-    val bits = (0 until numPlanes).map { p =>
-      val comps = array((0 until dim).map(d => lit(planeComponent(table, p, d))): _*)
-      val dot = aggregate(
-        zip_with(vec, comps, (x, c) => x.cast("double") * c),
-        lit(0.0), (acc, v) => acc + v)
-      when(dot >= 0, lit(1 << p)).otherwise(lit(0))
-    }
-    bits.reduce(_ + _)
-  }
-
   /** LSH candidate pairs for `lshTopK` — exposed so callers (and the recall
     * spec) can measure candidate-set size against the N×Q brute-force pair
     * count. Corpus side: one bucket per table per vector (LshBuckets, one
@@ -1578,7 +1556,6 @@ object Similarity {
           .as("qv")))
     val firstRows = q0.orderBy("id").limit(1).select("id", "qv").collect()
     if (firstRows.isEmpty) {
-      Materialize.release(q0)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType.fromDDL(
@@ -1590,15 +1567,12 @@ object Similarity {
       (1, firstRows.head.getLong(0), None))
     var cur = Materialize.cutLazy(
       q0.withColumn("__mind", d2To(vecOf(firstRows.head))))
-    var prev: Option[DataFrame] = None
     var r = 2
     var exhausted = false
     while (r <= k && !exhausted) {
       val cand = cur.where(col("__mind") > 0)
         .orderBy(col("__mind").desc, col("id").asc)
         .limit(1).select("id", "__mind", "qv").collect()
-      prev.foreach(Materialize.release)
-      prev = Some(cur)
       if (cand.isEmpty) exhausted = true
       else {
         val c = cand.head
@@ -1609,9 +1583,6 @@ object Similarity {
         r += 1
       }
     }
-    prev.foreach(Materialize.release)
-    if (prev.forall(_ ne cur)) Materialize.release(cur)
-    Materialize.release(q0)
     import spark.implicits._
     chosen.toDF("rank", "vec_id", "coverage_d2")
   }

@@ -724,12 +724,6 @@ object Pdf {
     else new String(v, "ISO-8859-1")
   }
 
-  /** Extracted text only (null on non-PDF / nothing legible). */
-  def extractText(b: Array[Byte]): String = {
-    val d = parse(b)
-    if (d == null) null else d.text
-  }
-
   // ---------------------------------------------------------------
   // builder (the exporter twin)
   // ---------------------------------------------------------------

@@ -27,10 +27,10 @@ object GraftShim {
     * `LogicalRDD.fromDataset`, the same construction `Dataset.checkpoint`
     * uses, so output partitioning/ordering are preserved. Execution and
     * fault-tolerance are untouched (the RDD keeps its full lineage; nothing
-    * is computed here): only the CATALYST plan is cut. Iterative operators
-    * need this under the `persist` materialization strategy, where the
-    * logical plan would otherwise nest per round (a self-join loop's plan
-    * doubles each iteration — analysis/explain go exponential). */
+    * is computed here): only the CATALYST plan is cut. An iterative operator
+    * that persists its per-round frame needs this, or the logical plan
+    * nests per round (a self-join loop's plan doubles each iteration —
+    * analysis/explain go exponential). */
   def flattenPlan(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
     org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession,

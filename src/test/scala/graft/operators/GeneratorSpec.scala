@@ -129,6 +129,21 @@ class GeneratorSpec extends AnyFunSuite {
       Option(e.getCause).exists(_.getMessage.contains("Unrecognized token")))
   }
 
+  test("jq runtime error fails with the reference's wording (JsonQueryUDTF.java:101)") {
+    val expected = """jq returned an error "boom" from input: {"a":1}"""
+    def messages(t: Throwable): List[String] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).toList
+    val df = Seq("""{"a":1}""").toDF("j")
+    val prog = """error("boom")"""
+    for ((name, col) <- Seq(
+           "jq" -> graft.Graft.jq($"j", prog, "string"),
+           "jq_string" -> graft.Graft.jqString($"j", prog),
+           "jq_extract_all" -> graft.Graft.jqExtractAll($"j", prog))) {
+      val e = intercept[Exception](df.select(col).collect())
+      assert(messages(e).contains(expected), s"$name: ${messages(e)}")
+    }
+  }
+
   test("non-constant JQ argument is rejected") {
     Seq(("{}", ".")).toDF("j", "prog").createOrReplaceTempView("nc")
     val e = intercept[Exception](spark.sql("SELECT jq(j, prog, 'string') FROM nc").collect())

@@ -818,7 +818,7 @@ class GraphSpec extends AnyFunSuite {
     // never interact), so the three centrality oracles gate unchanged
     val e = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (2L, 5L),
       (5L, 6L), (6L, 2L), (4L, 7L)).toDF("src", "dst")
-    val multi = Materialize(Graph.landmarkDistanceTable(
+    val multi = Materialize.cut(Graph.landmarkDistanceTable(
       e, "src", "dst", nSeeds = 3, rounds = 5, Seq("hc:", "cc:", "ec:")))
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).toSeq.sorted
@@ -850,7 +850,7 @@ class GraphSpec extends AnyFunSuite {
   test("condensation: precomputedScc skips the second fixpoint, same answer") {
     val e = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 4L),
       (5L, 6L), (3L, 6L)).toDF("src", "dst")
-    val scc = Materialize(Graph.stronglyConnectedComponents(e, "src", "dst"))
+    val scc = Materialize.cut(Graph.stronglyConnectedComponents(e, "src", "dst"))
     val shared = Graph.condensationLevels(e, "src", "dst",
         precomputedScc = Some(scc))
       .orderBy("scc").as[(Long, Long, Long)].collect().toSeq

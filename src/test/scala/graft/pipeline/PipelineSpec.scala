@@ -401,24 +401,16 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
-  test("connected components: long chain converges under the persist strategy") {
-    // regression for the release-before-force hazard: under persist,
-    // Materialize is a lazy cache mark, so each round's inputs must stay
-    // cached until the derived frame's first action — a chain needing ~8
-    // hook+jump rounds exercises the deferred-release schedule end to end
-    try {
-      spark.conf.set(Materialize.ConfKey, "persist")
-      val n = 120
-      val ids = spark.range(n + 1).select($"id")
-      val chain = spark.range(n).selectExpr("id AS a", "id + 1 AS b")
-      val labels = Dedup.connectedComponents(ids.toDF(), chain)
-        .as[(Long, Long)].collect()
-      assert(labels.length == n + 1)
-      assert(labels.forall(_._2 == 0L), "every chain member must fold to label 0")
-    } finally {
-      spark.conf.set(Materialize.ConfKey, "localCheckpoint")
-      spark.catalog.clearCache()
-    }
+  test("connected components: long chain converges over many hook+jump rounds") {
+    // a chain needing ~8 hook+jump rounds: every round's lazy cut is read
+    // by the next round's hook, so the per-round lineage cut runs end to end
+    val n = 120
+    val ids = spark.range(n + 1).select($"id")
+    val chain = spark.range(n).selectExpr("id AS a", "id + 1 AS b")
+    val labels = Dedup.connectedComponents(ids.toDF(), chain)
+      .as[(Long, Long)].collect()
+    assert(labels.length == n + 1)
+    assert(labels.forall(_._2 == 0L), "every chain member must fold to label 0")
   }
 
   test("semanticDedup flags within-cluster near-identical embeddings, keeps min id") {
@@ -1775,35 +1767,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(shard5.length == 2)
     assert(shard5(0)._2 == 0L && shard5(1)._2 == shard5(0)._1,
       s"duplicate-id rows overlap: ${shard5.toSeq}")
-  }
-
-  test("materialization strategy is session-configurable with identical results") {
-    // cluster deployments need fault-tolerant materialization (persist
-    // recomputes lost blocks; checkpoint survives executor loss) — results
-    // must not depend on the strategy
-    val expected = Dedup.minhashDedupPairs(base, "doc_id", "text", threshold = 0.6)
-      .select("a", "b").as[(Long, Long)].collect().toSet
-    assert(expected.nonEmpty)
-    for (strategy <- Seq("persist", "checkpoint")) {
-      try {
-        if (strategy == "checkpoint") spark.sparkContext.setCheckpointDir("target/spec_ckpt")
-        spark.conf.set(Materialize.ConfKey, strategy)
-        val got = Dedup.minhashDedupPairs(base, "doc_id", "text", threshold = 0.6)
-          .select("a", "b").as[(Long, Long)].collect().toSet
-        assert(got == expected, s"strategy $strategy changed minhash results")
-        val groups = Dedup.connectedComponents(base.select($"doc_id".as("id")),
-          Seq((0L, 2L), (1L, 4L)).toDF("a", "b")).as[(Long, Long)].collect().toMap
-        assert(groups(2L) == 0L && groups(4L) == 1L, s"strategy $strategy broke CC")
-      } finally {
-        spark.conf.set(Materialize.ConfKey, "localCheckpoint")
-        spark.catalog.clearCache()
-      }
-    }
-    intercept[IllegalArgumentException] {
-      spark.conf.set(Materialize.ConfKey, "bogus")
-      try Dedup.verifyJaccard(Seq((0L, 1L)).toDF("a", "b"), base, "doc_id", "text").collect()
-      finally spark.conf.set(Materialize.ConfKey, "localCheckpoint")
-    }
   }
 
   test("salted aggregations equal their direct formulations on skewed data") {
