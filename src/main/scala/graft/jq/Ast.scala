@@ -88,15 +88,4 @@ object JqExpr {
   /** `label $name | body` / `break $name` — early termination. */
   final case class Label(name: String, body: JqExpr) extends JqExpr
   final case class Break(name: String) extends JqExpr
-
-  /** Compiler-inserted marker: `expr` always yields exactly one output, so
-    * the interpreter may use the strict (stream-free) evaluation path.
-    * Never produced by the parser — see StrictRewrite. */
-  final case class Strict(expr: JqExpr) extends JqExpr
-
-  /** Compiler-inserted marker: `expr` yields AT MOST one output (select /
-    * empty / their pipelines), so the interpreter may use the null-or-value
-    * evalOpt path — one deferred cell instead of a stream per element.
-    * Never produced by the parser — see StrictRewrite. */
-  final case class Semi(expr: JqExpr) extends JqExpr
 }

@@ -1,36 +1,98 @@
 package graft.jq
 
 import com.fasterxml.jackson.databind.JsonNode
-import com.fasterxml.jackson.databind.node.ObjectNode
 import java.nio.charset.StandardCharsets
 import java.util.regex.{Matcher, Pattern => JPattern}
-import scala.jdk.CollectionConverters._
 
 /** jq builtin functions (value level, regex, formats, dates).
+  *
+  * Each entry builds the builtin's node from its compiled arguments; the
+  * arguments run on the caller's frame. `fn0`/`fn1`/`fn2` builtins yield one
+  * output per combination of argument values (the first argument
+  * outermost), so they are single-output when their arguments are; `one`
+  * builtins always yield exactly one; `gen` builtins push any number.
+  *
   * Regex uses `java.util.regex` (documented divergence from jq's Oniguruma;
   * named groups + common flags behave identically for typical patterns). */
 object Builtins {
   import Json._
-  import Interp.{eval, preview}
+  import Values._
+  import Compiler._
 
-  type S = JqStream
-  type Builtin = (List[JqExpr], JsonNode, Env) => S
+  private[jq] type Builtin = Array[Node] => Node
 
-  // -- helpers ------------------------------------------------------------
+  // -- nodes ----------------------------------------------------------------
 
-  /** one-value-arg builtin: cartesian over the arg's outputs */
-  private def v1(name: String)(f: (JsonNode, JsonNode) => S): ((String, Int), Builtin) =
-    (name, 1) -> { (args, in, env) => eval(args.head, in, env).flatMap(a => f(in, a)) }
+  private abstract class BuiltinN(id: String) extends Node {
+    override protected def pathError: String = s"Invalid path expression: $id"
+  }
 
-  private def v2(name: String)(f: (JsonNode, JsonNode, JsonNode) => S): ((String, Int), Builtin) =
-    (name, 2) -> { (args, in, env) =>
-      eval(args(0), in, env).flatMap(a => eval(args(1), in, env).flatMap(b => f(in, a, b)))
+  private final class Fn0N(id: String, f: JsonNode => JsonNode) extends BuiltinN(id) {
+    override def single = true
+    override def value(in: JsonNode, fr: Frame): JsonNode = f(in)
+  }
+
+  private final class Fn1N(id: String, a: Node, f: (JsonNode, JsonNode) => JsonNode) extends BuiltinN(id) {
+    override val single = a.single
+    override def value(in: JsonNode, fr: Frame): JsonNode = f(in, a.value(in, fr))
+    override def run(in: JsonNode, fr: Frame, k: Sink): Unit =
+      if (single) k(value(in, fr)) else a.run(in, fr, x => k(f(in, x)))
+  }
+
+  private final class Fn2N(id: String, a: Node, b: Node, f: (JsonNode, JsonNode, JsonNode) => JsonNode)
+      extends BuiltinN(id) {
+    override val single = a.single && b.single
+    override def value(in: JsonNode, fr: Frame): JsonNode = f(in, a.value(in, fr), b.value(in, fr))
+    override def run(in: JsonNode, fr: Frame, k: Sink): Unit =
+      if (single) k(value(in, fr)) else a.run(in, fr, x => b.run(in, fr, y => k(f(in, x, y))))
+  }
+
+  private final class OneN(id: String, args: Array[Node], f: (Array[Node], JsonNode, Frame) => JsonNode)
+      extends BuiltinN(id) {
+    override def single = true
+    override def value(in: JsonNode, fr: Frame): JsonNode = f(args, in, fr)
+  }
+
+  private type Gen = (Array[Node], JsonNode, Frame, Sink) => Unit
+  private type GenPaths = (Array[Node], JsonNode, Frame, PathSink) => Unit
+
+  private final class GenN(id: String, args: Array[Node], f: Gen, p: GenPaths) extends BuiltinN(id) {
+    override def run(in: JsonNode, fr: Frame, k: Sink): Unit = f(args, in, fr, k)
+    override def paths(root: JsonNode, fr: Frame, k: PathSink): Unit =
+      if (p == null) super.paths(root, fr, k) else p(args, root, fr, k)
+  }
+
+  private def fn0(name: String)(f: JsonNode => JsonNode): ((String, Int), Builtin) =
+    (name, 0) -> (_ => new Fn0N(s"$name/0", f))
+  private def fn1(name: String)(f: (JsonNode, JsonNode) => JsonNode): ((String, Int), Builtin) =
+    (name, 1) -> (a => new Fn1N(s"$name/1", a(0), f))
+  private def fn2(name: String)(f: (JsonNode, JsonNode, JsonNode) => JsonNode): ((String, Int), Builtin) =
+    (name, 2) -> (a => new Fn2N(s"$name/2", a(0), a(1), f))
+  private def one(name: String, arity: Int)(f: (Array[Node], JsonNode, Frame) => JsonNode): ((String, Int), Builtin) =
+    (name, arity) -> (a => new OneN(s"$name/$arity", a, f))
+  private def gen(name: String, arity: Int, paths: GenPaths = null)(f: Gen): ((String, Int), Builtin) =
+    (name, arity) -> (a => new GenN(s"$name/$arity", a, f, paths))
+  /** `name` passes its input on when `p` holds, and yields nothing otherwise. */
+  private def filter0(name: String)(p: JsonNode => Boolean): ((String, Int), Builtin) =
+    gen(name, 0)((_, in, _, k) => if (p(in)) k(in))
+
+  /** Stops `body` after `n` pushes to `k`; nothing runs when n <= 0. */
+  private def take[A](n: Int, k: A => Unit)(body: (A => Unit) => Unit): Unit =
+    if (n > 0) {
+      var count = 0
+      var stopped = false
+      try body { v => k(v); count += 1; if (count >= n) { stopped = true; throw Stop } }
+      catch { case Stop if stopped => () }
     }
 
-  private def v0(name: String)(f: JsonNode => S): ((String, Int), Builtin) =
-    (name, 0) -> { (_, in, _) => f(in) }
+  /** Every path of `f` on `root`. */
+  private def pathsOf(f: Node, root: JsonNode, fr: Frame): List[Path] = {
+    val b = List.newBuilder[Path]
+    f.paths(root, fr, b += _)
+    b.result()
+  }
 
-  private def one(v: JsonNode): S = JqStream(v)
+  // -- helpers ------------------------------------------------------------
 
   private def requireNumber(v: JsonNode, who: String): Double =
     if (v.isNumber) v.doubleValue()
@@ -54,14 +116,18 @@ object Builtins {
     if (i == 0 && j == s.length) s else s.substring(i, j)
   }
 
+
   private def math1(name: String)(f: Double => Double): ((String, Int), Builtin) =
-    v0(name)(in => one(num(f(requireNumber(in, name)))))
+    fn0(name)(in => num(f(requireNumber(in, name))))
+
+  /** C `round`: half away from zero. */
+  private def roundHalfAway(d: Double): Double = {
+    val t = if (d < 0) math.ceil(d) else math.floor(d)
+    if (math.abs(d - t) >= 0.5) t + math.signum(d) else t
+  }
 
   /** sort key per jq's sort_by/group_by: the ARRAY of all outputs of f */
-  private def keyOf(f: JqExpr, v: JsonNode, env: Env): JsonNode = f match {
-    case JqExpr.Strict(x) => arr(Interp.evalOne(x, v, env) :: Nil) // streamless
-    case _ => arr(eval(f, v, env).toList)
-  }
+  private def keyOf(f: Node, v: JsonNode, fr: Frame): JsonNode = arr(collect(f, v, fr))
 
   // -- C-math helpers (libm functions the JDK lacks) -----------------------
 
@@ -254,32 +320,46 @@ object Builtins {
       if (n.isTextual) Some(n.textValue() -> c.get("string")) else None
     }.toList)
 
+
   /** sub/gsub: replacement expr evaluated with `.` = named-captures object;
     * multiple replacement outputs → cartesian across matches (jq semantics). */
-  private def substitute(in: JsonNode, re: JsonNode, repl: JqExpr, flags: String,
-                         env: Env): S = {
+  private def substitute(in: JsonNode, re: JsonNode, repl: Node, flags: String, fr: Frame, k: Sink): Unit = {
     val s = requireString(in, "matched")
     val global = flags.contains('g')
     val (p, names) = compileRegex(re.textValue(), flags)
 
-    def go(from: Int, acc: String): S = {
+    // the next match at or after `from`: (text before it, captures, end, zero-width char)
+    def next(from: Int): (String, JsonNode, Int, String) = {
       val m = p.matcher(s)
       if (from <= s.length && m.find(from)) {
-        val capObj = {
-          val mo = matchObj(s, m, names)
-          captureObj(mo)
-        }
-        val pre = s.substring(from, m.start)
         val matchEnd = if (m.end == m.start) m.end + 1 else m.end // zero-width guard
-        eval(repl, capObj, env).flatMap { r =>
-          val rs = requireString(r, "used as a replacement")
-          val zw = if (m.end == m.start && m.end < s.length) s.substring(m.end, m.end + 1) else ""
-          if (global) go(matchEnd, acc + pre + rs + zw)
-          else one(text(acc + pre + rs + zw + s.substring(matchEnd)))
-        }
-      } else one(text(acc + s.substring(math.min(from, s.length))))
+        val zw = if (m.end == m.start && m.end < s.length) s.substring(m.end, m.end + 1) else ""
+        (s.substring(from, m.start), captureObj(matchObj(s, m, names)), matchEnd, zw)
+      } else null
     }
-    go(0, "")
+    def rest(from: Int): String = s.substring(math.min(from, s.length))
+
+    if (repl.single) { // one replacement per match: a loop
+      val sb = new java.lang.StringBuilder
+      var from = 0
+      var m = next(from)
+      while (m != null) {
+        sb.append(m._1).append(requireString(repl.value(m._2, fr), "used as a replacement")).append(m._4)
+        from = m._3
+        m = if (global) next(from) else null
+      }
+      k(text(sb.append(rest(from)).toString))
+    } else {
+      def go(from: Int, acc: String): Unit = next(from) match {
+        case null => k(text(acc + rest(from)))
+        case (pre, caps, end, zw) =>
+          repl.run(caps, fr, r => {
+            val out = acc + pre + requireString(r, "used as a replacement") + zw
+            if (global) go(end, out) else k(text(out + rest(end)))
+          })
+      }
+      go(0, "")
+    }
   }
 
   // -- formats ------------------------------------------------------------
@@ -371,74 +451,55 @@ object Builtins {
 
   // -- the table ----------------------------------------------------------
 
-  val table: Map[(String, Int), Builtin] = Map[(String, Int), Builtin](
-    ("empty", 0) -> { (_, _, _) => JqStream.empty },
-    ("error", 0) -> { (_, in, _) => throw new JqError(in) },
-    v1("error")((_, msg) => throw new JqError(msg)),
-    v0("not")(in => one(bool(!truthy(in)))),
+  private[jq] val table: Map[(String, Int), Builtin] = Map[(String, Int), Builtin](
+    gen("empty", 0, (_, _, _, _) => ())((_, _, _, _) => ()),
+    fn0("error")(in => throw new JqError(in)),
+    fn1("error")((_, msg) => throw new JqError(msg)),
+    fn0("not")(in => bool(!truthy(in))),
 
-    v0("length") { in =>
-      one(
-        if (in.isNull) num(0)
-        else if (in.isTextual) num(in.textValue().codePointCount(0, in.textValue().length))
-        else if (in.isArray || in.isObject) num(in.size())
-        else if (in.isNumber) num(math.abs(in.doubleValue()))
-        else throw JqError.of(s"boolean${preview(in)} has no length"))
+    fn0("length") { in =>
+      if (in.isNull) num(0)
+      else if (in.isTextual) num(in.textValue().codePointCount(0, in.textValue().length))
+      else if (in.isArray || in.isObject) num(in.size())
+      else if (in.isNumber) num(math.abs(in.doubleValue()))
+      else throw JqError.of(s"boolean${preview(in)} has no length")
     },
-    v0("utf8bytelength")(in =>
-      one(num(requireString(in, "counted").getBytes(StandardCharsets.UTF_8).length))),
+    fn0("utf8bytelength")(in => num(requireString(in, "counted").getBytes(StandardCharsets.UTF_8).length)),
 
-    v0("keys")(in => one(keysOf(in, sorted = true))),
-    v0("keys_unsorted")(in => one(keysOf(in, sorted = false))),
+    fn0("keys")(in => keysOf(in, sorted = true)),
+    fn0("keys_unsorted")(in => keysOf(in, sorted = false)),
 
-    v1("has") { (in, k) =>
-      if (in.isObject) one(bool(k.isTextual && in.has(k.textValue())))
-      else if (in.isArray) one(bool(k.isNumber && k.doubleValue() >= 0 && k.doubleValue() < in.size()))
+    fn1("has") { (in, k) =>
+      if (in.isObject) bool(k.isTextual && in.has(k.textValue()))
+      else if (in.isArray) bool(k.isNumber && k.doubleValue() >= 0 && k.doubleValue() < in.size())
       else throw JqError.of(s"Cannot check whether ${Json.typeName(in)} has a key")
     },
-    v1("in") { (in, c) =>
-      if (c.isObject) one(bool(in.isTextual && c.has(in.textValue())))
-      else if (c.isArray) one(bool(in.isNumber && in.doubleValue() >= 0 && in.doubleValue() < c.size()))
+    fn1("in") { (in, c) =>
+      if (c.isObject) bool(in.isTextual && c.has(in.textValue()))
+      else if (c.isArray) bool(in.isNumber && in.doubleValue() >= 0 && in.doubleValue() < c.size())
       else throw JqError.of(s"Cannot check whether ${Json.typeName(c)} has a key")
     },
-    v1("contains")((in, b) => one(bool(containsRec(in, b)))),
-    v1("inside")((in, b) => one(bool(containsRec(b, in)))),
+    fn1("contains")((in, b) => bool(containsRec(in, b))),
+    fn1("inside")((in, b) => bool(containsRec(b, in))),
 
-    v0("add") { in =>
-      one(elems(in, "added").foldLeft(NullN: JsonNode)(Interp.add))
-    },
+    fn0("add")(in => elems(in, "added").foldLeft(NullN: JsonNode)(Values.add)),
 
-    v0("any")(in => one(bool(elems(in, "examined").exists(truthy)))),
-    v0("all")(in => one(bool(elems(in, "examined").forall(truthy)))),
-    ("any", 1) -> { (args, in, env) =>
-      one(bool(Json.elements(in).exists(v => eval(args.head, v, env).exists(truthy))))
-    },
-    ("all", 1) -> { (args, in, env) =>
-      one(bool(Json.elements(in).forall(v => eval(args.head, v, env).forall(truthy))))
-    },
-    ("any", 2) -> { (args, in, env) =>
-      one(bool(eval(args(0), in, env).exists(v => eval(args(1), v, env).exists(truthy))))
-    },
-    ("all", 2) -> { (args, in, env) =>
-      one(bool(eval(args(0), in, env).forall(v => eval(args(1), v, env).forall(truthy))))
-    },
+    fn0("any")(in => bool(elems(in, "examined").exists(truthy))),
+    fn0("all")(in => bool(elems(in, "examined").forall(truthy))),
+    one("any", 1)((a, in, fr) => bool(Json.elements(in).exists(v => exists(a(0), v, fr, truthy)))),
+    one("all", 1)((a, in, fr) => bool(Json.elements(in).forall(v => !exists(a(0), v, fr, x => !truthy(x))))),
+    one("any", 2)((a, in, fr) => bool(exists(a(0), in, fr, v => exists(a(1), v, fr, truthy)))),
+    one("all", 2)((a, in, fr) => bool(!exists(a(0), in, fr, v => exists(a(1), v, fr, x => !truthy(x))))),
 
-    ("range", 1) -> { (args, in, env) =>
-      eval(args.head, in, env).flatMap(hi => rangeStream(0, requireNumber(hi, "range"), 1))
-    },
-    ("range", 2) -> { (args, in, env) =>
-      eval(args(0), in, env).flatMap(lo => eval(args(1), in, env).flatMap(hi =>
-        rangeStream(requireNumber(lo, "range"), requireNumber(hi, "range"), 1)))
-    },
-    ("range", 3) -> { (args, in, env) =>
-      eval(args(0), in, env).flatMap(lo => eval(args(1), in, env).flatMap(hi =>
-        eval(args(2), in, env).flatMap(st =>
-          rangeStream(requireNumber(lo, "range"), requireNumber(hi, "range"), requireNumber(st, "range")))))
-    },
+    gen("range", 1)((a, in, fr, k) => a(0).run(in, fr, hi => range(0, requireNumber(hi, "range"), 1, k))),
+    gen("range", 2)((a, in, fr, k) => a(0).run(in, fr, lo => a(1).run(in, fr, hi =>
+      range(requireNumber(lo, "range"), requireNumber(hi, "range"), 1, k)))),
+    gen("range", 3)((a, in, fr, k) => a(0).run(in, fr, lo => a(1).run(in, fr, hi => a(2).run(in, fr, st =>
+      range(requireNumber(lo, "range"), requireNumber(hi, "range"), requireNumber(st, "range"), k))))),
 
     math1("floor")(math.floor),
     math1("ceil")(math.ceil),
-    math1("round")(d => math.round(d).toDouble),
+    math1("round")(roundHalfAway),
     math1("sqrt")(math.sqrt),
     math1("fabs")(math.abs),
     math1("log")(math.log),
@@ -447,27 +508,21 @@ object Builtins {
     math1("exp")(math.exp),
     math1("exp2")(d => math.pow(2, d)),
     math1("exp10")(d => math.pow(10, d)),
-    v2("pow")((_, a, b) => one(num(math.pow(requireNumber(a, "pow"), requireNumber(b, "pow"))))),
-    v0("infinite")(_ => one(F.numberNode(Double.PositiveInfinity))),
-    v0("nan")(_ => one(F.numberNode(Double.NaN))),
-    v0("isnan")(in => one(bool(in.isNumber && in.doubleValue().isNaN))),
-    v0("isinfinite")(in => one(bool(in.isNumber && in.doubleValue().isInfinite))),
+    fn2("pow")((_, a, b) => num(math.pow(requireNumber(a, "pow"), requireNumber(b, "pow")))),
+    fn0("infinite")(_ => F.numberNode(Double.PositiveInfinity)),
+    fn0("nan")(_ => F.numberNode(Double.NaN)),
+    fn0("isnan")(in => bool(in.isNumber && in.doubleValue().isNaN)),
+    fn0("isinfinite")(in => bool(in.isNumber && in.doubleValue().isInfinite)),
 
-    v0("min")(in => one(elems(in, "min-ed").minOption(ordering).getOrElse(NullN))),
-    v0("max")(in => one(elems(in, "max-ed").maxOption(ordering).getOrElse(NullN))),
-    ("min_by", 1) -> { (args, in, env) =>
-      one(elems(in, "min-ed").minByOption(keyOf(args.head, _, env))(ordering).getOrElse(NullN))
-    },
-    ("max_by", 1) -> { (args, in, env) =>
-      one(elems(in, "max-ed").maxByOption(keyOf(args.head, _, env))(ordering).getOrElse(NullN))
-    },
+    fn0("min")(in => elems(in, "min-ed").minOption(ordering).getOrElse(NullN)),
+    fn0("max")(in => elems(in, "max-ed").maxOption(ordering).getOrElse(NullN)),
+    one("min_by", 1)((a, in, fr) => elems(in, "min-ed").minByOption(keyOf(a(0), _, fr))(ordering).getOrElse(NullN)),
+    one("max_by", 1)((a, in, fr) => elems(in, "max-ed").maxByOption(keyOf(a(0), _, fr))(ordering).getOrElse(NullN)),
 
-    v0("sort")(in => one(arr(elems(in, "sorted").sorted(ordering)))),
-    ("sort_by", 1) -> { (args, in, env) =>
-      one(arr(elems(in, "sorted").sortBy(keyOf(args.head, _, env))(ordering)))
-    },
-    ("group_by", 1) -> { (args, in, env) =>
-      val keyed = elems(in, "grouped").map(v => (keyOf(args.head, v, env), v))
+    fn0("sort")(in => arr(elems(in, "sorted").sorted(ordering))),
+    one("sort_by", 1)((a, in, fr) => arr(elems(in, "sorted").sortBy(keyOf(a(0), _, fr))(ordering))),
+    one("group_by", 1) { (a, in, fr) =>
+      val keyed = elems(in, "grouped").map(v => (keyOf(a(0), v, fr), v))
       val sorted = keyed.sortBy(_._1)(ordering)
       val groups = List.newBuilder[JsonNode]
       var cur = List.newBuilder[JsonNode]
@@ -480,107 +535,93 @@ object Builtins {
         }
       }
       curKey.foreach(_ => groups += arr(cur.result()))
-      one(arr(groups.result()))
+      arr(groups.result())
     },
-    v0("unique") { in =>
-      one(arr(dedupSorted(elems(in, "sorted").sorted(ordering))))
-    },
-    ("unique_by", 1) -> { (args, in, env) =>
-      val keyed = elems(in, "sorted").map(v => (keyOf(args.head, v, env), v))
-        .sortBy(_._1)(ordering)
+    fn0("unique")(in => arr(dedupSorted(elems(in, "sorted").sorted(ordering)))),
+    one("unique_by", 1) { (a, in, fr) =>
+      val keyed = elems(in, "sorted").map(v => (keyOf(a(0), v, fr), v)).sortBy(_._1)(ordering)
       val out = List.newBuilder[JsonNode]
       var last: Option[JsonNode] = None
       keyed.foreach { case (k, v) =>
         if (!last.exists(Json.eq(_, k))) { out += v; last = Some(k) }
       }
-      one(arr(out.result()))
+      arr(out.result())
     },
 
-    v0("reverse") { in =>
-      if (in.isNull) one(arr(Nil))
+    fn0("reverse") { in =>
+      if (in.isNull) arr(Nil)
       else if (in.isTextual) {
         val cps = in.textValue().codePoints().toArray.reverse
-        one(text(new String(cps, 0, cps.length)))
-      } else one(arr(elems(in, "reversed").reverse))
+        text(new String(cps, 0, cps.length))
+      } else arr(elems(in, "reversed").reverse)
     },
 
-    v0("flatten")(in => one(arr(flattenRec(elems(in, "flattened"), Int.MaxValue)))),
-    ("flatten", 1) -> { (args, in, env) =>
-      eval(args.head, in, env).map { d =>
-        val depth = requireNumber(d, "flatten").toInt
-        if (depth < 0) throw JqError.of("flatten depth must not be negative")
-        arr(flattenRec(elems(in, "flattened"), depth))
-      }
+    fn0("flatten")(in => arr(flattenRec(elems(in, "flattened"), Int.MaxValue))),
+    fn1("flatten") { (in, d) =>
+      val depth = requireNumber(d, "flatten").toInt
+      if (depth < 0) throw JqError.of("flatten depth must not be negative")
+      arr(flattenRec(elems(in, "flattened"), depth))
     },
 
-    v1("join") { (in, sepN) =>
+    fn1("join") { (in, sepN) =>
       val sep = requireString(sepN, "joined")
-      one(text(elems(in, "joined").map { e =>
+      text(elems(in, "joined").map { e =>
         if (e.isNull) ""
         else if (e.isTextual) e.textValue()
         else if (e.isNumber || e.isBoolean) e.toString
         else throw JqError.of(s"Cannot join with ${Json.typeName(e)}")
-      }.mkString(sep)))
+      }.mkString(sep))
     },
 
-    v1("split") { (in, sepN) =>
-      one(arr(Interp.splitLiteral(
-        requireString(in, "split"), requireString(sepN, "split")).map(text)))
-    },
-    v2("split") { (in, reN, flagsN) =>
+    fn1("split")((in, sepN) =>
+      arr(splitLiteral(requireString(in, "split"), requireString(sepN, "split")).map(text))),
+    fn2("split") { (in, reN, flagsN) =>
       val s = requireString(in, "split")
       val flags = if (flagsN.isNull) "" else requireString(flagsN, "a modifier")
-      one(arr(regexSplit(s, requireString(reN, "split"), flags).map(text)))
+      arr(regexSplit(s, requireString(reN, "split"), flags).map(text))
     },
-    v1("splits")((in, reN) =>
-      JqStream.from(regexSplit(requireString(in, "split"), requireString(reN, "split"), "").map(text))),
-    v2("splits") { (in, reN, flagsN) =>
+    gen("splits", 1)((a, in, fr, k) => a(0).run(in, fr, reN =>
+      regexSplit(requireString(in, "split"), requireString(reN, "split"), "").map(text).foreach(k))),
+    gen("splits", 2)((a, in, fr, k) => a(0).run(in, fr, reN => a(1).run(in, fr, flagsN => {
       val flags = if (flagsN.isNull) "" else requireString(flagsN, "a modifier")
-      JqStream.from(regexSplit(requireString(in, "split"), requireString(reN, "split"), flags).map(text))
-    },
+      regexSplit(requireString(in, "split"), requireString(reN, "split"), flags).map(text).foreach(k)
+    }))),
 
-    v1("ltrimstr") { (in, p) =>
-      one(
-        if (in.isTextual && p.isTextual && in.textValue().startsWith(p.textValue()))
-          text(in.textValue().substring(p.textValue().length))
-        else in)
+    fn1("ltrimstr") { (in, p) =>
+      if (in.isTextual && p.isTextual && in.textValue().startsWith(p.textValue()))
+        text(in.textValue().substring(p.textValue().length))
+      else in
     },
-    v1("rtrimstr") { (in, p) =>
-      one(
-        if (in.isTextual && p.isTextual && in.textValue().endsWith(p.textValue()) && p.textValue().nonEmpty)
-          text(in.textValue().substring(0, in.textValue().length - p.textValue().length))
-        else in)
+    fn1("rtrimstr") { (in, p) =>
+      if (in.isTextual && p.isTextual && in.textValue().endsWith(p.textValue()) && p.textValue().nonEmpty)
+        text(in.textValue().substring(0, in.textValue().length - p.textValue().length))
+      else in
     },
     // jq 1.7 additions: abs / toarray / pick, and the 1.7.1 trim trio
     // (ASCII isspace set, matching jq's C trim — NOT java.lang.String.trim's
     // "all controls <= U+0020" rule)
-    v0("abs")(in => one(num(math.abs(requireNumber(in, "abs"))))),
-    v0("toarray")(in => one(if (in.isArray) in else arr(List(in)))),
-    ("pick", 1) -> { (args, in, env) =>
-      // def pick(pathexps): . as $top
-      //   | reduce path(pathexps) as $p (null; setpath($p; $top | getpath($p)));
-      one(Interp.evalPaths(args.head, in, env).foldLeft(NullN: JsonNode) {
-        (acc, p) => Interp.setPath(acc, p, Interp.getPath(in, p))
-      })
-    },
-    v0("trim")(in => one(text(trimWs(requireString(in, "trimmed"), left = true, right = true)))),
-    v0("ltrim")(in => one(text(trimWs(requireString(in, "trimmed"), left = true, right = false)))),
-    v0("rtrim")(in => one(text(trimWs(requireString(in, "trimmed"), left = false, right = true)))),
+    fn0("abs")(in => num(math.abs(requireNumber(in, "abs")))),
+    fn0("toarray")(in => if (in.isArray) in else arr(List(in))),
+    // def pick(pathexps): . as $top
+    //   | reduce path(pathexps) as $p (null; setpath($p; $top | getpath($p)));
+    one("pick", 1)((a, in, fr) =>
+      pathsOf(a(0), in, fr).foldLeft(NullN: JsonNode)((acc, p) => setPath(acc, p, getPath(in, p)))),
+    fn0("trim")(in => text(trimWs(requireString(in, "trimmed"), left = true, right = true))),
+    fn0("ltrim")(in => text(trimWs(requireString(in, "trimmed"), left = true, right = false))),
+    fn0("rtrim")(in => text(trimWs(requireString(in, "trimmed"), left = false, right = true))),
     // number-representation capability probes (jq 1.7): this engine
     // canonicalizes to long/double (Json.num), so neither literal nor
     // decimal representations survive — both honestly false
-    ("have_literal_numbers", 0) -> { (_, _, _) => one(FalseN) },
-    ("have_decimal_numbers", 0) -> { (_, _, _) => one(FalseN) },
+    fn0("have_literal_numbers")(_ => FalseN),
+    fn0("have_decimal_numbers")(_ => FalseN),
 
-    v1("startswith")((in, p) =>
-      one(bool(requireString(in, "checked").startsWith(requireString(p, "checked"))))),
-    v1("endswith")((in, p) =>
-      one(bool(requireString(in, "checked").endsWith(requireString(p, "checked"))))),
+    fn1("startswith")((in, p) => bool(requireString(in, "checked").startsWith(requireString(p, "checked")))),
+    fn1("endswith")((in, p) => bool(requireString(in, "checked").endsWith(requireString(p, "checked")))),
 
-    v0("ascii_downcase")(in =>
-      one(text(requireString(in, "downcased").map(c => if (c >= 'A' && c <= 'Z') (c + 32).toChar else c)))),
-    v0("ascii_upcase")(in =>
-      one(text(requireString(in, "upcased").map(c => if (c >= 'a' && c <= 'z') (c - 32).toChar else c)))),
+    fn0("ascii_downcase")(in =>
+      text(requireString(in, "downcased").map(c => if (c >= 'A' && c <= 'Z') (c + 32).toChar else c))),
+    fn0("ascii_upcase")(in =>
+      text(requireString(in, "upcased").map(c => if (c >= 'a' && c <= 'z') (c - 32).toChar else c))),
 
     // uriparse — the deterministic slice of the reference classpath's
     // jackson-jq-extra module (reference pom.xml:77 ships it, so its
@@ -588,7 +629,7 @@ object Builtins {
     // RFC 3986 generic syntax via java.net.URI; absent components read
     // null (port -1 → null). The same module's uuid/random are §5
     // NON-GOALS — a deterministic engine cannot ship entropy builtins.
-    v0("uriparse") { in =>
+    fn0("uriparse") { in =>
       val s = requireString(in, "parsed as a URI")
       val u =
         try new java.net.URI(s)
@@ -597,7 +638,7 @@ object Builtins {
             throw JqError.of(s"uriparse: invalid URI${preview(in)}: ${e.getReason}")
         }
       def t(v: String): JsonNode = if (v == null) NullN else text(v)
-      one(obj(List(
+      obj(List(
         "scheme" -> t(u.getScheme),
         "authority" -> t(u.getAuthority),
         "userinfo" -> t(u.getUserInfo),
@@ -605,335 +646,257 @@ object Builtins {
         "port" -> (if (u.getPort < 0) NullN else num(u.getPort)),
         "path" -> t(u.getPath),
         "query" -> t(u.getQuery),
-        "fragment" -> t(u.getFragment))))
+        "fragment" -> t(u.getFragment)))
     },
 
-    v0("explode") { in =>
-      one(arr(requireString(in, "exploded").codePoints().toArray.toSeq.map(cp => num(cp))))
-    },
-    v0("implode") { in =>
+    fn0("explode")(in => arr(requireString(in, "exploded").codePoints().toArray.toSeq.map(cp => num(cp)))),
+    fn0("implode") { in =>
       val cps = elems(in, "imploded").map(e => requireNumber(e, "implode").toInt).toArray
-      one(text(new String(cps, 0, cps.length)))
+      text(new String(cps, 0, cps.length))
     },
 
-    v0("tostring")(in => one(text(render(in)))),
-    v0("tonumber") { in =>
-      if (in.isNumber) one(in)
+    fn0("tostring")(in => text(render(in))),
+    fn0("tonumber") { in =>
+      if (in.isNumber) in
       else if (in.isTextual) {
-        try one(num(in.textValue().trim.toDouble))
+        try num(in.textValue().trim.toDouble)
         catch { case _: NumberFormatException =>
           throw JqError.of(s"Cannot parse '${in.textValue()}' as number") }
       } else throw JqError.of(s"${Json.typeName(in)}${preview(in)} cannot be parsed as a number")
     },
-    v0("tojson")(in => one(text(serialize(in)))),
-    v0("fromjson") { in =>
-      one(Jq.parseJson(requireString(in, "parsed as JSON")))
-    },
-    v0("type")(in => one(text(Json.typeName(in)))),
+    fn0("tojson")(in => text(serialize(in))),
+    fn0("fromjson")(in => Jq.parseJson(requireString(in, "parsed as JSON"))),
+    fn0("type")(in => text(Json.typeName(in))),
 
     // type-filter builtins
-    v0("arrays")(in => if (in.isArray) one(in) else JqStream.empty),
-    v0("objects")(in => if (in.isObject) one(in) else JqStream.empty),
-    v0("iterables")(in => if (in.isArray || in.isObject) one(in) else JqStream.empty),
-    v0("scalars")(in => if (!in.isArray && !in.isObject) one(in) else JqStream.empty),
-    v0("booleans")(in => if (in.isBoolean) one(in) else JqStream.empty),
-    v0("numbers")(in => if (in.isNumber) one(in) else JqStream.empty),
-    v0("strings")(in => if (in.isTextual) one(in) else JqStream.empty),
-    v0("nulls")(in => if (in.isNull) one(in) else JqStream.empty),
-    v0("values")(in => if (!in.isNull) one(in) else JqStream.empty),
+    filter0("arrays")(_.isArray),
+    filter0("objects")(_.isObject),
+    filter0("iterables")(in => in.isArray || in.isObject),
+    filter0("scalars")(in => !in.isArray && !in.isObject),
+    filter0("booleans")(_.isBoolean),
+    filter0("numbers")(_.isNumber),
+    filter0("strings")(_.isTextual),
+    filter0("nulls")(_.isNull),
+    filter0("values")(!_.isNull),
 
-    v0("first")(in => one(Interp.indexAccess(in, num(0)))),
-    v0("last")(in => one(Interp.indexAccess(in, num(-1)))),
-    ("first", 1) -> { (args, in, env) => eval(args.head, in, env).take(1) },
-    ("last", 1) -> { (args, in, env) => JqStream.from(eval(args.head, in, env).lastOption) },
-    ("nth", 1) -> { (args, in, env) =>
-      eval(args.head, in, env).map(n => Interp.indexAccess(in, n))
+    fn0("first")(in => indexAccess(in, num(0))),
+    fn0("last")(in => indexAccess(in, num(-1))),
+    gen("first", 1, (a, root, fr, k) => {
+      var hit: Path = null
+      try a(0).paths(root, fr, p => { hit = p; throw Stop }) catch { case Stop if hit != null => () }
+      if (hit != null) k(hit)
+    })((a, in, fr, k) => { val v = find(a(0), in, fr); if (v != null) k(v) }),
+    gen("last", 1, (a, root, fr, k) => {
+      var hit: Path = null
+      a(0).paths(root, fr, hit = _)
+      if (hit != null) k(hit)
+    })((a, in, fr, k) => { val v = last(a(0), in, fr); if (v != null) k(v) }),
+    fn1("nth")((in, n) => indexAccess(in, n)),
+    gen("nth", 2)((a, in, fr, k) => a(0).run(in, fr, n => {
+      val i = requireNumber(n, "nth").toInt
+      if (i < 0) throw JqError.of("Out of bounds negative array index")
+      var seen = -1
+      val v = find(a(1), in, fr, _ => { seen += 1; seen == i })
+      if (v != null) k(v)
+    })),
+    gen("limit", 2, (a, root, fr, k) => {
+      val n = find(a(0), root, fr)
+      if (n != null) take(n.intValue(), k)(a(1).paths(root, fr, _))
+    })((a, in, fr, k) => a(0).run(in, fr, n => take(requireNumber(n, "limit").toInt, k)(a(1).run(in, fr, _)))),
+    gen("until", 2) { (a, in, fr, k) =>
+      var v = in
+      var c = find(a(0), v, fr)
+      while (c != null && !truthy(c)) {
+        v = find(a(1), v, fr)
+        c = if (v == null) null else find(a(0), v, fr)
+      }
+      if (c != null) k(v)
     },
-    ("nth", 2) -> { (args, in, env) =>
-      eval(args(0), in, env).flatMap { n =>
-        val i = requireNumber(n, "nth").toInt
-        if (i < 0) throw JqError.of("Out of bounds negative array index")
-        eval(args(1), in, env).slice(i, i + 1)
+    gen("while", 2) { (a, in, fr, k) =>
+      var v = in
+      while (v != null && { val c = find(a(0), v, fr); c != null && truthy(c) }) {
+        k(v)
+        v = find(a(1), v, fr)
       }
     },
-    ("limit", 2) -> { (args, in, env) =>
-      eval(args(0), in, env).flatMap { n =>
-        val k = requireNumber(n, "limit").toInt
-        if (k <= 0) JqStream.empty else eval(args(1), in, env).take(k)
+    gen("repeat", 1) { (a, in, fr, k) =>
+      val f = a(0)
+      if (f.single) { var v = in; while (true) { v = f.value(v, fr); k(v) } }
+      else {
+        def go(v: JsonNode): Unit = nested(() => f.run(v, fr, nv => { k(nv); go(nv) }))
+        go(in)
       }
     },
-    ("until", 2) -> { (args, in, env) =>
-      def go(v: JsonNode): S =
-        eval(args(0), v, env).take(1).flatMap { c =>
-          if (truthy(c)) one(v) else eval(args(1), v, env).take(1).flatMap(go)
-        }
-      go(in)
+    gen("recurse", 0, (_, root, _, k) => allPaths(root, Vector.empty, (p, _) => k(p)))((_, in, _, k) => recurseAll(in, k)),
+    gen("recurse", 1) { (a, in, fr, k) =>
+      val f = a(0)
+      if (f.single) { var v = in; while (true) { k(v); v = f.value(v, fr) } }
+      else {
+        def go(v: JsonNode): Unit = { k(v); nested(() => f.run(v, fr, go)) }
+        go(in)
+      }
     },
-    ("while", 2) -> { (args, in, env) =>
-      def go(v: JsonNode): S =
-        eval(args(0), v, env).take(1).flatMap { c =>
-          if (truthy(c)) v #:: eval(args(1), v, env).take(1).flatMap(go)
-          else JqStream.empty
-        }
-      go(in)
-    },
-    ("repeat", 1) -> { (args, in, env) =>
-      def go(v: JsonNode): S = eval(args.head, v, env).flatMap(nv => nv #:: go(nv))
-      go(in)
-    },
-    v0("recurse")(Interp.recurseAll),
-    ("recurse", 1) -> { (args, in, env) =>
-      def go(v: JsonNode): S = v #:: eval(args.head, v, env).flatMap(go)
-      go(in)
-    },
-    ("recurse", 2) -> { (args, in, env) =>
-      def go(v: JsonNode): S =
-        v #:: eval(args(0), v, env).filter(c => eval(args(1), c, env).exists(truthy)).flatMap(go)
+    gen("recurse", 2) { (a, in, fr, k) =>
+      def go(v: JsonNode): Unit = { k(v); nested(() => a(0).run(v, fr, c => if (exists(a(1), c, fr, truthy)) go(c))) }
       go(in)
     },
 
-    ("map", 1) -> { (args, in, env) =>
-      args.head match {
-        // strict body: one output per element, evaluated without streams
-        case JqExpr.Strict(x) =>
-          one(arr(Json.elements(requireArray(in, "mapped")).toList
-            .map(v => Interp.evalOne(x, v, env))))
-        case f =>
-          one(arr(Json.elements(requireArray(in, "mapped")).toList
-            .flatMap(v => eval(f, v, env).toList)))
-      }
+    one("map", 1) { (a, in, fr) =>
+      val out = F.arrayNode()
+      Json.elements(requireArray(in, "mapped")).foreach(v => a(0).run(v, fr, x => { out.add(x); () }))
+      out
     },
-    ("map_values", 1) -> { (args, in, env) =>
+    one("map_values", 1) { (a, in, fr) =>
       if (in.isObject) {
         val out = F.objectNode()
         Json.fields(in).foreach { case (k, v) =>
-          eval(args.head, v, env).headOption.foreach(nv => out.set[JsonNode](k, nv))
+          val nv = find(a(0), v, fr)
+          if (nv != null) out.set[JsonNode](k, nv)
         }
-        one(out)
-      } else if (in.isArray) {
-        one(arr(Json.elements(in).toList.flatMap(v => eval(args.head, v, env).take(1).toList)))
-      } else throw JqError.of(s"Cannot iterate over ${Json.typeName(in)}")
+        out
+      } else if (in.isArray) arr(Json.elements(in).toList.flatMap(v => Option(find(a(0), v, fr))))
+      else throw JqError.of(s"Cannot iterate over ${Json.typeName(in)}")
     },
-    ("select", 1) -> { (args, in, env) =>
-      args.head match {
-        // strict predicate (the overwhelmingly common case): evaluate it
-        // directly — no singleton stream per element
-        case JqExpr.Strict(x) =>
-          if (truthy(Interp.evalOne(x, in, env))) one(in) else JqStream.empty
-        case a =>
-          eval(a, in, env).flatMap(c => if (truthy(c)) one(in) else JqStream.empty)
-      }
+    gen("select", 1, (a, root, fr, k) => a(0).run(root, fr, c => if (truthy(c)) k(Vector.empty))) { (a, in, fr, k) =>
+      val c = a(0)
+      if (c.single) { if (truthy(c.value(in, fr))) k(in) }
+      else c.run(in, fr, v => if (truthy(v)) k(in))
     },
 
-    v0("to_entries")(in => one(toEntries(in))),
-    v0("from_entries")(in => one(fromEntries(in, stringKeys = false))),
-    ("with_entries", 1) -> { (args, in, env) =>
-      // to_entries | map(f) | from_entries, whose keys must be strings in
-      // jq 1.6: an array's index keys are an error there
-      val mapped = Json.elements(toEntries(in)).flatMap(e => eval(args.head, e, env).toList).toList
-      one(fromEntries(arr(mapped), stringKeys = true))
-    },
+    fn0("to_entries")(toEntries),
+    fn0("from_entries")(in => fromEntries(in, stringKeys = false)),
+    // to_entries | map(f) | from_entries, whose keys must be strings in
+    // jq 1.6: an array's index keys are an error there
+    one("with_entries", 1)((a, in, fr) =>
+      fromEntries(arr(Json.elements(toEntries(in)).flatMap(e => collect(a(0), e, fr)).toList), stringKeys = true)),
 
-    ("paths", 0) -> { (_, in, _) =>
-      JqStream.from(Interp.allPaths(in, Vector.empty, leavesOnly = false).drop(1).map(arr)) },
-    ("paths", 1) -> { (args, in, env) =>
-      JqStream.from(Interp.allPaths(in, Vector.empty, leavesOnly = false).drop(1).flatMap { p =>
-        val v = Interp.getPath(in, p)
-        eval(args.head, v, env).filter(truthy).take(1).map(_ => arr(p))
-      })
-    },
+    gen("paths", 0, (_, root, _, k) => allPaths(root, Vector.empty, (p, _) => if (p.nonEmpty) k(p)))(
+      (_, in, _, k) => allPaths(in, Vector.empty, (p, _) => if (p.nonEmpty) k(arr(p)))),
+    gen("paths", 1)((a, in, fr, k) =>
+      allPaths(in, Vector.empty, (p, v) => if (p.nonEmpty && exists(a(0), v, fr, truthy)) k(arr(p)))),
     // jq 1.6: paths(scalars), and select drops null and false leaves
-    v0("leaf_paths")(in =>
-      JqStream.from(Interp.allPaths(in, Vector.empty, leavesOnly = true)
-        .filter(p => p.nonEmpty && truthy(Interp.getPath(in, p))).map(arr))),
-    v1("getpath") { (in, p) =>
-      one(Interp.getPath(in, Json.elements(requireArray(p, "used as a path")).toVector))
-    },
-    v2("setpath") { (in, p, v) =>
-      one(Interp.setPath(in, Json.elements(requireArray(p, "used as a path")).toVector, v))
-    },
-    v1("delpaths") { (in, ps) =>
-      one(Interp.delPaths(in,
-        Json.elements(requireArray(ps, "used as paths")).map(p =>
-          Json.elements(requireArray(p, "used as a path")).toVector.toSeq).toList))
-    },
-    ("del", 1) -> { (args, in, env) =>
-      one(Interp.delPaths(in, Interp.evalPaths(args.head, in, env).map(_.toSeq).toList))
-    },
-    ("path", 1) -> { (args, in, env) =>
-      JqStream.from(Interp.evalPaths(args.head, in, env).map(arr))
-    },
+    gen("leaf_paths", 0)((_, in, _, k) =>
+      allPaths(in, Vector.empty, (p, v) => if (p.nonEmpty && !v.isArray && !v.isObject && truthy(v)) k(arr(p)))),
+    gen("getpath", 1, (a, root, fr, k) => a(0).run(root, fr, pl => {
+      if (!pl.isArray) throw JqError.of("getpath path must be an array")
+      k(Vector.from(Json.elements(pl)))
+    }))((a, in, fr, k) => a(0).run(in, fr, p =>
+      k(getPath(in, Json.elements(requireArray(p, "used as a path")).toVector)))),
+    fn2("setpath")((in, p, v) => setPath(in, Json.elements(requireArray(p, "used as a path")).toVector, v)),
+    fn1("delpaths")((in, ps) => delPaths(in,
+      Json.elements(requireArray(ps, "used as paths")).map(p =>
+        Json.elements(requireArray(p, "used as a path")).toVector.toSeq).toList)),
+    one("del", 1)((a, in, fr) => delPaths(in, pathsOf(a(0), in, fr))),
+    gen("path", 1)((a, in, fr, k) => a(0).paths(in, fr, p => k(arr(p)))),
 
-    ("env", 0) -> { (_, _, _) => one(obj(Nil)) }, // deliberately empty
-    ("$__loc__", 0) -> { (_, _, _) => one(obj(List("file" -> text("<stdin>"), "line" -> num(1)))) },
-    ("builtins", 0) -> { (_, _, _) =>
-      one(arr(table.keys.toList.sortBy(k => (k._1, k._2)).map { case (n, a) => text(s"$n/$a") }))
-    },
-    ("input_line_number", 0) -> { (_, _, _) => one(num(0)) },
+    fn0("env")(_ => obj(Nil)), // deliberately empty
+    fn0("$__loc__")(_ => obj(List("file" -> text("<stdin>"), "line" -> num(1)))),
+    fn0("builtins")(_ => arr(table.keys.toList.sortBy(k => (k._1, k._2)).map { case (n, a) => text(s"$n/$a") })),
+    fn0("input_line_number")(_ => num(0)),
 
-    v0("transpose") { in =>
+    fn0("transpose") { in =>
       val rows = elems(in, "transposed").map(r => elems(r, "transposed"))
       val n = rows.map(_.length).maxOption.getOrElse(0)
-      one(arr((0 until n).map(i => arr(rows.map(r => r.lift(i).getOrElse(NullN))))))
+      arr((0 until n).map(i => arr(rows.map(r => r.lift(i).getOrElse(NullN)))))
     },
 
-    ("walk", 1) -> { (args, in, env) =>
-      def go(v: JsonNode): S = {
+    gen("walk", 1) { (a, in, fr, k) =>
+      // the children keep the first output of their walk
+      def go(v: JsonNode, k: Sink): Unit = {
         val transformed: JsonNode =
-          if (v.isArray) arr(Json.elements(v).toList.flatMap(e => go(e).take(1).toList))
+          if (v.isArray) arr(Json.elements(v).toList.flatMap(e => Option(first(e))))
           else if (v.isObject) {
             val o = F.objectNode()
-            Json.fields(v).foreach { case (k, c) => go(c).headOption.foreach(nc => o.set[JsonNode](k, nc)) }
+            Json.fields(v).foreach { case (key, c) => val nc = first(c); if (nc != null) o.set[JsonNode](key, nc) }
             o
           } else v
-        eval(args.head, transformed, env)
+        a(0).run(transformed, fr, k)
       }
-      go(in)
+      def first(v: JsonNode): JsonNode = {
+        val s = new Finder(always)
+        try go(v, s) catch { case Stop if s.hit != null => () }
+        s.hit
+      }
+      go(in, k)
     },
 
-    v1("indices")((in, i) => one(indicesOf(in, i))),
-    v1("index") { (in, i) =>
-      one(Json.elements(indicesOf(in, i)).nextOption().getOrElse(NullN))
-    },
-    v1("rindex") { (in, i) =>
-      val all = Json.elements(indicesOf(in, i)).toList
-      one(all.lastOption.getOrElse(NullN))
-    },
+    fn1("indices")((in, i) => indicesOf(in, i)),
+    fn1("index")((in, i) => Json.elements(indicesOf(in, i)).nextOption().getOrElse(NullN)),
+    fn1("rindex")((in, i) => Json.elements(indicesOf(in, i)).toList.lastOption.getOrElse(NullN)),
 
     // regex family
-    v1("test")((in, re) => one(bool(allMatches(requireString(in, "matched"), requireString(re, "matched"), "").nonEmpty))),
-    v2("test") { (in, re, fl) =>
+    fn1("test")((in, re) => bool(allMatches(requireString(in, "matched"), requireString(re, "matched"), "").nonEmpty)),
+    fn2("test") { (in, re, fl) =>
       val flags = if (fl.isNull) "" else requireString(fl, "a modifier")
-      one(bool(allMatches(requireString(in, "matched"), requireString(re, "matched"), flags).nonEmpty))
+      bool(allMatches(requireString(in, "matched"), requireString(re, "matched"), flags).nonEmpty)
     },
-    v1("match")((in, re) =>
-      JqStream.from(allMatches(requireString(in, "matched"), requireString(re, "matched"), ""))),
-    v2("match") { (in, re, fl) =>
-      val flags = if (fl.isNull) "" else requireString(fl, "a modifier")
-      JqStream.from(allMatches(requireString(in, "matched"), requireString(re, "matched"), flags))
-    },
-    v1("capture")((in, re) =>
-      JqStream.from(allMatches(requireString(in, "matched"), requireString(re, "matched"), "").map(captureObj))),
-    v2("capture") { (in, re, fl) =>
-      val flags = if (fl.isNull) "" else requireString(fl, "a modifier")
-      JqStream.from(allMatches(requireString(in, "matched"), requireString(re, "matched"), flags).map(captureObj))
-    },
-    v1("scan") { (in, re) =>
-      JqStream.from(allMatches(requireString(in, "matched"), requireString(re, "matched"), "g").map(scanResult))
-    },
-    v2("scan") { (in, re, fl) =>
+    gen("scan", 1)((a, in, fr, k) => a(0).run(in, fr, re =>
+      allMatches(requireString(in, "matched"), requireString(re, "matched"), "g").map(scanResult).foreach(k))),
+    gen("scan", 2)((a, in, fr, k) => a(0).run(in, fr, re => a(1).run(in, fr, fl => {
       val flags = if (fl.isNull) "g" else requireString(fl, "a modifier") + "g"
-      JqStream.from(allMatches(requireString(in, "matched"), requireString(re, "matched"), flags).map(scanResult))
-    },
-    ("sub", 2) -> { (args, in, env) =>
-      eval(args(0), in, env).flatMap(re => substitute(in, re, args(1), "", env))
-    },
-    ("sub", 3) -> { (args, in, env) =>
-      eval(args(0), in, env).flatMap { re =>
-        eval(args(2), in, env).flatMap { fl =>
-          substitute(in, re, args(1), if (fl.isNull) "" else fl.textValue(), env)
-        }
-      }
-    },
-    ("gsub", 2) -> { (args, in, env) =>
-      eval(args(0), in, env).flatMap(re => substitute(in, re, args(1), "g", env))
-    },
-    ("gsub", 3) -> { (args, in, env) =>
-      eval(args(0), in, env).flatMap { re =>
-        eval(args(2), in, env).flatMap { fl =>
-          substitute(in, re, args(1), (if (fl.isNull) "" else fl.textValue()) + "g", env)
-        }
-      }
-    },
+      allMatches(requireString(in, "matched"), requireString(re, "matched"), flags).map(scanResult).foreach(k)
+    }))),
+    gen("sub", 2)((a, in, fr, k) => a(0).run(in, fr, re => substitute(in, re, a(1), "", fr, k))),
+    gen("sub", 3)((a, in, fr, k) => a(0).run(in, fr, re => a(2).run(in, fr, fl =>
+      substitute(in, re, a(1), if (fl.isNull) "" else fl.textValue(), fr, k)))),
+    gen("gsub", 2)((a, in, fr, k) => a(0).run(in, fr, re => substitute(in, re, a(1), "g", fr, k))),
+    gen("gsub", 3)((a, in, fr, k) => a(0).run(in, fr, re => a(2).run(in, fr, fl =>
+      substitute(in, re, a(1), (if (fl.isNull) "" else fl.textValue()) + "g", fr, k)))),
 
     // dates (UTC, seconds since epoch)
-    v0("todate") { in =>
-      val secs = requireNumber(in, "todate").toLong
-      one(text(java.time.format.DateTimeFormatter.ISO_INSTANT.format(
-        java.time.Instant.ofEpochSecond(secs))))
-    },
-    v0("fromdate") { in =>
+    fn0("todate")(in => isoDate(requireNumber(in, "todate"))),
+    fn0("fromdate") { in =>
       val s = requireString(in, "parsed as a date")
-      try one(num(java.time.Instant.parse(s).getEpochSecond.toDouble))
+      try num(java.time.Instant.parse(s).getEpochSecond.toDouble)
       catch { case _: java.time.format.DateTimeParseException =>
         throw JqError.of(s"date \"$s\" does not match format \"%Y-%m-%dT%H:%M:%SZ\"") }
     },
-    v0("date") { in =>
-      val secs = requireNumber(in, "todate").toLong
-      one(text(java.time.format.DateTimeFormatter.ISO_INSTANT.format(
-        java.time.Instant.ofEpochSecond(secs))))
-    },
+    fn0("date")(in => isoDate(requireNumber(in, "todate"))),
 
     // broken-down time: [year, month0, mday, hour, min, sec, wday, yday]
     // wall-clock seconds, like jq's now (jackson-jq ships it). Note for
     // distributed use: evaluated per-row per-executor, NOT constant-folded —
     // rows in one query can observe different times, same as in Hive+jq.
-    ("now", 0) -> { (_, _, _) => one(num(System.currentTimeMillis() / 1000.0)) },
-    v0("gmtime")(in => one(brokenDown(requireNumber(in, "gmtime")))),
-    v0("localtime")(in => one(brokenDown(requireNumber(in, "localtime")))), // UTC session
-    v0("mktime") { in =>
-      one(num(fromBrokenDown(requireArray(in, "mktime-d")).toDouble))
+    fn0("now")(_ => num(System.currentTimeMillis() / 1000.0)),
+    fn0("gmtime")(in => brokenDown(requireNumber(in, "gmtime"))),
+    fn0("localtime")(in => brokenDown(requireNumber(in, "localtime"))), // UTC session
+    fn0("mktime")(in => num(fromBrokenDown(requireArray(in, "mktime-d")).toDouble)),
+    fn1("strftime") { (in, f) =>
+      val secs =
+        if (in.isNumber) in.doubleValue().toLong
+        else fromBrokenDown(requireArray(in, "strftime-d"))
+      text(strftime(secs, requireString(f, "a format")))
     },
-    ("strftime", 1) -> { (args, in, env) =>
-      eval(args.head, in, env).map { f =>
-        val secs =
-          if (in.isNumber) in.doubleValue().toLong
-          else fromBrokenDown(requireArray(in, "strftime-d"))
-        text(strftime(secs, requireString(f, "a format")))
-      }
-    },
-    ("strptime", 1) -> { (args, in, env) =>
-      eval(args.head, in, env).map { f =>
-        brokenDown(strptime(requireString(in, "parsed"), requireString(f, "a format")).toDouble)
-      }
-    },
+    fn1("strptime")((in, f) =>
+      brokenDown(strptime(requireString(in, "parsed"), requireString(f, "a format")).toDouble)),
 
-    v0("combinations") { in =>
-      def go(rem: List[JsonNode]): S = rem match {
-        case Nil => one(arr(Nil))
-        case hd :: tl =>
-          JqStream.from(Json.elements(requireArray(hd, "iterated")).toSeq).flatMap { x =>
-            go(tl).map(restArr => arr(x +: Json.elements(restArr).toSeq))
-          }
-      }
-      go(elems(in, "iterated"))
-    },
-    ("combinations", 1) -> { (args, in, env) =>
-      eval(args.head, in, env).flatMap { nN =>
-        val n = requireNumber(nN, "combinations").toInt
-        table(("combinations", 0))(Nil, arr(List.fill(n)(in)), env)
-      }
-    },
+    gen("combinations", 0)((_, in, _, k) => combinations(elems(in, "iterated"), Nil, k)),
+    gen("combinations", 1)((a, in, fr, k) => a(0).run(in, fr, nN =>
+      combinations(List.fill(requireNumber(nN, "combinations").toInt)(in), Nil, k))),
 
-    ("fromstream", 1) -> { (args, in, env) =>
+    gen("fromstream", 1) { (a, in, fr, k) =>
       // reconstruct values from tostream-style [path, leaf] / [closing-path]
       // events (jq's builtin.jq definition, state-machine form)
       var acc: JsonNode = NullN
-      eval(args.head, in, env).flatMap { ev =>
+      a(0).run(in, fr, ev => {
         val e = requireArray(ev, "streamed")
         val path = Json.elements(e.get(0)).toVector
-        if (e.size() >= 2) {
-          acc = Interp.setPath(acc, path, e.get(1))
-          if (path.isEmpty) { val out = acc; acc = NullN; one(out) }
-          else JqStream.empty
-        } else {
-          if (path.length == 1) { val out = acc; acc = NullN; one(out) }
-          else JqStream.empty
-        }
-      }
+        if (e.size() >= 2) acc = setPath(acc, path, e.get(1))
+        if (if (e.size() >= 2) path.isEmpty else path.length == 1) { val out = acc; acc = NullN; k(out) }
+      })
     },
-    ("truncate_stream", 1) -> { (args, in, env) =>
+    gen("truncate_stream", 1) { (a, in, fr, k) =>
       val depth = requireNumber(in, "truncate_stream").toInt
       // per jq: input number = depth, arg = stream expression (evaluated
       // against the stream's own input... jq passes `.` through; we use null)
-      eval(args.head, NullN, env).flatMap { ev =>
+      a(0).run(NullN, fr, ev => {
         val e = requireArray(ev, "streamed")
         val path = Json.elements(e.get(0)).toVector
         if (path.length > depth) {
           val newPath = arr(path.drop(depth))
-          one(if (e.size() >= 2) arr(List(newPath, e.get(1))) else arr(List(newPath)))
-        } else JqStream.empty
-      }
+          k(if (e.size() >= 2) arr(List(newPath, e.get(1))) else arr(List(newPath)))
+        }
+      })
     },
 
     math1("trunc")(d => if (d < 0) math.ceil(d) else math.floor(d)),
@@ -953,95 +916,92 @@ object Builtins {
     math1("gamma")(lgammaFn),
     math1("lgamma")(lgammaFn),
     math1("tgamma")(tgammaFn),
-    v0("lgamma_r") { in =>
+    fn0("lgamma_r") { in =>
       val d = requireNumber(in, "lgamma_r")
-      one(arr(List(num(lgammaFn(d)), num(if (tgammaFn(d) < 0) -1 else 1))))
+      arr(List(num(lgammaFn(d)), num(if (tgammaFn(d) < 0) -1 else 1)))
     },
-    v0("frexp") { in =>
+    fn0("frexp") { in =>
       val d = requireNumber(in, "frexp")
-      if (d == 0.0 || d.isNaN || d.isInfinite) one(arr(List(num(d), num(0))))
+      if (d == 0.0 || d.isNaN || d.isInfinite) arr(List(num(d), num(0)))
       else {
         val e = unbiasedExponent(d) + 1 // mantissa in [0.5, 1)
-        one(arr(List(num(Math.scalb(d, -e)), num(e))))
+        arr(List(num(Math.scalb(d, -e)), num(e)))
       }
     },
-    v0("modf") { in =>
+    fn0("modf") { in =>
       val d = requireNumber(in, "modf")
       val ip = if (d < 0) math.ceil(d) else math.floor(d)
-      one(arr(List(num(d - ip), num(ip))))
+      arr(List(num(d - ip), num(ip)))
     },
-    v2("drem")((_, x, y) =>
-      one(num(Math.IEEEremainder(requireNumber(x, "drem"), requireNumber(y, "drem"))))),
-    v2("ldexp")((_, m, e) =>
-      one(num(Math.scalb(requireNumber(m, "ldexp"), requireNumber(e, "ldexp").toInt)))),
-    v2("scalb")((_, m, e) =>
-      one(num(Math.scalb(requireNumber(m, "scalb"), requireNumber(e, "scalb").toInt)))),
-    v2("scalbln")((_, m, e) =>
-      one(num(Math.scalb(requireNumber(m, "scalbln"), requireNumber(e, "scalbln").toInt)))),
-    v2("atan2")((_, y, x) => one(num(math.atan2(requireNumber(y, "atan2"), requireNumber(x, "atan2"))))),
-    v0("isnormal") { in =>
-      one(bool(in.isNumber && {
+    fn2("drem")((_, x, y) => num(Math.IEEEremainder(requireNumber(x, "drem"), requireNumber(y, "drem")))),
+    fn2("ldexp")((_, m, e) => num(Math.scalb(requireNumber(m, "ldexp"), requireNumber(e, "ldexp").toInt))),
+    fn2("scalb")((_, m, e) => num(Math.scalb(requireNumber(m, "scalb"), requireNumber(e, "scalb").toInt))),
+    fn2("scalbln")((_, m, e) => num(Math.scalb(requireNumber(m, "scalbln"), requireNumber(e, "scalbln").toInt))),
+    fn2("atan2")((_, y, x) => num(math.atan2(requireNumber(y, "atan2"), requireNumber(x, "atan2")))),
+    fn0("isnormal") { in =>
+      bool(in.isNumber && {
         val d = in.doubleValue()
         !d.isNaN && !d.isInfinite && d != 0.0 && math.abs(d) >= java.lang.Double.MIN_NORMAL
-      }))
+      })
     },
-    ("input_filename", 0) -> { (_, _, _) => one(NullN) },
+    fn0("input_filename")(_ => NullN),
 
     // jq 1.6 uppercase SQL-style helpers (builtin.jq definitions)
-    ("IN", 1) -> { (args, in, env) =>
-      one(bool(eval(args.head, in, env).exists(Json.eq(_, in))))
+    one("IN", 1)((a, in, fr) => bool(exists(a(0), in, fr, Json.eq(_, in)))),
+    gen("IN", 2) { (a, in, fr, k) =>
+      val v = find(a(0), in, fr)
+      if (v != null) k(bool(exists(a(1), in, fr, Json.eq(_, v))))
     },
-    ("IN", 2) -> { (args, in, env) =>
-      eval(args(0), in, env).map(v =>
-        bool(eval(args(1), in, env).exists(Json.eq(_, v)))).take(1)
-    },
-    ("INDEX", 1) -> { (args, in, env) =>
+    one("INDEX", 1) { (a, in, fr) =>
       // INDEX(idx_expr) == INDEX(.[]; idx_expr)
       val out = F.objectNode()
       Json.elements(requireArray(in, "indexed")).foreach { row =>
-        eval(args.head, row, env).headOption.foreach { k =>
-          out.set[JsonNode](render(k), row)
-        }
+        val k = find(a(0), row, fr)
+        if (k != null) out.set[JsonNode](render(k), row)
       }
-      one(out)
+      out
     },
-    ("INDEX", 2) -> { (args, in, env) =>
+    one("INDEX", 2) { (a, in, fr) =>
       val out = F.objectNode()
-      eval(args(0), in, env).foreach { row =>
-        eval(args(1), row, env).headOption.foreach { k =>
-          out.set[JsonNode](render(k), row)
-        }
-      }
-      one(out)
+      a(0).run(in, fr, row => {
+        val k = find(a(1), row, fr)
+        if (k != null) out.set[JsonNode](render(k), row)
+      })
+      out
     },
 
-    v0("tostream") { in =>
+    gen("tostream", 0) { (_, in, _, k) =>
       // [path, leaf] events + closing [path] events (jq tostream)
-      def stream(v: JsonNode, prefix: Vector[JsonNode]): S =
+      def stream(v: JsonNode, prefix: Path): Unit =
         if (v.isArray || v.isObject) {
           val kids = if (v.isArray) (0 until v.size()).map(i => (num(i): JsonNode, v.get(i)))
-                     else Json.fields(v).map { case (k, c) => (text(k): JsonNode, c) }.toSeq
-          if (kids.isEmpty) one(arr(List(arr(prefix), if (v.isArray) arr(Nil) else obj(Nil))))
+                     else Json.fields(v).map { case (key, c) => (text(key): JsonNode, c) }.toSeq
+          if (kids.isEmpty) k(arr(List(arr(prefix), if (v.isArray) arr(Nil) else obj(Nil))))
           else {
-            def inner(rem: Seq[(JsonNode, JsonNode)]): S = rem match {
-              case (k, c) +: rest => JqStream.concat(stream(c, prefix :+ k), () => inner(rest))
-              case _ => one(arr(List(arr(prefix :+ kids.last._1))))
-            }
-            inner(kids)
+            kids.foreach { case (key, c) => stream(c, prefix :+ key) }
+            k(arr(List(arr(prefix :+ kids.last._1))))
           }
-        } else one(arr(List(arr(prefix), v)))
+        } else k(arr(List(arr(prefix), v)))
       stream(in, Vector.empty)
     }
-  ) ++ formatTable ++ upperAliases
+  ) ++ matches("match", identity) ++ matches("capture", captureObj) ++ formatTable ++ upperAliases
+
+  /** `match`/`capture`, each match through `f`. */
+  private def matches(name: String, f: JsonNode => JsonNode): Seq[((String, Int), Builtin)] = Seq(
+    gen(name, 1)((a, in, fr, k) => a(0).run(in, fr, re =>
+      allMatches(requireString(in, "matched"), requireString(re, "matched"), "").map(f).foreach(k))),
+    gen(name, 2)((a, in, fr, k) => a(0).run(in, fr, re => a(1).run(in, fr, fl => {
+      val flags = if (fl.isNull) "" else requireString(fl, "a modifier")
+      allMatches(requireString(in, "matched"), requireString(re, "matched"), flags).map(f).foreach(k)
+    }))))
 
   /** The rest of jq 1.6's uppercase SQL-style family (builtin.jq):
     * `GROUP_BY(f)` is `group_by(f)`, `UNIQUE_BY(f)` is `unique_by(f)`,
     * `ANY`/`ALL` are `any`/`all` — completing the set whose IN/INDEX half
-    * is defined above. Delegation happens at call time, after `table` is
+    * is defined above. Delegation happens at compile time, after `table` is
     * fully constructed. */
   private def upperAliases: Map[(String, Int), Builtin] = {
-    def alias(name: String, arity: Int): Builtin =
-      (args, in, env) => table((name, arity))(args, in, env)
+    def alias(name: String, arity: Int): Builtin = args => table((name, arity))(args)
     Map(
       ("GROUP_BY", 1) -> alias("group_by", 1),
       ("UNIQUE_BY", 1) -> alias("unique_by", 1),
@@ -1051,11 +1011,16 @@ object Builtins {
 
   private def formatTable: Map[(String, Int), Builtin] =
     List("text", "json", "html", "uri", "csv", "tsv", "sh",
-         "base64", "base64d", "base32", "base32d").map { f =>
-      ((s"@$f", 0): (String, Int)) -> { (_: List[JqExpr], in: JsonNode, _: Env) =>
-        one(text(applyFormat(f, in)))
-      }
-    }.toMap
+         "base64", "base64d", "base32", "base32d").map(f => fn0(s"@$f")(in => text(applyFormat(f, in)))).toMap
+
+  private def isoDate(secs: Double): JsonNode =
+    text(java.time.format.DateTimeFormatter.ISO_INSTANT.format(java.time.Instant.ofEpochSecond(secs.toLong)))
+
+  /** Every combination of one element of each array of `rem`, after `prefix`. */
+  private def combinations(rem: List[JsonNode], prefix: List[JsonNode], k: Sink): Unit = rem match {
+    case Nil => k(arr(prefix.reverse))
+    case hd :: tl => Json.elements(requireArray(hd, "iterated")).foreach(x => combinations(tl, x :: prefix, k))
+  }
 
   // -- dates (UTC) --------------------------------------------------------
 
@@ -1222,17 +1187,12 @@ object Builtins {
     else if (a.isTextual && b.isTextual) a.textValue().contains(b.textValue())
     else Json.eq(a, b)
 
-  private def rangeStream(from: Double, to: Double, step: Double): S = {
-    if (step == 0) {
-      if (from < to) JqStream.continually(num(from)) else JqStream.empty
-    } else if (step > 0) {
-      def go(x: Double): S = if (x < to) num(x) #:: go(x + step) else JqStream.empty
-      go(from)
-    } else {
-      def go(x: Double): S = if (x > to) num(x) #:: go(x + step) else JqStream.empty
-      go(from)
+  private def range(from: Double, to: Double, step: Double, k: Sink): Unit =
+    if (step == 0) { if (from < to) { val v = num(from); while (true) k(v) } }
+    else {
+      var x = from
+      while (if (step > 0) x < to else x > to) { k(num(x)); x += step }
     }
-  }
 
   private def regexSplit(s: String, re: String, flags: String): List[String] = {
     val ms = allMatches(s, re, flags + "g")

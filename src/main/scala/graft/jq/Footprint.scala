@@ -23,7 +23,7 @@ import JqExpr._
   * program may observe the whole input; callers fall back to the full
   * parse.
   *
-  * Soundness bar mirrors StrictRewrite: every rule here must OVER-
+  * Soundness bar: every rule here must OVER-
   * approximate (more fields, a deeper-than-needed None, or outer None) —
   * when in doubt, None. Rules are input-relative: sub-expressions evaluated
   * on a DIFFERENT input (a pipe rhs, a reduce update on its accumulator)
@@ -69,7 +69,6 @@ object Footprint {
   /** Constant string value of an index expression, if statically known. */
   private def constString(e: JqExpr): Option[String] = e match {
     case StrInterp(List(Left(s)), None) => Some(s)
-    case Strict(inner) => constString(inner)
     case _ => None
   }
 
@@ -78,11 +77,7 @@ object Footprint {
     * static access on that value observes only the named subfield. */
   private def level1(e: JqExpr): Option[String] = e match {
     case Field(Identity, name, _) => Some(name)
-    case Field(Strict(Identity), name, _) => Some(name)
     case Index(Identity, idx, _) => constString(idx)
-    case Index(Strict(Identity), idx, _) => constString(idx)
-    case Strict(inner) => level1(inner)
-    case Semi(inner) => level1(inner)
     // `.a?` desugars to try(.a) with NO handler: the only value that flows
     // on is input.a (errors are suppressed to empty). A try WITH a handler
     // never qualifies — the handler's value would flow to the access too.
@@ -99,14 +94,12 @@ object Footprint {
     case Identity | RecurseDefault => None
 
     case Field(Identity, name, _) => whole(name)
-    case Field(Strict(Identity), name, _) => whole(name)
     case Field(target, name, _) => level1(target) match {
       case Some(a) => Some(Map(a -> Some(Set(name)))) // .a.b → subfield b of a
       case None => fp(target) // deeper access stays inside the extracted subtree
     }
 
     case Index(Identity, idx, _) => constString(idx).map(k => Map(k -> None))
-    case Index(Strict(Identity), idx, _) => constString(idx).map(k => Map(k -> None))
     case Index(target, idx, _) => (level1(target), constString(idx)) match {
       case (Some(a), Some(k)) => Some(Map(a -> Some(Set(k)))) // .a["b"]
       case _ => union(fp(target), fp(idx)) // idx evaluates on the input
@@ -115,7 +108,7 @@ object Footprint {
     case Slice(target, from, to, _) =>
       unionAll(Seq(fp(target)) ++ from.map(fp) ++ to.map(fp))
 
-    case IterateAll(Identity, _) | IterateAll(Strict(Identity), _) => None
+    case IterateAll(Identity, _) => None
     case IterateAll(target, _) => fp(target)
 
     case Pipe(l, _) => fp(l) // rhs input is the lhs OUTPUT, already extracted
@@ -166,8 +159,5 @@ object Footprint {
     case Format(_) => None // formats the whole input
 
     case Label(_, body) => fp(body)
-
-    case Strict(inner) => fp(inner)
-    case Semi(inner) => fp(inner)
   }
 }

@@ -9,9 +9,11 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Public entry point: compile a jq program once, run it per JSON value.
   *
   * Mirrors the reference flow (JsonQueryUDTF.java:53 compile-once;
-  * :74-107 per-row parse → `$error` binding → apply → stream of outputs).
-  * Instances are immutable and thread-safe; executor threads share the
-  * compiled AST via `compileCached`.
+  * :74-107 per-row parse → `$error` binding → apply → outputs). The program
+  * is compiled once into push-style nodes (see [[Compiler]]); a row runs
+  * with one call that pushes each output to a sink. Instances are
+  * immutable and thread-safe; executor threads share them via
+  * `compileCached`.
   */
 final class CompiledJq private[jq] (val ast: JqExpr) extends Serializable {
 
@@ -21,9 +23,11 @@ final class CompiledJq private[jq] (val ast: JqExpr) extends Serializable {
     * skips every other field's (and subfield's) node construction. */
   @transient lazy val footprint: Option[Footprint.Fields] = Footprint(ast)
 
-  /** Run on an already-parsed JSON value. */
+  @transient private[jq] lazy val program: Compiler.Program = Compiler(ast)
+
+  /** Run on an already-parsed JSON value; `vars` binds `$name`s. */
   def apply(input: JsonNode, vars: Map[String, JsonNode] = Map.empty): Iterator[JsonNode] =
-    Interp.eval(ast, input, Env(vars, Map.empty)).iterator
+    collect(program.run(input, vars, _))
 
   /** Run with the reference's corrupt-input contract: a null or unparsable
     * `jsonText` makes the input `null` and binds `$error` to
@@ -34,26 +38,41 @@ final class CompiledJq private[jq] (val ast: JqExpr) extends Serializable {
     * certifies one — identical error/trailing-garbage/type semantics (the
     * pruned parse still lexes every byte), minus the tree-building cost of
     * untouched fields. */
-  def applyToText(jsonText: String): Iterator[JsonNode] = {
+  def runText(jsonText: String, k: JsonNode => Unit): Unit = {
     val (input, error) = Jq.parseTextWithError(jsonText, footprint)
-    if (error.isNull) Interp.eval(ast, input, wellFormed).iterator
-    else apply(input, Map("error" -> error))
+    program.run(input, error, k)
   }
 
-  /** [[applyToText]] on a Spark string value. [[Utf8Json]] reads it from
-    * its UTF-8 bytes where they lie; a value it refuses is parsed as
-    * `applyToText(json.toString)`, so outputs and `$error` are those of
-    * `applyToText` on every value. */
-  def applyToUtf8(json: UTF8String): Iterator[JsonNode] = {
+  /** [[runText]] on a Spark string value. [[Utf8Json]] reads it from its
+    * UTF-8 bytes where they lie; a value it refuses is parsed as
+    * `runText(json.toString, k)`, so outputs and `$error` are those of
+    * `runText` on every value. */
+  def runUtf8(json: UTF8String, k: JsonNode => Unit): Unit = {
     val input = if (json == null) Json.NullN else reader.read(json)
-    if (input != null) Interp.eval(ast, input, wellFormed).iterator
-    else applyToText(json.toString)
+    if (input != null) program.run(input, Json.NullN, k)
+    else runText(json.toString, k)
+  }
+
+  /** The first output of [[runUtf8]], or null; nothing after it runs. */
+  def firstUtf8(json: UTF8String): JsonNode = {
+    val first = new Finder(Compiler.always)
+    try runUtf8(json, first) catch { case Stop if first.hit != null => () }
+    first.hit
+  }
+
+  /** The outputs of [[runText]]. */
+  def applyToText(jsonText: String): Iterator[JsonNode] = collect(runText(jsonText, _))
+
+  /** The outputs of [[runUtf8]]. */
+  def applyToUtf8(json: UTF8String): Iterator[JsonNode] = collect(runUtf8(json, _))
+
+  private def collect(run: (JsonNode => Unit) => Unit): Iterator[JsonNode] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[JsonNode]
+    run(out += _)
+    out.iterator
   }
 
   @transient private lazy val reader = new Utf8Json(footprint, Jq.readConstraints)
-
-  /** The bindings of every well-formed row: `$error` is null. */
-  @transient private lazy val wellFormed = Env(Map("error" -> Json.NullN), Map.empty)
 }
 
 object Jq {
@@ -72,10 +91,13 @@ object Jq {
 
   private val cache = new ConcurrentHashMap[String, CompiledJq]()
 
-  /** Parse + desugar + singularity-rewrite a jq program.
+  /** Parse a jq program and compile it into push-style nodes.
     * Throws JqSyntaxError on bad programs. */
-  def compile(program: String): CompiledJq =
-    new CompiledJq(StrictRewrite(Parser.parse(program)))
+  def compile(program: String): CompiledJq = {
+    val c = new CompiledJq(Parser.parse(program))
+    c.program
+    c
+  }
 
   /** Per-JVM compile cache — executors compile each distinct program once. */
   def compileCached(program: String): CompiledJq =

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.jq.Jq
+import graft.jq.{Jq, JqError}
 
 /** Scalar sugar over the jq engine (Spark-first additions; the reference
   * only ships the UDTF, but scalar extraction is the dominant usage in
@@ -27,14 +27,8 @@ case class JqString(child: Expression, program: String)
 
   override def eval(input: InternalRow): Any = {
     val json = child.eval(input).asInstanceOf[UTF8String]
-    JqOutput.guard(json) {
-      val it = compiled.applyToUtf8(json)
-      if (!it.hasNext) null
-      else {
-        val n = it.next()
-        if (n.isNull) null else JqOutput.render(n)
-      }
-    }
+    val n = try compiled.firstUtf8(json) catch { case e: JqError => throw JqOutput.failure(e, json) }
+    if (n == null || n.isNull) null else JqOutput.render(n)
   }
 
   override protected def withNewChildInternal(newChild: Expression): JqString =
@@ -55,9 +49,10 @@ case class JqExtractAll(child: Expression, program: String)
 
   override def eval(input: InternalRow): Any = {
     val json = child.eval(input).asInstanceOf[UTF8String]
-    JqOutput.guard(json) {
-      new GenericArrayData(compiled.applyToUtf8(json).map(JqOutput.render).toArray[Any])
-    }
+    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
+    try compiled.runUtf8(json, n => out += JqOutput.render(n))
+    catch { case e: JqError => throw JqOutput.failure(e, json) }
+    new GenericArrayData(out.toArray)
   }
 
   override protected def withNewChildInternal(newChild: Expression): JqExtractAll =

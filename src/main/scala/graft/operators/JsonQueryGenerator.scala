@@ -18,9 +18,9 @@ import graft.jq.{Jq, JqError, Json}
   * `LATERAL VIEW [OUTER]`, and composes with whole-stage-codegen'd parents
   * and children. The jq program is compiled once per executor JVM
   * (`Jq.compileCached`); per row we parse the JSON from its UTF-8 bytes
-  * (`CompiledJq.applyToUtf8`, no String decode), bind `$error` per the
-  * reference's corrupt-input contract, stream jq outputs and marshal each
-  * directly to an InternalRow (no Row boxing).
+  * (`CompiledJq.runUtf8`, no String decode), bind `$error` per the
+  * reference's corrupt-input contract, run the row with one call and
+  * marshal each output directly to an InternalRow (no Row boxing).
   *
   * Two call forms, as in the reference (README "Usage"):
   *   jq(json, 'PROGRAM', 'TYPE')           → single column `col1` of TYPE
@@ -45,28 +45,30 @@ case class JsonQueryGenerator(child: Expression, program: String, typeArgs: Seq[
     schema.fields.map(f => JsonMarshaller.compile(f.dataType))
   @transient private lazy val fieldNames: Array[String] = schema.fieldNames
 
+  /** The reference's contract (JsonQueryUDTF.java:74-107): every output of
+    * the row is forwarded, and a jq error anywhere in the row fails it, so
+    * the row runs to its end before its first output is returned. */
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val json = child.eval(input).asInstanceOf[UTF8String]
-    // jq errors surface on the first output and lazily while iterating
-    val outs = JqOutput.guard(json)(compiled.applyToUtf8(json))
-    new Iterator[InternalRow] {
-      override def hasNext: Boolean = JqOutput.guard(json)(outs.hasNext)
-      override def next(): InternalRow = {
-        val node = JqOutput.guard(json)(outs.next())
-        val row = new Array[Any](marshallers.length)
-        if (whole) {
-          row(0) = marshallers(0)(node)
-        } else {
-          var i = 0
-          while (i < marshallers.length) {
-            val sub = if (node.isObject) node.get(fieldNames(i)) else null
-            row(i) = if (sub == null) null else marshallers(i)(sub)
-            i += 1
-          }
-        }
-        new GenericInternalRow(row)
+    val rows = new JsonQueryGenerator.Rows
+    try compiled.runUtf8(json, node => rows += marshal(node))
+    catch { case e: JqError => throw JqOutput.failure(e, json) }
+    rows.iterator
+  }
+
+  private def marshal(node: JsonNode): InternalRow = {
+    val row = new Array[Any](marshallers.length)
+    if (whole) {
+      row(0) = marshallers(0)(node)
+    } else {
+      var i = 0
+      while (i < marshallers.length) {
+        val sub = if (node.isObject) node.get(fieldNames(i)) else null
+        row(i) = if (sub == null) null else marshallers(i)(sub)
+        i += 1
       }
     }
+    new GenericInternalRow(row)
   }
 
   override protected def withNewChildInternal(newChild: Expression): JsonQueryGenerator =
@@ -76,6 +78,23 @@ case class JsonQueryGenerator(child: Expression, program: String, typeArgs: Seq[
 }
 
 object JsonQueryGenerator {
+  /** A row's outputs: the first held alone, the rest in a buffer made
+    * only when there are more. */
+  private final class Rows {
+    private var first: InternalRow = _
+    private var more: scala.collection.mutable.ArrayBuffer[InternalRow] = _
+
+    def +=(row: InternalRow): Unit =
+      if (first == null) first = row
+      else {
+        if (more == null) more = scala.collection.mutable.ArrayBuffer(first)
+        more += row
+      }
+
+    def iterator: Iterator[InternalRow] =
+      if (more != null) more.iterator else if (first != null) Iterator.single(first) else Iterator.empty
+  }
+
   // NAME:TYPE splitter — same shape the reference accepts (JsonQueryUDTF.java:160)
   private val NameAndType = "^([a-zA-Z_][a-zA-Z0-9_]*):([a-zA-Z_].*)$".r
 
@@ -128,13 +147,8 @@ object JsonQueryGenerator {
 private[operators] object JqOutput {
   def render(n: JsonNode): UTF8String = UTF8String.fromString(Json.render(n))
 
-  def guard[A](json: UTF8String)(a: => A): A =
-    try a
-    catch {
-      case e: JqError =>
-        throw new RuntimeException(
-          s"""jq returned an error "${e.getMessage}" from input: $json""", e)
-    }
+  def failure(e: JqError, json: UTF8String): RuntimeException =
+    new RuntimeException(s"""jq returned an error "${e.getMessage}" from input: $json""", e)
 }
 
 /** JsonNode → Catalyst value, compiled once per output type.

@@ -255,7 +255,7 @@ object Maintenance {
     val tot = counted.agg(
       sum(when(col("digit").isNotNull, col("n")).otherwise(0L)).as("__tot"),
       sum(when(col("digit").isNull, col("n")).otherwise(0L)).as("__exc"))
-    broadcast(benford).join(counted, Seq("digit"), "left")
+    benford.join(counted, Seq("digit"), "left")
       .crossJoin(broadcast(tot))
       .select(col("digit"), coalesce(col("n"), lit(0L)).as("n"),
         expr("CAST(CASE WHEN __tot > 0 THEN (coalesce(n, 0) * 1000000) DIV __tot ELSE 0 END AS BIGINT)")

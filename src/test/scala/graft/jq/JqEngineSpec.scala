@@ -724,4 +724,87 @@ class JqEngineSpec extends AnyFunSuite {
     assert(run("""[(false, error("x")) // 4]""", "null") == List("[4]"))
   }
 
+  // ---- jq 1.6 answers that the stream evaluator got wrong ----
+  test("round rounds half away from zero") {
+    assert(run1("[1.5,-1.5,-0.5,-2.5]|map(round)") == "[2,-2,-1,-3]")
+    assert(run1("[2.4,-2.4,0.49999999999999994]|map(round)") == "[2,-2,0]")
+  }
+  test("string repetition keeps floor(n) copies, at least one") {
+    assert(run(""""x" * 1.5, "x" * 2.7, "x" * 0.5, 3 * "ab"""", "null") ==
+      List("\"x\"", "\"xx\"", "\"x\"", "\"ababab\""))
+    assert(run1(""""x" * 0""") == "null")
+  }
+  test("interpolation: the last part is the outer loop and runs first") {
+    assert(run(""""\(1,2) \(3,4)"""", "null") == List("\"1 3\"", "\"2 3\"", "\"1 4\"", "\"2 4\""))
+    assert(run1("""try "\(error("a"))\(error("b"))" catch .""") == "\"b\"")
+  }
+
+  // ---- the push evaluator stops generators and keeps the stack flat ----
+  test("limit(n) runs its generator for exactly n outputs") {
+    assert(run1("""[limit(2; 1, 2, error("x"))]""") == "[1,2]")
+    assert(run1("""[limit(3; 0, 1, 2, error("x"))]""") == "[0,1,2]")
+    assert(run1("""[limit(2; first(1, 2), 3, error("x"))]""") == "[1,3]")
+  }
+  test("first does not look ahead into a pipe's source") {
+    assert(run1("""first(1, error("x"))""") == "1")
+    assert(run1("""first((1, error("x")) | (., .))""") == "1")
+  }
+  test("first stops a select at its first match") {
+    assert(run1("""first((0, 1, 2, 3, 4, error("x")) | select(. % 5 == 4))""") == "4")
+  }
+  test("jq_string's first output ends the row") {
+    val first = Jq.compile("""1, error("x")""").firstUtf8(org.apache.spark.unsafe.types.UTF8String.fromString("null"))
+    assert(Json.serialize(first) == "1")
+  }
+  test("an error downstream of try or // is not caught by them") {
+    assert(run1("""try ((try (1, 2) catch "c") | error) catch "outer: \(.)"""") == "\"outer: 1\"")
+    assert(run1("""try (((1, 2) // 3) | error) catch "outer: \(.)"""") == "\"outer: 1\"")
+    assert(run1("""try ([.[]?] | (.[0]? // 1) | error) catch "outer: \(.)"""") == "\"outer: 1\"")
+  }
+  test("a binding is its own in a body re-entered through a filter argument") {
+    assert(run1("""[def g(f): f | f; 1 | g((. + 1) as $x | ($x, $x * 10))]""") == "[3,30,21,210]")
+  }
+  test("long runs of empty outputs do not grow the stack") {
+    assert(run1("[range(200000) | select(. == 199999)]") == "[199999]")
+  }
+
+  /** Runs `body` on a new thread with the JVM's default stack, as Spark
+    * task threads have. */
+  private def onDefaultStack[A](body: => A): A = {
+    var result: Either[Throwable, A] = null
+    val t = new Thread(() => result = try Right(body) catch { case e: Throwable => Left(e) })
+    t.start()
+    t.join()
+    result.fold(throw _, identity)
+  }
+  test("loops and tail recursion run on a default-size stack") {
+    onDefaultStack {
+      assert(run1("def f: if . > 0 then . - 1 | f else . end; 300 | f") == "0")
+      assert(run1("0 | until(. >= 1000; . + 1)") == "1000")
+      assert(run1("[limit(1000000; repeat(1))] | length") == "1000000")
+      assert(run1("[limit(1000000; 0 | recurse(. + 1))] | length") == "1000000")
+      assert(run1("[range(1000000)] | length") == "1000000")
+      assert(run1("[0 | while(. < 100000; . + 1)] | length") == "100000")
+      assert(run1("reduce range(1000000) as $i (0; . + $i)") == "499999500000")
+      assert(run1("[foreach range(100000) as $i (0; . + 1)] | length") == "100000")
+    }
+  }
+  test(s"recursion past ${Compiler.MaxDepth} calls, or past the stack, raises a catchable error") {
+    onDefaultStack {
+      val deep = Compiler.MaxDepth - 10
+      assert(run1(s"def f: if . > 0 then . - 1 | f else . end; $deep | f") == "0")
+      assert(run1("def f: if . > 0 then [(. - 1 | f), .] | .[0] + 1 else 0 end; 200 | f") == "200")
+      assert(run1("def f(g): if . > 0 then {a: (. - 1 | f(g))} | .a else g end; 200 | f(.)") == "0")
+      // a body heavy enough to exhaust the stack before the cap
+      assert(run1("""try (def f(g): if . > 0 then {a: (. - 1 | f(g))} | .a else g end; 100000 | f(.)) catch .""") ==
+        "\"recursion depth exceeded\"")
+      val e = intercept[JqError](run1("def f: . + 1 | f; 0 | f"))
+      assert(e.getMessage == "recursion depth exceeded")
+      assert(run1("""try (def f: . + 1 | f; 0 | f) catch .""") == "\"recursion depth exceeded\"")
+      assert(run1("""try ([limit(5000; 1 | repeat(., .))] | length) catch .""") == "\"recursion depth exceeded\"")
+      // the depth is the current call depth: a caught overflow leaves none behind
+      assert(run1("def f: if . > 0 then . - 1 | f else . end; 900 | f") == "0")
+    }
+  }
+
 }

@@ -144,6 +144,18 @@ class GeneratorSpec extends AnyFunSuite {
     }
   }
 
+  test("jq() runs a row to its end: an error after the first output fails the query under LIMIT") {
+    Seq("""{"a":1}""").toDF("j").createOrReplaceTempView("late_error")
+    val e = intercept[Exception] {
+      spark.sql("""SELECT x.* FROM late_error LATERAL VIEW jq(j, '1, error("late")', 'int') x LIMIT 1""").collect()
+    }
+    assert(Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+      .exists(t => t.getMessage != null && t.getMessage.contains("""jq returned an error "late"""")))
+    // jq_string stops after the first output, as before
+    assert(Seq("""{"a":1}""").toDF("j").select(graft.Graft.jqString($"j", """1, error("late")""")).as[String]
+      .collect().toSeq == Seq("1"))
+  }
+
   test("non-constant JQ argument is rejected") {
     Seq(("{}", ".")).toDF("j", "prog").createOrReplaceTempView("nc")
     val e = intercept[Exception](spark.sql("SELECT jq(j, prog, 'string') FROM nc").collect())
