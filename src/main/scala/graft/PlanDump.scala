@@ -10,9 +10,8 @@ import org.apache.spark.sql.execution.ExplainMode
   *   runMain graft.PlanDump <sfDir> <outDir> <suffix> <q1,q2,...|all>
   *
   * Plans are captured AFTER one full execution of the query (AQE leaves
-  * `isFinalPlan=false` on a never-run plan; running first also forces
-  * session-shared memo frames, so a memo consumer's plan shows the
-  * LogicalRDD scan it actually reads). Same session shape as Bench. */
+  * `isFinalPlan=false` on a never-run plan). Same session shape as
+  * Bench. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, qlist) = args.take(4)

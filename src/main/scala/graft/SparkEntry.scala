@@ -71,170 +71,79 @@ object SparkEntry {
   /** The order/return flow graph (the graph_scc / graph_walks /
     * graph_condensation input): cust → supplier on kept lines, supplier
     * → cust on returns, sliced to every 8th order so the oracle's
-    * transitive closure stays tractable. r16 optimization: session-
-    * memoized — THREE queries derive this orders⋈lineitem pass (walks,
-    * condensation's quotient build, and the SCC fixpoint), each of
-    * which used to re-run the join from parquet. */
-  private val orderFlowMemo =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, DataFrame]]()
-  private def orderFlowEdges(s: SparkSession, dir: String): DataFrame =
-    memoized(orderFlowMemo, s, dir) {
-      val li = s.table("orders").join(s.table("lineitem"),
-          col("o_orderkey") === col("l_orderkey"))
-        .where(col("o_orderkey") % 8 === 0)
-      val fwd = li.where(col("l_returnflag") =!= "R")
-        .select(custIdBelowOffset(col("o_custkey")).as("src"),
-          (col("l_suppkey") + 1000000).as("dst"))
-      val bwd = li.where(col("l_returnflag") === "R")
-        .select((col("l_suppkey") + 1000000).as("src"),
-          custIdBelowOffset(col("o_custkey")).as("dst"))
-      pipeline.Materialize.cut(fwd.union(bwd))
-    }
-
-  /** Session-scoped SCC memo over [[orderFlowEdges]]: `graph_scc` and
-    * `graph_condensation` partition the SAME graph, so the SCC fixpoint
-    * runs ONCE per (session, sf dir) and the quotient build reuses it
-    * via [[pipeline.Graph.condensationLevels]]'s `precomputedScc` — the
-    * r14 verdict's shared-pass lifecycle (the persisted-IVF-index idea
-    * held in-JVM: the memoized frame is a materialized node→scc table,
-    * ContextCleaner-owned under the default localCheckpoint strategy).
-    * Keyed by the session OBJECT (weakly — entries die with the session,
-    * so a collision with a new session after GC is impossible and the
-    * map cannot grow across session lifetimes) × dir, so a fresh session
-    * or a different scale factor never reads a stale frame; either query
-    * computes it on first demand, so results are order-independent. */
-  private val sccMemo =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, DataFrame]]()
-  private def memoized(memo: java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, DataFrame]],
-                       s: SparkSession, dir: String)(build: => DataFrame): DataFrame =
-    memo.synchronized {
-      memo.computeIfAbsent(s, _ => scala.collection.mutable.Map.empty)
-        .getOrElseUpdate(dir, build)
-    }
-  private def orderFlowScc(s: SparkSession, dir: String): DataFrame =
-    memoized(sccMemo, s, dir)(
-      pipeline.Materialize.cut(pipeline.Graph.stronglyConnectedComponents(
-        orderFlowEdges(s, dir), "src", "dst")))
+    * transitive closure stays tractable. */
+  private def orderFlowEdges(s: SparkSession): DataFrame = {
+    val li = s.table("orders").join(s.table("lineitem"),
+        col("o_orderkey") === col("l_orderkey"))
+      .where(col("o_orderkey") % 8 === 0)
+    val fwd = li.where(col("l_returnflag") =!= "R")
+      .select(custIdBelowOffset(col("o_custkey")).as("src"),
+        (col("l_suppkey") + 1000000).as("dst"))
+    val bwd = li.where(col("l_returnflag") === "R")
+      .select((col("l_suppkey") + 1000000).as("src"),
+        custIdBelowOffset(col("o_custkey")).as("dst"))
+    pipeline.Materialize.cut(fwd.union(bwd))
+  }
 
   /** The bidirected WEIGHTED customer↔supplier trade graph (weight =
     * distinct orders linking the pair — the graph_pagerank_weighted
-    * input). r16 optimization: the unweighted [[tradeGraphEdges]] is
-    * exactly this frame's key set (groupBy keys = distinct pairs), so
-    * ONE orders⋈lineitem pass feeds both — the weighted build and the
-    * distinct-pair build used to run separately per session. */
-  private val tradeEdgesWMemo =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, DataFrame]]()
-  private def tradeEdgesWeighted(s: SparkSession, dir: String): DataFrame =
-    memoized(tradeEdgesWMemo, s, dir) {
-      val e0 = s.table("orders")
-        .join(s.table("lineitem"), col("o_orderkey") === col("l_orderkey"))
-        .groupBy(custIdBelowOffset(col("o_custkey")).as("c"), col("l_suppkey").as("sp"))
-        .agg(countDistinct(col("o_orderkey")).as("w"))
-      pipeline.Materialize.cut(
-        e0.select(col("c").as("src"), (col("sp") + 1000000L).as("dst"), col("w"))
-          .union(e0.select((col("sp") + 1000000L).as("src"), col("c").as("dst"),
-            col("w"))))
-    }
+    * input). */
+  private def tradeEdgesWeighted(s: SparkSession): DataFrame = {
+    val e0 = s.table("orders")
+      .join(s.table("lineitem"), col("o_orderkey") === col("l_orderkey"))
+      .groupBy(custIdBelowOffset(col("o_custkey")).as("c"), col("l_suppkey").as("sp"))
+      .agg(countDistinct(col("o_orderkey")).as("w"))
+    pipeline.Materialize.cut(
+      e0.select(col("c").as("src"), (col("sp") + 1000000L).as("dst"), col("w"))
+        .union(e0.select((col("sp") + 1000000L).as("src"), col("c").as("dst"),
+          col("w"))))
+  }
 
-  /** The bidirected customer↔supplier trade graph (the graph_bfs /
-    * harmonic / closeness / eccentricity input): the weighted frame's
-    * row set with the weight projected away — groupBy (c, sp) keys ARE
-    * the distinct (c, sp) pairs, so the content is bit-identical to the
-    * old standalone distinct build. */
-  private def tradeGraphEdges(s: SparkSession, dir: String): DataFrame =
-    tradeEdgesWeighted(s, dir).select("src", "dst")
+  /** The bidirected customer↔supplier trade graph (the pagerank, ppr,
+    * betweenness, bfs, shortest_paths, degree_dist and landmark-trio
+    * input): the weighted frame's row set with the weight projected
+    * away — the groupBy (c, sp) keys ARE the distinct (c, sp) pairs. */
+  private def tradeEdges(s: SparkSession): DataFrame =
+    tradeEdgesWeighted(s).select("src", "dst")
 
-  /** Session-scoped SHARED trade-edge frame (r16 — the [[orderFlowScc]]
-    * lifecycle applied one level down): SEVEN queries walk the same
-    * bidirected customer↔supplier graph (pagerank, ppr, betweenness,
-    * bfs, shortest_paths, and the landmark trio through
-    * [[tradeLandmarks]]); each used to re-derive the orders⋈lineitem
-    * distinct-pair build from parquet. One materialized node→node edge
-    * table per (session, sf dir) now feeds them all — results are
-    * bit-identical (the frame IS the same expression), only the
-    * repeated derivation goes. */
-  private val tradeEdgesMemo =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, DataFrame]]()
-  private def tradeEdges(s: SparkSession, dir: String): DataFrame =
-    memoized(tradeEdgesMemo, s, dir)(pipeline.Materialize.cut(tradeGraphEdges(s, dir)))
+  /** The quarter-order co-purchase wedge frame (triangles, clustering,
+    * modularity, kcore, communities, louvain, louvain_full,
+    * assortativity, links): the lineitem self-join on l_orderkey,
+    * one (src, dst) row per part pair bought in one order. */
+  private def coPurchaseWedges(s: SparkSession): DataFrame = {
+    val li = s.table("lineitem").where(col("l_orderkey") % 4 === 0)
+    pipeline.Materialize.cut(li.as("x").join(li.as("y"),
+        col("x.l_orderkey") === col("y.l_orderkey") &&
+          col("x.l_partkey") < col("y.l_partkey"))
+      .select(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst")))
+  }
 
-  /** Session-scoped SHARED landmark pass over [[tradeGraphEdges]] (r15,
-    * the [[orderFlowScc]] lifecycle applied to the centrality family):
-    * graph_harmonic, graph_closeness and graph_eccentricity each keep
-    * their own independent landmark draw (hc:/cc:/ec: salts — the
-    * estimator contract), but the three queries ride ONE multi-salt
-    * BFS ([[pipeline.Graph.landmarkDistanceTable]]); per-salt slices
-    * are identical to single-salt runs, so all three oracles gate
-    * unchanged while the trio pays one forward pass instead of three. */
-  private val landmarkMemo =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, DataFrame]]()
-  private def tradeLandmarks(s: SparkSession, dir: String): DataFrame =
-    memoized(landmarkMemo, s, dir)(
-      pipeline.Materialize.cut(pipeline.Graph.landmarkDistanceTable(
-        tradeEdges(s, dir), "src", "dst", nSeeds = 8, rounds = 4,
-        saltPrefixes = Seq("hc:", "cc:", "ec:"))))
+  /** The hub-guarded weighted co-purchase projection (graph_copurchase
+    * publishes it; graph_mst builds its forest on it). */
+  private def coPurchaseProjection(s: SparkSession): DataFrame =
+    pipeline.Materialize.cut(pipeline.Graph.bipartiteProjection(
+      s.table("lineitem").where(col("l_orderkey") % 4 === 0),
+      "l_orderkey", "l_partkey"))
 
-  /** Session-scoped SHARED co-purchase wedge frame (r16 optimization —
-    * the [[tradeEdges]] lifecycle applied to the OTHER bench graph):
-    * NINE queries (triangles, clustering, modularity, kcore,
-    * communities, louvain, louvain_full, assortativity, links) walk the
-    * same quarter-order co-purchase graph, and each used to re-derive
-    * the lineitem self-join (scan + exchange on l_orderkey + wedge join)
-    * from parquet per timed pass. One materialized (src, dst) pair table
-    * per (session, sf dir) now feeds them all — the frame is the same
-    * expression, so every consumer's oracle gates unchanged; operators
-    * that dedup internally (labelPropagation, triangleCore) see the
-    * identical multiset of rows. */
-  private val coPurchaseMemo =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, DataFrame]]()
-  private def coPurchaseWedges(s: SparkSession, dir: String): DataFrame =
-    memoized(coPurchaseMemo, s, dir) {
-      val li = s.table("lineitem").where(col("l_orderkey") % 4 === 0)
-      pipeline.Materialize.cut(li.as("x").join(li.as("y"),
-          col("x.l_orderkey") === col("y.l_orderkey") &&
-            col("x.l_partkey") < col("y.l_partkey"))
-        .select(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst")))
-    }
+  /** The consecutive-id pair jaccard frame at shingle=3, `(a, b, n_int,
+    * n_union)` (ngram_jaccard and, through [[docDupGroups]], groups,
+    * representatives, group_sizes and group_split). */
+  private def docPairJaccard(s: SparkSession): DataFrame = {
+    val docs = s.table("documents")
+    val pairs = docs.select(col("doc_id").as("a"), (col("doc_id") + 1).as("b"))
+      .join(docs.select(col("doc_id").as("b")), "b")
+    pipeline.Materialize.cut(
+      pipeline.Dedup.verifyJaccard(pairs, docs, "doc_id", "text", shingle = 3))
+  }
 
-  /** Session-scoped SHARED weighted co-purchase projection (r16
-    * optimization): graph_copurchase publishes the bipartite projection
-    * and graph_mst builds its forest on the SAME projection (cost =
-    * 1e6 DIV weight) — one hub-guarded projection pass per (session,
-    * sf dir) instead of two. */
-  private val coPurchaseProjMemo =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, DataFrame]]()
-  private def coPurchaseProjection(s: SparkSession, dir: String): DataFrame =
-    memoized(coPurchaseProjMemo, s, dir)(
-      pipeline.Materialize.cut(pipeline.Graph.bipartiteProjection(
-        s.table("lineitem").where(col("l_orderkey") % 4 === 0),
-        "l_orderkey", "l_partkey")))
-
-  /** Session-scoped SHARED consecutive-pair jaccard frame (r16
-    * optimization): five queries (ngram_jaccard, groups,
-    * representatives, group_sizes, group_split) shingle the corpus and
-    * verify the same consecutive-id pairs at shingle=3; the
-    * (a, b, n_int, n_union) frame is computed once per (session, sf
-    * dir). [[docDupGroups]] layers the shared 0.55-threshold connected
-    * components the four group-consumers all re-ran. */
-  private val docJaccardMemo =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, DataFrame]]()
-  private def docPairJaccard(s: SparkSession, dir: String): DataFrame =
-    memoized(docJaccardMemo, s, dir) {
-      val docs = s.table("documents")
-      val pairs = docs.select(col("doc_id").as("a"), (col("doc_id") + 1).as("b"))
-        .join(docs.select(col("doc_id").as("b")), "b")
-      pipeline.Materialize.cut(
-        pipeline.Dedup.verifyJaccard(pairs, docs, "doc_id", "text", shingle = 3))
-    }
-  private val docGroupsMemo =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, DataFrame]]()
-  private def docDupGroups(s: SparkSession, dir: String): DataFrame =
-    memoized(docGroupsMemo, s, dir)(
-      pipeline.Materialize.cut(pipeline.Dedup.connectedComponents(
-        s.table("documents").select(col("doc_id").as("id")),
-        docPairJaccard(s, dir)
-          .where(col("n_int") * 100 >= col("n_union") * 55)
-          .select("a", "b"))))
+  /** The 0.55-threshold connected components over [[docPairJaccard]]
+    * (`id, group_id`). */
+  private def docDupGroups(s: SparkSession): DataFrame =
+    pipeline.Materialize.cut(pipeline.Dedup.connectedComponents(
+      s.table("documents").select(col("doc_id").as("id")),
+      docPairJaccard(s)
+        .where(col("n_int") * 100 >= col("n_union") * 55)
+        .select("a", "b")))
 
   /** recall@10 of an approximate top-k method against the in-registry
     * brute-force twin, per query vector (the 5 vec_id < 5 queries of the
@@ -1055,9 +964,8 @@ object SparkEntry {
     },
     "dedup_ngram_jaccard" -> { (s, dir) =>
       prep(s, dir, "documents")
-      // consecutive-pair jaccard from the session-shared frame
-      // ([[docPairJaccard]], r16 optimization)
-      docPairJaccard(s, dir)
+      // consecutive-pair jaccard ([[docPairJaccard]])
+      docPairJaccard(s)
         .withColumn("is_dup", (col("n_int") * 10 >= col("n_union") * 8).cast("boolean"))
         .select("a", "b", "n_int", "n_union", "is_dup")
         .orderBy("a")
@@ -1476,10 +1384,9 @@ object SparkEntry {
       prep(s, dir, "documents")
       // pairs → GROUPS: connected components over deterministic jaccard
       // edges (consecutive ids, integer-exact threshold 0.55); group_id =
-      // min id of the component. DuckDB oracle: recursive-CTE closure.
-      // The checked CC fixpoint is session-shared with representatives /
-      // group_sizes / group_split ([[docDupGroups]], r16 optimization).
-      docDupGroups(s, dir)
+      // min id of the component. DuckDB oracle: recursive-CTE closure
+      // ([[docDupGroups]]).
+      docDupGroups(s)
         .withColumnRenamed("id", "doc_id")
         .withColumn("group_id", col("group_id").cast("long"))
         .orderBy("doc_id")
@@ -1487,10 +1394,10 @@ object SparkEntry {
     "dedup_representatives" -> { (s, dir) =>
       prep(s, dir, "documents")
       // the end product of the dedup family: the corpus AFTER near-dup
-      // removal — one representative (min id) kept per connected group;
-      // groups from the session-shared CC frame ([[docDupGroups]], r16)
+      // removal — one representative (min id) kept per connected group
+      // ([[docDupGroups]])
       val docs = s.table("documents")
-      val groups = docDupGroups(s, dir)
+      val groups = docDupGroups(s)
       docs.join(groups.where(col("id") === col("group_id"))
           .select(col("id").as("doc_id")), "doc_id")
         .select(col("doc_id"))
@@ -2027,9 +1934,8 @@ object SparkEntry {
       prep(s, dir, "documents")
       // near-dup cluster-size census (composed): the dedup-yield shape —
       // how much of the corpus sits in singletons vs pairs vs bigger,
-      // size-bucketed by bit-length (the degree-profile convention);
-      // groups from the session-shared CC frame ([[docDupGroups]], r16)
-      docDupGroups(s, dir)
+      // size-bucketed by bit-length (the degree-profile convention)
+      docDupGroups(s)
         .groupBy("group_id").agg(count(lit(1)).as("__sz"))
         .groupBy(length(bin(col("__sz"))).cast("int").as("size_bucket"))
         .agg(count(lit(1)).as("n_groups"), sum(col("__sz")).as("n_docs"))
@@ -2319,10 +2225,9 @@ object SparkEntry {
       prep(s, dir, "documents")
       // LEAKAGE-SAFE split: near-dup groups (the dedup_groups CC over
       // jaccard-0.55 edges) bucket by GROUP id, so no group straddles
-      // folds — the eval-contamination guard pipeline_split lacks;
-      // groups from the session-shared CC frame ([[docDupGroups]], r16)
+      // folds — the eval-contamination guard pipeline_split lacks
       val docs = s.table("documents")
-      val groups = docDupGroups(s, dir)
+      val groups = docDupGroups(s)
       val b = col("bucket")
       pipeline.TextAnalysis.groupAwareSplitBucket(docs, "doc_id", groups)
         .withColumn("split",
@@ -3592,9 +3497,8 @@ object SparkEntry {
     "graph_assortativity" -> { (s, dir) =>
       prep(s, dir, "lineitem")
       // degree assortativity of the co-purchase graph: one-number
-      // topology fingerprint (hubs-to-hubs vs hubs-to-leaves);
-      // edges from the session-shared frame ([[coPurchaseWedges]], r16)
-      pipeline.Graph.assortativity(coPurchaseWedges(s, dir), "src", "dst")
+      // topology fingerprint (hubs-to-hubs vs hubs-to-leaves)
+      pipeline.Graph.assortativity(coPurchaseWedges(s), "src", "dst")
     },
     "text_source_overlap" -> { (s, dir) =>
       prep(s, dir, "documents")
@@ -4119,40 +4023,34 @@ object SparkEntry {
       // integer HITS over the DIRECTED customer→supplier trade graph:
       // customers are the hubs (they point), suppliers the authorities
       // (they are pointed at) — 3 rounds, sum-normalized fixed point,
-      // bit-replayable by the unrolled-CTE oracle. r16 optimization: the
-      // directed edge set IS the forward half of the session-shared
-      // bidirected frame ([[tradeEdges]]) — supplier ids sit at +1e6 by
-      // the build's own id-offset convention, so src < 1e6 selects
-      // exactly the distinct cust→supplier pairs the old standalone
-      // orders⋈lineitem pass produced
-      val e = tradeEdges(s, dir).where(col("src") < 1000000L)
+      // bit-replayable by the unrolled-CTE oracle. The directed edge set
+      // is the forward half of the bidirected [[tradeEdges]] — supplier
+      // ids sit at +1e6 by the build's own id-offset convention, so
+      // src < 1e6 selects exactly the distinct cust→supplier pairs
+      val e = tradeEdges(s).where(col("src") < 1000000L)
       pipeline.Graph.hits(e, "src", "dst", iterations = 3).orderBy("node")
     },
     "graph_links" -> { (s, dir) =>
       prep(s, dir, "lineitem")
       // link prediction on the co-purchase graph: top-50 non-adjacent
       // part pairs by neighborhood Jaccard — the "probably related"
-      // candidate generator; hub centers excluded (bounded loss);
-      // edges from the session-shared frame ([[coPurchaseWedges]], r16)
-      pipeline.Graph.linkPrediction(coPurchaseWedges(s, dir), "src", "dst",
+      // candidate generator; hub centers excluded (bounded loss)
+      pipeline.Graph.linkPrediction(coPurchaseWedges(s), "src", "dst",
         k = 50, maxDegree = 500)
     },
     "graph_pagerank" -> { (s, dir) =>
       prep(s, dir, "orders", "lineitem")
       // integer fixed-point PageRank over the bidirected customer↔supplier
       // trade graph (distinct order pairs; suppliers offset by 1e6 into
-      // the shared node id space) — 5 iterations, bit-replayable;
-      // edges from the session-shared frame ([[tradeEdges]], r16)
-      pipeline.Graph.pageRank(tradeEdges(s, dir), "src", "dst", iterations = 5)
+      // the shared node id space) — 5 iterations, bit-replayable
+      pipeline.Graph.pageRank(tradeEdges(s), "src", "dst", iterations = 5)
         .orderBy("node")
     },
     "graph_pagerank_weighted" -> { (s, dir) =>
       prep(s, dir, "orders", "lineitem")
       // trade-volume-weighted PageRank: edge weight = distinct orders
-      // linking the pair; contrib = rank·w DIV Σw, same fixed-point ppm;
-      // edges from the session-shared weighted frame
-      // ([[tradeEdgesWeighted]], r16 optimization)
-      pipeline.Graph.pageRank(tradeEdgesWeighted(s, dir), "src", "dst",
+      // linking the pair; contrib = rank·w DIV Σw, same fixed-point ppm
+      pipeline.Graph.pageRank(tradeEdgesWeighted(s), "src", "dst",
           iterations = 5, weightCol = Some("w"))
         .orderBy("node")
     },
@@ -4161,9 +4059,8 @@ object SparkEntry {
       // per-part triangle counts in the co-purchase graph (parts sharing
       // an order) — degree-ordered wedge join, every triangle found once;
       // a quarter of the orders keeps the wedge volume bench-sized while
-      // exercising every stage of the operator;
-      // edges from the session-shared frame ([[coPurchaseWedges]], r16)
-      pipeline.Graph.triangleCounts(coPurchaseWedges(s, dir), "src", "dst")
+      // exercising every stage of the operator
+      pipeline.Graph.triangleCounts(coPurchaseWedges(s), "src", "dst")
         .orderBy("node")
     },
     "graph_clustering" -> { (s, dir) =>
@@ -4171,9 +4068,8 @@ object SparkEntry {
       // local clustering coefficient over the same co-purchase graph —
       // the normalized neighborhood-density signal raw triangle counts
       // can't give (a hub's thousand triangles ≠ a dense ring); integral
-      // ppm division, degree<2 excluded, triangle-free degree≥2 → 0;
-      // edges from the session-shared frame ([[coPurchaseWedges]], r16)
-      pipeline.Graph.clusteringCoefficient(coPurchaseWedges(s, dir), "src", "dst")
+      // ppm division, degree<2 excluded, triangle-free degree≥2 → 0
+      pipeline.Graph.clusteringCoefficient(coPurchaseWedges(s), "src", "dst")
         .orderBy("node")
     },
     "rel_hierarchy_rollup" -> { (s, dir) =>
@@ -4194,9 +4090,8 @@ object SparkEntry {
       // modularity of the label-propagation communities — turns "we ran
       // community detection" into a measured claim (Q ≈ 0 on noise).
       // The co-purchase edge build feeds BOTH the LP rounds and the Q
-      // computation — the session-shared frame ([[coPurchaseWedges]],
-      // r16) is already materialized once
-      val e = coPurchaseWedges(s, dir)
+      // computation, materialized once
+      val e = coPurchaseWedges(s)
       val labels = pipeline.Graph.labelPropagation(e, "src", "dst", iterations = 4)
       pipeline.Graph.modularity(e, labels, "src", "dst", "node", "label")
         .orderBy("community")
@@ -4205,28 +4100,25 @@ object SparkEntry {
       prep(s, dir, "orders", "lineitem")
       // personalized PageRank: restart mass pinned to a 1-in-97 customer
       // seed cohort — "suppliers relevant to THESE customers", the
-      // random-walk-with-restart retrieval form of graph_pagerank;
-      // edges from the session-shared frame ([[tradeEdges]], r16)
+      // random-walk-with-restart retrieval form of graph_pagerank
       val seeds = s.table("orders").select(col("o_custkey").as("node"))
         .where(col("node") % 97 === 0).distinct()
-      pipeline.Graph.pageRank(tradeEdges(s, dir), "src", "dst", iterations = 5,
+      pipeline.Graph.pageRank(tradeEdges(s), "src", "dst", iterations = 5,
           seeds = Some(seeds))
         .orderBy("node")
     },
     "graph_copurchase" -> { (s, dir) =>
       prep(s, dir, "lineitem")
       // the weighted co-purchase graph as a first-class projection:
-      // parts sharing an order, weight = distinct shared orders;
-      // session-shared with graph_mst ([[coPurchaseProjection]], r16)
-      coPurchaseProjection(s, dir).orderBy("a", "b")
+      // parts sharing an order, weight = distinct shared orders
+      coPurchaseProjection(s).orderBy("a", "b")
     },
     "graph_mst" -> { (s, dir) =>
       prep(s, dir, "lineitem")
       // r13: Boruvka minimum spanning forest over the co-purchase
       // projection with cost = 1e6 DIV co-count — the taxonomy backbone
-      // (strong ties cheap); unique forest via the (w, a, b) total key;
-      // projection session-shared with graph_copurchase (r16)
-      val proj = coPurchaseProjection(s, dir)
+      // (strong ties cheap); unique forest via the (w, a, b) total key
+      val proj = coPurchaseProjection(s)
         .select(col("a"), col("b"), expr("1000000 DIV weight").as("cost"))
       pipeline.Graph.minimumSpanningForest(proj, "a", "b", "cost",
           maxRounds = MstRoundBudget)
@@ -4235,17 +4127,15 @@ object SparkEntry {
     "graph_kcore" -> { (s, dir) =>
       prep(s, dir, "lineitem")
       // 3-core of the co-purchase graph by synchronous peeling — the
-      // dense-farm signal; 8 rounds cover this graph's peel depth;
-      // edges from the session-shared frame ([[coPurchaseWedges]], r16)
-      pipeline.Graph.kCore(coPurchaseWedges(s, dir), "src", "dst", k = 3, rounds = 8)
+      // dense-farm signal; 8 rounds cover this graph's peel depth
+      pipeline.Graph.kCore(coPurchaseWedges(s), "src", "dst", k = 3, rounds = 8)
         .orderBy("node")
     },
     "graph_communities" -> { (s, dir) =>
       prep(s, dir, "lineitem")
       // label-propagation communities over the same co-purchase graph as
-      // graph_triangles — 4 synchronous min-tie rounds, bit-replayable;
-      // edges from the session-shared frame ([[coPurchaseWedges]], r16)
-      pipeline.Graph.labelPropagation(coPurchaseWedges(s, dir), "src", "dst",
+      // graph_triangles — 4 synchronous min-tie rounds, bit-replayable
+      pipeline.Graph.labelPropagation(coPurchaseWedges(s), "src", "dst",
           iterations = 4)
         .orderBy("node")
     },
@@ -4254,9 +4144,8 @@ object SparkEntry {
       // r13: Louvain-style modularity-gain moves over the same
       // co-purchase graph as graph_communities — degree-corrected
       // community detection next to LP's plurality vote; 3 synchronous
-      // rounds, exact DECIMAL gain numerators so the labels hash-gate;
-      // edges from the session-shared frame ([[coPurchaseWedges]], r16)
-      pipeline.Graph.louvainMoves(coPurchaseWedges(s, dir), "src", "dst", rounds = 3)
+      // rounds, exact DECIMAL gain numerators so the labels hash-gate
+      pipeline.Graph.louvainMoves(coPurchaseWedges(s), "src", "dst", rounds = 3)
         .orderBy("node")
     },
     "graph_louvain_full" -> { (s, dir) =>
@@ -4265,9 +4154,8 @@ object SparkEntry {
       // 3 move rounds the communities contract to super-nodes (intra
       // weight → self-loop, inter weight → weighted edge) and 3 weighted
       // move rounds run on the contracted graph; the unfolded assignment
-      // hash-gates vs the per-level CTE replay;
-      // edges from the session-shared frame ([[coPurchaseWedges]], r16)
-      pipeline.Graph.louvain(coPurchaseWedges(s, dir), "src", "dst",
+      // hash-gates vs the per-level CTE replay
+      pipeline.Graph.louvain(coPurchaseWedges(s), "src", "dst",
         roundsPerLevel = 3, levels = 2)
         .orderBy("node")
     },
@@ -4279,27 +4167,24 @@ object SparkEntry {
       // the canonical "who is in a trading loop with whom" readout.
       // Labels are canonical (min node id of the SCC), so a generic
       // DuckDB mutual-reachability closure gates the answer with no
-      // round-structure replay. r15: the fixpoint is session-memoized
-      // ([[orderFlowScc]]) and shared with graph_condensation.
-      orderFlowScc(s, dir).orderBy("node")
+      // round-structure replay.
+      pipeline.Graph.stronglyConnectedComponents(orderFlowEdges(s), "src", "dst")
+        .orderBy("node")
     },
     "graph_walks" -> { (s, dir) =>
       prep(s, dir, "lineitem", "orders")
       // r14: deterministic DeepWalk corpus over the order/return flow
       // graph — md5-derived uniform neighbor steps, 4 hops per start
       // node; the embedding-trainer input whose every row hash-gates
-      pipeline.Graph.randomWalks(orderFlowEdges(s, dir), "src", "dst", walkLen = 4)
+      pipeline.Graph.randomWalks(orderFlowEdges(s), "src", "dst", walkLen = 4)
         .orderBy("start", "step")
     },
     "graph_condensation" -> { (s, dir) =>
       prep(s, dir, "lineitem", "orders")
       // r14: the SCC quotient DAG with longest-path levels over the
       // graph_scc flow graph — how DEEP the order/return flow structure
-      // runs and which components source/sink it. r15: the SCC pass is
-      // shared with graph_scc via the session memo (precomputedScc) —
-      // one fixpoint per session/dir, not two
-      pipeline.Graph.condensationLevels(orderFlowEdges(s, dir), "src", "dst",
-          precomputedScc = Some(orderFlowScc(s, dir)))
+      // runs and which components source/sink it
+      pipeline.Graph.condensationLevels(orderFlowEdges(s), "src", "dst")
         .orderBy("scc")
     },
     "graph_components" -> { (s, dir) =>
@@ -4321,13 +4206,10 @@ object SparkEntry {
       prep(s, dir, "orders", "lineitem")
       // mega-hub pre-flight: log2-bucketed degree distribution of the
       // trade graph — the readout that decides which ops need skew
-      // guards. r16 optimization: degreeProfile canonicalizes to the
-      // distinct undirected edge set internally (least/greatest +
-      // distinct), so the session-shared bidirected frame
-      // ([[tradeEdges]]) collapses to EXACTLY the same undirected set as
-      // the old standalone multiset build — one shared orders⋈lineitem
-      // pass, identical buckets
-      pipeline.Graph.degreeProfile(tradeEdges(s, dir), "src", "dst")
+      // guards. degreeProfile canonicalizes to the distinct undirected
+      // edge set internally (least/greatest + distinct), so the
+      // bidirected [[tradeEdges]] gives the oracle's buckets
+      pipeline.Graph.degreeProfile(tradeEdges(s), "src", "dst")
         .orderBy("bucket")
     },
     "graph_reciprocity" -> { (s, dir) =>
@@ -4373,11 +4255,9 @@ object SparkEntry {
       // r11: harmonic centrality from 8 md5 landmarks over the same
       // bidirected trade graph as graph_bfs — the distance-based
       // centrality the family lacked (PageRank measures flow; exact
-      // closeness is all-pairs); exact integer Σ⌊1e6/d⌋ estimator.
-      // r15: reads its hc: slice of the SHARED multi-salt landmark
-      // pass ([[tradeLandmarks]]) — same result, one BFS for the trio
-      pipeline.Graph.harmonicFromDistances(
-          tradeLandmarks(s, dir).where(col("salt") === "hc:"))
+      // closeness is all-pairs); exact integer Σ⌊1e6/d⌋ estimator
+      pipeline.Graph.harmonicCentrality(tradeEdges(s), "src", "dst",
+          nSeeds = 8, rounds = 4)
         .orderBy("node")
     },
     "graph_eccentricity" -> { (s, dir) =>
@@ -4385,10 +4265,9 @@ object SparkEntry {
       // r15: per-landmark eccentricity + diameter lower bound over the
       // same bidirected trade graph — the BFS-budget pre-flight: a seed
       // whose eccentricity equals the horizon was CLIPPED (raise the
-      // budget), strictly below genuinely ends there; ec: slice of the
-      // shared landmark pass
-      pipeline.Graph.eccentricityFromDistances(
-          tradeLandmarks(s, dir).where(col("salt") === "ec:"))
+      // budget), strictly below genuinely ends there
+      pipeline.Graph.landmarkEccentricity(tradeEdges(s), "src", "dst",
+          nSeeds = 8, rounds = 4)
         .orderBy("seed")
     },
     "graph_closeness" -> { (s, dir) =>
@@ -4397,19 +4276,17 @@ object SparkEntry {
       // the classic Bavelas reciprocal-mean-distance readout next to
       // harmonic's reciprocal-sum (different ranking when distance
       // spreads are wide); independent "cc:" landmark draw, exact
-      // integer n·10⁶ DIV Σd so the estimate hash-gates. r15: cc:
-      // slice of the shared landmark pass
-      pipeline.Graph.closenessFromDistances(
-          tradeLandmarks(s, dir).where(col("salt") === "cc:"))
+      // integer n·10⁶ DIV Σd so the estimate hash-gates
+      pipeline.Graph.closenessCentrality(tradeEdges(s), "src", "dst",
+          nSeeds = 8, rounds = 4)
         .orderBy("node")
     },
     "graph_betweenness" -> { (s, dir) =>
       prep(s, dir, "orders", "lineitem")
       // r13: Brandes-sampled betweenness from 8 md5 landmarks over the
       // bidirected trade graph — which nodes BROKER the flow; ppm
-      // fixed-point dependency accumulation so the estimate hash-gates;
-      // edges from the session-shared frame ([[tradeEdges]], r16)
-      pipeline.Graph.betweennessCentrality(tradeEdges(s, dir), "src", "dst",
+      // fixed-point dependency accumulation so the estimate hash-gates
+      pipeline.Graph.betweennessCentrality(tradeEdges(s), "src", "dst",
           nSeeds = 8, rounds = 4)
         .orderBy("node")
     },
@@ -4417,11 +4294,10 @@ object SparkEntry {
       prep(s, dir, "orders", "lineitem")
       // hop distance from a trusted customer cohort over the bidirected
       // trade graph — the TrustRank-style link-distance quality prior;
-      // unit weights = plain BFS (the w=1 case of shortestPaths);
-      // edges from the session-shared frame ([[tradeEdges]], r16)
+      // unit weights = plain BFS (the w=1 case of shortestPaths)
       val seeds = s.table("orders").select(col("o_custkey").as("node"))
         .where(col("node") % 97 === 0).distinct()
-      pipeline.Graph.shortestPaths(tradeEdges(s, dir), "src", "dst", seeds,
+      pipeline.Graph.shortestPaths(tradeEdges(s), "src", "dst", seeds,
           rounds = 4)
         .orderBy("node")
     },
@@ -4430,9 +4306,8 @@ object SparkEntry {
       // weighted min-cost variant over the same graph: integer edge cost
       // derived from the endpoints (deterministic, oracle-replayable), so
       // a cheap 2-hop route can beat an expensive direct edge — the case
-      // that distinguishes Bellman-Ford relaxation from plain BFS;
-      // edges from the session-shared frame ([[tradeEdges]], r16)
-      val edges = tradeEdges(s, dir)
+      // that distinguishes Bellman-Ford relaxation from plain BFS
+      val edges = tradeEdges(s)
         .withColumn("w", lit(1L) + (col("src") + col("dst")) % 7)
       val seeds = s.table("orders").select(col("o_custkey").as("node"))
         .where(col("node") % 97 === 0).distinct()

@@ -272,7 +272,10 @@ object Builtins {
       while (m.find()) b += m.group(1)
       b.result()
     }
-    (JPattern.compile(re, f), names)
+    // jq 1.6 words a bad pattern as "Regex failure: <reason>"
+    try (JPattern.compile(re, f), names)
+    catch { case e: java.util.regex.PatternSyntaxException =>
+      throw JqError.of(s"Regex failure: ${e.getDescription}") }
   }
 
   private def matchObj(s: String, m: Matcher, names: List[String]): JsonNode = {
@@ -372,14 +375,14 @@ object Builtins {
         case '<' => "&lt;"
         case '>' => "&gt;"
         case '&' => "&amp;"
-        case '\'' => "&#39;"
+        case '\'' => "&apos;"
         case '"' => "&quot;"
         case c => c.toString
       }
     case "uri" =>
       render(v).getBytes(StandardCharsets.UTF_8).flatMap { b =>
         val c = b.toChar
-        if (c.isLetterOrDigit && c < 128 || "-_.~".indexOf(c.toInt) >= 0) c.toString
+        if (c.isLetterOrDigit && c < 128 || "-_.~!*'()".indexOf(c.toInt) >= 0) c.toString
         else f"%%${b & 0xff}%02X"
       }.mkString
     case "csv" =>
@@ -407,7 +410,15 @@ object Builtins {
     case "base64" =>
       java.util.Base64.getEncoder.encodeToString(render(v).getBytes(StandardCharsets.UTF_8))
     case "base64d" =>
-      new String(java.util.Base64.getDecoder.decode(render(v)), StandardCharsets.UTF_8)
+      val text = render(v)
+      val bytes =
+        try java.util.Base64.getDecoder.decode(text)
+        catch { case _: IllegalArgumentException =>
+          // jq 1.6's two wordings: one character left over, or anything else
+          val why = if (text.count(_ != '=') % 4 == 1) "trailing base64 byte found"
+                    else "is not valid base64 data"
+          throw JqError.of(s"string${preview(Json.text(text))} $why") }
+      new String(bytes, StandardCharsets.UTF_8)
     case "base32" => base32Encode(render(v).getBytes(StandardCharsets.UTF_8))
     case "base32d" => new String(base32Decode(render(v)), StandardCharsets.UTF_8)
     case other => throw JqError.of(s"$other is not a valid format")
@@ -650,8 +661,13 @@ object Builtins {
     },
 
     fn0("explode")(in => arr(requireString(in, "exploded").codePoints().toArray.toSeq.map(cp => num(cp)))),
+    // a number that is no Unicode scalar value becomes U+FFFD: jq 1.6 does
+    // so above U+10FFFF and aborts on a negative one or a surrogate
     fn0("implode") { in =>
-      val cps = elems(in, "imploded").map(e => requireNumber(e, "implode").toInt).toArray
+      val cps = elems(in, "imploded").map { e =>
+        val cp = requireNumber(e, "implode").toInt
+        if (cp < 0 || cp > 0x10FFFF || (cp >= 0xD800 && cp <= 0xDFFF)) 0xFFFD else cp
+      }.toArray
       text(new String(cps, 0, cps.length))
     },
 
@@ -665,7 +681,12 @@ object Builtins {
       } else throw JqError.of(s"${Json.typeName(in)}${preview(in)} cannot be parsed as a number")
     },
     fn0("tojson")(in => text(serialize(in))),
-    fn0("fromjson")(in => Jq.parseJson(requireString(in, "parsed as JSON"))),
+    fn0("fromjson") { in =>
+      val text = requireString(in, "parsed as JSON")
+      try Jq.parseJson(text)
+      catch { case e: com.fasterxml.jackson.core.JsonProcessingException =>
+        throw JqError.of(s"${e.getOriginalMessage} (while parsing '$text')") }
+    },
     fn0("type")(in => text(Json.typeName(in))),
 
     // type-filter builtins
@@ -772,8 +793,9 @@ object Builtins {
 
     gen("paths", 0, (_, root, _, k) => allPaths(root, Vector.empty, (p, _) => if (p.nonEmpty) k(p)))(
       (_, in, _, k) => allPaths(in, Vector.empty, (p, _) => if (p.nonEmpty) k(arr(p)))),
+    // jq 1.6: one path per truthy output of f
     gen("paths", 1)((a, in, fr, k) =>
-      allPaths(in, Vector.empty, (p, v) => if (p.nonEmpty && exists(a(0), v, fr, truthy)) k(arr(p)))),
+      allPaths(in, Vector.empty, (p, v) => if (p.nonEmpty) a(0).run(v, fr, o => if (truthy(o)) k(arr(p))))),
     // jq 1.6: paths(scalars), and select drops null and false leaves
     gen("leaf_paths", 0)((_, in, _, k) =>
       allPaths(in, Vector.empty, (p, v) => if (p.nonEmpty && !v.isArray && !v.isObject && truthy(v)) k(arr(p)))),

@@ -917,15 +917,9 @@ object Graph {
     * `node, n_reached, h_ppm` (nodes reached by ≥1 other landmark). */
   def harmonicCentrality(edges: DataFrame, srcCol: String, dstCol: String,
                          nSeeds: Int = 8, rounds: Int = 6): DataFrame =
-    harmonicFromDistances(landmarkDistances(edges, srcCol, dstCol, nSeeds,
-      rounds, saltPrefix = "hc:", opName = "harmonicCentrality"))
-
-  /** The [[harmonicCentrality]] readout off a (node, seed, dist) frame —
-    * factored so a SHARED multi-salt landmark pass
-    * ([[landmarkDistanceTable]]) can feed it without recomputing the
-    * BFS (r15: the one-forward-pass centrality lifecycle). */
-  def harmonicFromDistances(dists: DataFrame): DataFrame =
-    dists.where(col("dist") > 0)
+    landmarkDistances(edges, srcCol, dstCol, nSeeds, rounds,
+        saltPrefix = "hc:", opName = "harmonicCentrality")
+      .where(col("dist") > 0)
       .groupBy("node")
       .agg(count(lit(1)).as("n_reached"),
         sum(expr("1000000 DIV dist")).as("h_ppm"))
@@ -950,13 +944,9 @@ object Graph {
     * denominator, as with harmonic. Output: `node, n_reached, c_ppm`. */
   def closenessCentrality(edges: DataFrame, srcCol: String, dstCol: String,
                           nSeeds: Int = 8, rounds: Int = 6): DataFrame =
-    closenessFromDistances(landmarkDistances(edges, srcCol, dstCol, nSeeds,
-      rounds, saltPrefix = "cc:", opName = "closenessCentrality"))
-
-  /** The [[closenessCentrality]] readout off a (node, seed, dist) frame
-    * (see [[harmonicFromDistances]]). */
-  def closenessFromDistances(dists: DataFrame): DataFrame =
-    dists.where(col("dist") > 0)
+    landmarkDistances(edges, srcCol, dstCol, nSeeds, rounds,
+        saltPrefix = "cc:", opName = "closenessCentrality")
+      .where(col("dist") > 0)
       .groupBy("node")
       .agg(count(lit(1)).as("n_reached"), sum(col("dist")).as("__sd"))
       // integer DIV end-to-end (never IEEE): n·10⁶ ≤ 1024·10⁶ per node,
@@ -978,69 +968,40 @@ object Graph {
     * Output: `seed, n_reached, eccentricity`, one row per landmark. */
   def landmarkEccentricity(edges: DataFrame, srcCol: String, dstCol: String,
                            nSeeds: Int = 8, rounds: Int = 6): DataFrame =
-    eccentricityFromDistances(landmarkDistances(edges, srcCol, dstCol,
-      nSeeds, rounds, saltPrefix = "ec:", opName = "landmarkEccentricity"))
-
-  /** The [[landmarkEccentricity]] readout off a (node, seed, dist)
-    * frame (see [[harmonicFromDistances]]). */
-  def eccentricityFromDistances(dists: DataFrame): DataFrame =
-    dists.where(col("dist") > 0)
+    landmarkDistances(edges, srcCol, dstCol, nSeeds, rounds,
+        saltPrefix = "ec:", opName = "landmarkEccentricity")
+      .where(col("dist") > 0)
       .groupBy("seed")
       .agg(count(lit(1)).as("n_reached"), max(col("dist")).as("eccentricity"))
 
-  /** Shared landmark multi-source BFS behind [[harmonicCentrality]] /
-    * [[closenessCentrality]]: `nSeeds` deterministic landmarks (bottom-k
-    * by h60(saltPrefix∥node), node), state keyed (node, landmark), edges
-    * shuffled onto src ONCE, one full-outer merge per round,
-    * frontier-empty early exit. Returns `node, seed, dist` (dist 0 at
-    * the landmarks themselves — callers filter). */
+  /** Landmark multi-source BFS behind [[harmonicCentrality]],
+    * [[closenessCentrality]] and [[landmarkEccentricity]]: `nSeeds`
+    * deterministic landmarks (bottom-k by h60(saltPrefix∥node), node),
+    * state keyed (node, landmark), edges shuffled onto src ONCE, one
+    * full-outer merge per hop, one driver action per hop
+    * ([[Materialize.cutLazy]]), frontier-empty early exit. Returns
+    * `node, seed, dist` (dist 0 at the landmarks themselves — callers
+    * filter). */
   private def landmarkDistances(edges: DataFrame, srcCol: String, dstCol: String,
                                 nSeeds: Int, rounds: Int, saltPrefix: String,
-                                opName: String): DataFrame =
-    landmarkDistanceTable(edges, srcCol, dstCol, nSeeds, rounds,
-      Seq(saltPrefix), opName).drop("salt")
-
-  /** SHARED multi-salt landmark BFS (r15 — the r14 verdict's
-    * one-forward-pass centrality lifecycle): each salt draws its own
-    * independent landmark set (the per-estimator sampling-error
-    * isolation the single-salt ops contract), but ALL salts ride ONE
-    * (node, salt, seed)-keyed multi-source BFS — edges shuffle onto src
-    * once, one full-outer merge per hop, one driver action per hop
-    * ([[Materialize.cutLazy]]), frontier-empty early exit. Per-salt
-    * slices are IDENTICAL to the single-salt runs (states never
-    * interact across the salt key), so the harmonic/closeness/
-    * eccentricity readouts — [[harmonicFromDistances]] and siblings —
-    * hash-gate against their unchanged oracles while the three queries
-    * pay one BFS instead of three. Returns `salt, node, seed, dist`
-    * (dist 0 at the landmarks themselves — readouts filter). */
-  def landmarkDistanceTable(edges: DataFrame, srcCol: String, dstCol: String,
-                            nSeeds: Int, rounds: Int,
-                            saltPrefixes: Seq[String],
-                            opName: String = "landmarkDistanceTable"): DataFrame = {
+                                opName: String): DataFrame = {
     require(nSeeds >= 1 && nSeeds <= 1024, s"nSeeds must be in [1, 1024], got $nSeeds")
     require(rounds >= 1 && rounds <= 100, s"rounds must be in [1, 100], got $rounds")
-    require(saltPrefixes.nonEmpty && saltPrefixes.distinct == saltPrefixes,
-      s"saltPrefixes must be nonempty and distinct, got $saltPrefixes")
     Search.requireIntegralId(edges, srcCol, opName, role = "src id")
     Search.requireIntegralId(edges, dstCol, opName, role = "dst id")
     val e0 = Materialize.cut(
       edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst")))
-    val nodeSet = Materialize.cut(
-      e0.select(col("src").as("node"))
-        .union(e0.select(col("dst").as("node"))).distinct())
-    val seeds = saltPrefixes.map { sp =>
-      nodeSet
-        .withColumn("__h",
-          conv(substring(md5(concat(lit(sp), col("node").cast("string"))), 1, 15), 16, 10)
-            .cast("long"))
-        .orderBy(col("__h"), col("node"))
-        .limit(nSeeds)
-        .select(lit(sp).as("salt"), col("node").as("seed"))
-    }.reduce(_ union _)
+    val seeds = e0.select(col("src").as("node"))
+      .union(e0.select(col("dst").as("node"))).distinct()
+      .withColumn("__h",
+        conv(substring(md5(concat(lit(saltPrefix), col("node").cast("string"))), 1, 15), 16, 10)
+          .cast("long"))
+      .orderBy(col("__h"), col("node"))
+      .limit(nSeeds)
+      .select(col("node").as("seed"))
     val ej = Materialize.cut(e0.repartition(col("src")))
     var dists = Materialize.cut(
-      seeds.select(col("salt"), col("seed").as("node"), col("seed"),
-        lit(0L).as("dist")))
+      seeds.select(col("seed").as("node"), col("seed"), lit(0L).as("dist")))
     var frontier = dists
     var r = 0
     var done = false
@@ -1048,8 +1009,8 @@ object Graph {
       r += 1
       val cand = ej.join(frontier.hint("shuffle_hash"),
           ej("src") === frontier("node"))
-        .select(col("dst"), col("salt"), col("seed"), (col("dist") + 1L).as("__nd"))
-        .groupBy("dst", "salt", "seed").agg(min(col("__nd")).as("__nd"))
+        .select(col("dst"), col("seed"), (col("dist") + 1L).as("__nd"))
+        .groupBy("dst", "seed").agg(min(col("__nd")).as("__nd"))
       val improved = col("__old").isNull ||
         (col("__nd").isNotNull && col("__nd") < col("__old"))
       // cutLazy + count (never isEmpty: limit-1 would short-circuit
@@ -1057,21 +1018,18 @@ object Graph {
       val merged = Materialize.cutLazy(
         dists.withColumnRenamed("dist", "__old")
           .withColumnRenamed("seed", "__s")
-          .withColumnRenamed("salt", "__sa")
           .join(cand.hint("shuffle_hash"),
-            col("node") === col("dst") && col("__s") === col("seed") &&
-              col("__sa") === col("salt"), "full")
+            col("node") === col("dst") && col("__s") === col("seed"), "full")
           .select(
             coalesce(col("node"), col("dst")).as("node"),
-            coalesce(col("__sa"), col("salt")).as("salt"),
             coalesce(col("__s"), col("seed")).as("seed"),
             when(improved, col("__nd")).otherwise(col("__old")).as("dist"),
             improved.as("__imp")))
-      frontier = merged.where(col("__imp")).select("salt", "node", "seed", "dist")
+      frontier = merged.where(col("__imp")).select("node", "seed", "dist")
       if (frontier.count() == 0L) done = true
-      dists = merged.select("salt", "node", "seed", "dist")
+      dists = merged.select("node", "seed", "dist")
     }
-    dists.select("salt", "node", "seed", "dist")
+    dists
   }
 
   /** BETWEENNESS centrality, Brandes-sampled from md5 landmarks (Brandes
@@ -2124,23 +2082,6 @@ object Graph {
     Materialize.cut(acc)
   }
 
-  /** Persist an SCC partition as a (node, scc) parquet — the
-    * [[Unigram.saveModel]] lifecycle applied to the fixpoint (r15,
-    * closing the queued item): the in-session memo covers one JVM;
-    * this covers CROSS-SESSION reuse — compute the SCC once per graph
-    * snapshot, then every later condensation / quotient-join job loads
-    * it via [[condensationLevels]]'s `precomputedScc` instead of
-    * re-running the peel. The artifact is self-contained (two long
-    * columns); staleness is the caller's contract, as with any
-    * persisted index in this engine (the IVF/posting lifecycles). */
-  def saveScc(scc: DataFrame, dir: String): Unit =
-    scc.select(col("node").cast("long").as("node"),
-        col("scc").cast("long").as("scc"))
-      .write.mode("overwrite").parquet(dir)
-
-  def loadScc(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir).select(col("node"), col("scc"))
-
   /** DETERMINISTIC RANDOM WALKS (r14) — the DeepWalk/node2vec corpus
     * export (Perozzi et al. KDD'14): one fixed-length walk from every
     * node with out-edges, the sequences that graph-embedding trainers
@@ -2222,17 +2163,10 @@ object Graph {
     * Output: one row per component — `scc, n_members, level`. */
   def condensationLevels(edges: DataFrame, srcCol: String, dstCol: String,
                          maxPeels: Int = 12, maxHops: Int = 40,
-                         maxLevels: Int = 64,
-                         precomputedScc: Option[DataFrame] = None): DataFrame = {
+                         maxLevels: Int = 64): DataFrame = {
     require(maxLevels >= 1 && maxLevels <= 1024,
       s"maxLevels must be in [1, 1024], got $maxLevels")
-    // a caller that already ran [[stronglyConnectedComponents]] on the
-    // SAME edges passes its (node, scc) frame here — the quotient build
-    // then skips the second SCC fixpoint entirely (the r14 verdict's
-    // shared-pass ask; at web-graph scale the duplicated fixpoint is
-    // the difference between one 71 s pass and two)
-    val scc = precomputedScc.getOrElse(Materialize.cut(
-      stronglyConnectedComponents(edges, srcCol, dstCol, maxPeels, maxHops)))
+    val scc = stronglyConnectedComponents(edges, srcCol, dstCol, maxPeels, maxHops)
     val e0 = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .where(col("src") =!= col("dst"))

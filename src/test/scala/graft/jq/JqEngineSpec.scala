@@ -807,4 +807,30 @@ class JqEngineSpec extends AnyFunSuite {
     }
   }
 
+  test("a Java failure inside a builtin is a JqError that try catches") {
+    for (p <- Seq("\"{\" | fromjson", "\"a\" | test(\"(\")", "\"a\" | match(\"[\")",
+                  "\"a\" | [splits(\"(\")]", "\"a\" | sub(\"(\"; \"x\")",
+                  "\"a\" | gsub(\"(\"; \"x\")", "\"@@@\" | @base64d"))
+      assert(run1(s"try ($p) catch \"caught\"") == "\"caught\"", p)
+    // jq 1.6's wordings
+    assert(intercept[JqError](run1("\"nope\" | fromjson")).getMessage.endsWith(" (while parsing 'nope')"))
+    assert(intercept[JqError](run1("\"a\" | test(\"(\")")).getMessage.startsWith("Regex failure: "))
+    assert(intercept[JqError](run1("\"@@@\" | @base64d")).getMessage ==
+      "string (\"@@@\") is not valid base64 data")
+    assert(intercept[JqError](run1("\"a\" | @base64d")).getMessage ==
+      "string (\"a\") trailing base64 byte found")
+  }
+  test("implode writes U+FFFD for a number that is no Unicode scalar value") {
+    assert(run1("[1114112] | implode") == "\"\uFFFD\"")
+    assert(run1("[-1, 55296, 97] | implode") == "\"\uFFFD\uFFFDa\"")
+  }
+  test("paths(f) emits a path once per truthy output of f") {
+    assert(run1("[1,[2]] | [paths(..)] | length") == "4")
+    assert(run1("[[1]] | [paths(..)]") == "[[0],[0],[0,0]]")
+    assert(run1("[[1]] | [paths(false, 1)]") == "[[0],[0,0]]")
+  }
+  test("@uri keeps !*'() and @html writes &apos;") {
+    assert(run1("\"a!*()'b\" | @uri") == "\"a!*()'b\"")
+    assert(run1("\"<'>\" | @html") == "\"&lt;&apos;&gt;\"")
+  }
 }

@@ -156,6 +156,20 @@ class GeneratorSpec extends AnyFunSuite {
       .collect().toSeq == Seq("1"))
   }
 
+  test("a Java failure inside a builtin fails with the reference's wording") {
+    def messages(t: Throwable): List[String] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).toList
+    for ((input, prog, payload) <- Seq(
+           ("""{"s":"@@@"}""", ".s | @base64d", "\"string (\"@@@\") is not valid base64 data\""),
+           ("""{"s":"{"}""", ".s | fromjson", "\""),
+           ("""{"s":"("}""", ".s as $re | \"a\" | test($re)", "\"Regex failure: "))) {
+      val e = intercept[Exception](Seq(input).toDF("j").select(graft.Graft.jq($"j", prog, "string")).collect())
+      val ms = messages(e).filter(_ != null)
+      assert(ms.exists(m => m.startsWith("jq returned an error " + payload) && m.endsWith(" from input: " + input)),
+        s"$prog: $ms")
+    }
+  }
+
   test("non-constant JQ argument is rejected") {
     Seq(("{}", ".")).toDF("j", "prog").createOrReplaceTempView("nc")
     val e = intercept[Exception](spark.sql("SELECT jq(j, prog, 'string') FROM nc").collect())

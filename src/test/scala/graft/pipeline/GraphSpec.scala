@@ -812,25 +812,6 @@ class GraphSpec extends AnyFunSuite {
     assert(got == Map(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 4L, 5L -> 5L), s"$got")
   }
 
-  test("landmarkDistanceTable: per-salt slices equal the single-salt runs") {
-    // the shared multi-salt BFS must be INVISIBLE in the results — each
-    // salt's slice identical to its standalone op (states keyed by salt
-    // never interact), so the three centrality oracles gate unchanged
-    val e = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (2L, 5L),
-      (5L, 6L), (6L, 2L), (4L, 7L)).toDF("src", "dst")
-    val multi = Materialize.cut(Graph.landmarkDistanceTable(
-      e, "src", "dst", nSeeds = 3, rounds = 5, Seq("hc:", "cc:", "ec:")))
-    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.collect().map(_.toString).toSeq.sorted
-    assert(rows(Graph.harmonicFromDistances(multi.where($"salt" === "hc:"))) ==
-      rows(Graph.harmonicCentrality(e, "src", "dst", nSeeds = 3, rounds = 5)))
-    assert(rows(Graph.closenessFromDistances(multi.where($"salt" === "cc:"))) ==
-      rows(Graph.closenessCentrality(e, "src", "dst", nSeeds = 3, rounds = 5)))
-    assert(rows(Graph.eccentricityFromDistances(multi.where($"salt" === "ec:"))) ==
-      rows(Graph.landmarkEccentricity(e, "src", "dst", nSeeds = 3, rounds = 5)))
-    assert(multi.select("salt").distinct().count() == 3)
-  }
-
   test("scc: TRIM prepass is output-identical at every trimRounds setting") {
     // periphery-heavy shape: a 3-cycle core with an incoming tail
     // (9→8→1), an outgoing tail (3→4→5→6), and an isolated 2-cycle —
@@ -844,30 +825,6 @@ class GraphSpec extends AnyFunSuite {
           edges.toDF("src", "dst"), "src", "dst", trimRounds = tr)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == want, s"trimRounds=$tr: $got")
-    }
-  }
-
-  test("condensation: precomputedScc skips the second fixpoint, same answer") {
-    val e = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 4L),
-      (5L, 6L), (3L, 6L)).toDF("src", "dst")
-    val scc = Materialize.cut(Graph.stronglyConnectedComponents(e, "src", "dst"))
-    val shared = Graph.condensationLevels(e, "src", "dst",
-        precomputedScc = Some(scc))
-      .orderBy("scc").as[(Long, Long, Long)].collect().toSeq
-    val solo = Graph.condensationLevels(e, "src", "dst")
-      .orderBy("scc").as[(Long, Long, Long)].collect().toSeq
-    assert(shared == solo, s"$shared vs $solo")
-    // persisted lifecycle: save → load → same quotient, cross-session
-    val dir = java.nio.file.Files.createTempDirectory("sccspec").toFile
-    try {
-      Graph.saveScc(scc, dir.getAbsolutePath)
-      val loaded = Graph.loadScc(spark, dir.getAbsolutePath)
-      val viaDisk = Graph.condensationLevels(e, "src", "dst",
-          precomputedScc = Some(loaded))
-        .orderBy("scc").as[(Long, Long, Long)].collect().toSeq
-      assert(viaDisk == solo, s"$viaDisk vs $solo")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(dir)
     }
   }
 
