@@ -44,12 +44,24 @@ final class CompiledJq private[jq] (val ast: JqExpr) extends Serializable {
   }
 
   /** [[runText]] on a Spark string value. [[Utf8Json]] reads it from its
-    * UTF-8 bytes where they lie; a value it refuses is parsed as
-    * `runText(json.toString, k)`, so outputs and `$error` are those of
+    * UTF-8 bytes where they lie; a value it refuses runs on a null input with
+    * the `$error` its [[Utf8Json.Malformed]] words, or else is parsed as
+    * `runText(json.toString, k)`. So outputs and `$error` are those of
     * `runText` on every value. */
   def runUtf8(json: UTF8String, k: JsonNode => Unit): Unit = {
-    val input = if (json == null) Json.NullN else reader.read(json)
-    if (input != null) program.run(input, Json.NullN, k)
+    var error: JsonNode = Json.NullN
+    val input =
+      try if (json == null) Json.NullN else reader.read(json)
+      catch {
+        // it counts chars as `toString` decodes, which replaces nothing in valid UTF-8
+        case m: Utf8Json.Malformed if json.isValid =>
+          val text = json.toString
+          val (message, className) = m.wording(text, json.numBytes)
+          error = Jq.errorObject(message, className, text)
+          Json.NullN
+        case _: Utf8Json.Malformed => null
+      }
+    if (input != null) program.run(input, error, k)
     else runText(json.toString, k)
   }
 
@@ -152,15 +164,10 @@ object Jq {
   def parsePruned(text: String, fields: Footprint.Fields): JsonNode =
     parse(text, Some(fields))
 
-  /** The reference's three-field `$error` object for a failed parse. */
-  private def errorObject(e: Exception, input: String): JsonNode = {
-    // Jackson builds the message, location included, on every call
-    val message = e.getMessage
-    Json.obj(List(
-      "message" -> Json.text(if (message == null) e.toString else message),
-      "class" -> Json.text(e.getClass.getName),
-      "input" -> Json.text(input)))
-  }
+  /** The reference's three-field `$error` object for a row that failed to
+    * parse, from Jackson's exception or from [[Utf8Json.Malformed]]'s wording. */
+  private[jq] def errorObject(message: String, className: String, input: String): JsonNode =
+    Json.F.objectNode().put("message", message).put("class", className).put("input", input)
 
   /** (input, $error) with the reference's corrupt-input semantics: null
     * input → (null, no error); parse failure → (null, [[errorObject]]). */
@@ -168,7 +175,9 @@ object Jq {
     if (text == null) (Json.NullN, Json.NullN)
     else
       try (parse(text, need), Json.NullN)
-      catch { case e: Exception => (Json.NullN, errorObject(e, text)) }
+      catch { // Jackson builds the message, location included, on every call
+        case e: Exception => (Json.NullN, errorObject(Option(e.getMessage).getOrElse(e.toString), e.getClass.getName, text))
+      }
 
   /** (input, $error) with the reference's corrupt-input semantics. */
   def parseWithError(text: String): (JsonNode, JsonNode) = parseTextWithError(text, None)

@@ -32,10 +32,15 @@ object Values {
     else if (i.isNumber) {
       if (t.isNull) NullN
       else if (t.isArray) {
+        // jq 1.6: an index that is no integer gives null
+        val d = i.doubleValue()
         val n = t.size()
-        var idx = math.floor(i.doubleValue()).toInt
-        if (idx < 0) idx += n
-        if (idx < 0 || idx >= n) NullN else t.get(idx)
+        var idx = d.toInt
+        if (idx != d) NullN
+        else {
+          if (idx < 0) idx += n
+          if (idx < 0 || idx >= n) NullN else t.get(idx)
+        }
       } else throw JqError.of(s"Cannot index ${Json.typeName(t)} with number")
     } else if (i.isObject && t.isArray) {
       // .[{"start":a,"end":b}] — slice via object (path-elem form)
@@ -43,30 +48,28 @@ object Values {
     } else if (t.isNull) NullN
     else throw JqError.of(s"Cannot index ${Json.typeName(t)} with ${Json.typeName(i)}")
 
-  /** Clamps a slice bound to [0, len]; a null bound is `dflt`. */
-  private def clamp(x: JsonNode, dflt: Int, len: Int): Int =
-    if (x == null || x.isNull) dflt
-    else {
-      var v = math.floor(x.doubleValue()).toInt
-      if (v < 0) v += len
-      math.max(0, math.min(len, v))
-    }
+  /** jq 1.6's slice [from, to) of a length: a negative bound counts from
+    * len, both are clamped to [0, len] and the end to no less than the
+    * start; then the start is floored and the end ceiled. A null bound is 0
+    * or len. */
+  private def bounds(from: JsonNode, to: JsonNode, len: Int): (Int, Int) = {
+    def bound(x: JsonNode, dflt: Double): Double =
+      if (x == null || x.isNull) dflt else { val v = x.doubleValue(); if (v < 0) v + len else v }
+    val f = math.max(0.0, math.min(len.toDouble, bound(from, 0)))
+    val e = math.max(f, math.min(len.toDouble, bound(to, len)))
+    (f.toInt, math.ceil(e).toInt)
+  }
 
-  def sliceAccess(t: JsonNode, from: JsonNode, to: JsonNode): JsonNode = {
-    def bounds(len: Int): (Int, Int) = {
-      val f = clamp(from, 0, len)
-      (f, math.max(f, clamp(to, len, len)))
-    }
+  def sliceAccess(t: JsonNode, from: JsonNode, to: JsonNode): JsonNode =
     if (t.isNull) NullN
     else if (t.isArray) {
-      val (f, tt) = bounds(t.size())
+      val (f, tt) = bounds(from, to, t.size())
       arr((f until tt).map(t.get))
     } else if (t.isTextual) {
       val s = t.textValue()
-      val (f, tt) = bounds(s.codePointCount(0, s.length))
+      val (f, tt) = bounds(from, to, s.codePointCount(0, s.length))
       text(s.substring(s.offsetByCodePoints(0, f), s.offsetByCodePoints(0, tt)))
     } else throw JqError.of(s"Cannot index ${Json.typeName(t)} with object")
-  }
 
   /** Pushes `v`, then every value below it, depth first (jq's `..`). */
   def recurseAll(v: JsonNode, k: JsonNode => Unit): Unit = {
@@ -132,9 +135,16 @@ object Values {
     else if (a.isObject && b.isObject) deepMerge(a.asInstanceOf[ObjectNode], b.asInstanceOf[ObjectNode])
     else throw cannot(a, b, "multiplied")
 
-  /** jq 1.6: no copies for n <= 0 (null), else max(1, floor(n)) copies. */
+  /** jq 1.6: no copies for n <= 0 (null), else max(1, floor(n)) copies. A
+    * result longer than the reader's string limit is jq 1.7's error, raised
+    * before anything is allocated. */
   private def repeatStr(s: String, n: Double): JsonNode =
-    if (n <= 0) NullN else text(s * math.max(1.0, math.floor(n)).toInt)
+    if (n <= 0) NullN
+    else {
+      val copies = math.max(1.0, math.floor(n))
+      if (s.length * copies > Jq.readConstraints.getMaxStringLength) throw JqError.of("Repeat string result too long")
+      text(s * copies.toInt)
+    }
 
   def deepMerge(a: ObjectNode, b: ObjectNode): ObjectNode = {
     val out = a.deepCopy[ObjectNode]()
@@ -208,7 +218,7 @@ object Values {
           o
         } else throw JqError.of(s"Cannot index ${Json.typeName(root)} with \"$k\"")
       } else if (el.isNumber) {
-        val idxRaw = math.floor(el.doubleValue()).toInt
+        val idxRaw = el.doubleValue().toInt // jq 1.6 truncates a fractional index
         if (root.isNull) {
           if (idxRaw < 0) throw JqError.of("Out of bounds negative array index")
           val a = F.arrayNode(idxRaw + 1)
@@ -234,8 +244,7 @@ object Values {
           case _ => throw JqError.of(s"Cannot update field at object index of ${Json.typeName(root)}")
         }
         val n = base.size()
-        val f = clamp(el.get("start"), 0, n)
-        val t = math.max(f, clamp(el.get("end"), n, n))
+        val (f, t) = bounds(el.get("start"), el.get("end"), n)
         arr((0 until f).map(base.get) ++ Json.elements(value).toSeq ++ (t until n).map(base.get))
       } else throw JqError.of(s"Invalid path component")
     }
@@ -259,15 +268,14 @@ object Values {
       } else if (el.isNumber) {
         if (!root.isArray) throw JqError.of(s"Cannot delete element of ${Json.typeName(root)}")
         val n = root.size()
-        var idx = math.floor(el.doubleValue()).toInt
+        var idx = el.doubleValue().toInt
         if (idx < 0) idx += n
         if (idx < 0 || idx >= n) root
         else arr((0 until n).filter(_ != idx).map(root.get))
       } else if (el.isObject) {
         if (!root.isArray) throw JqError.of(s"Cannot delete slice of ${Json.typeName(root)}")
         val n = root.size()
-        val f = clamp(el.get("start"), 0, n)
-        val t = math.max(f, clamp(el.get("end"), n, n))
+        val (f, t) = bounds(el.get("start"), el.get("end"), n)
         arr(((0 until f) ++ (t until n)).map(root.get))
       } else root
     } else {
@@ -279,6 +287,6 @@ object Values {
 
   private def getRaw(root: JsonNode, el: JsonNode): JsonNode =
     if (root.isObject && el.isTextual) root.get(el.textValue())
-    else if (root.isArray && el.isNumber) root.get(math.floor(el.doubleValue()).toInt)
+    else if (root.isArray && el.isNumber) root.get(el.doubleValue().toInt)
     else null
 }

@@ -734,6 +734,26 @@ class JqEngineSpec extends AnyFunSuite {
       List("\"x\"", "\"xx\"", "\"x\"", "\"ababab\""))
     assert(run1(""""x" * 0""") == "null")
   }
+  test("an index that is no integer gives null; a slice floors its start and ceils its end") {
+    assert(run1("[1,2,3]|.[1.5]") == "null")
+    assert(run1("[1,2,3]|[.[1.0], .[-1.0], .[-1.5], .[nan]]") == "[2,3,null,null]")
+    assert(run1("[1,2,3]|.[1.7:2.2]") == "[2,3]")
+    assert(run1("[1,2,3]|[.[1.7:1.2], .[-1.5:], .[0.9999:2.0001], .[:1.1]]") == "[[2],[2,3],[1,2,3],[1,2]]")
+    assert(run1("\"abcde\"|[.[1.7:2.2], .[-1.5:]]") == "[\"bc\",\"de\"]")
+    // assignment and deletion take the same slice bounds, and truncate an index
+    assert(run("del(.[-1.5]), (.[-1.5] = 9), del(.[1.5]), (.[1.5] = 9)", "[1,2,3]") ==
+      List("[1,2]", "[1,2,9]", "[1,3]", "[1,9,3]"))
+    assert(run("""(.[1.5:3.5] = ["x"]), del(.[1.5:3.2]), (.[1.2:2.5] |= map(. * 10))""", "[1,2,3,4,5]") ==
+      List("""[1,"x",5]""", "[1,5]", "[1,20,30,4,5]"))
+  }
+  test("a string repeat past the reader's string limit is a catchable error") {
+    assert(run1("""try ("x" * 300000000) catch .""") == "\"Repeat string result too long\"")
+    assert(run1(s"""try ("ab" * ${Jq.readConstraints.getMaxStringLength / 2 + 1}) catch .""") ==
+      "\"Repeat string result too long\"")
+    assert(run1(s"""("ab" * ${Jq.readConstraints.getMaxStringLength / 2}) | length""") ==
+      Jq.readConstraints.getMaxStringLength.toString)
+    assert(run1(""""" * 1e300""") == "\"\"")
+  }
   test("interpolation: the last part is the outer loop and runs first") {
     assert(run(""""\(1,2) \(3,4)"""", "null") == List("\"1 3\"", "\"2 3\"", "\"1 4\"", "\"2 4\""))
     assert(run1("""try "\(error("a"))\(error("b"))" catch .""") == "\"b\"")

@@ -9,11 +9,13 @@ import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Differential spec for the UTF-8 lane: [[Utf8Json]] either refuses a
-  * value or reads it to exactly the node the `String` lane builds from its
-  * `toString` — same node classes, field order and chars — with `$error`
-  * null, on the full and on pruned footprints, wherever the bytes sit (a
-  * whole array, a slice at a non-zero offset, off-heap memory); and
+/** Differential spec for the UTF-8 lane: [[Utf8Json]] either reads a value
+  * to exactly the node the `String` lane builds from its `toString` — same
+  * node classes, field order and chars — with `$error` null, or words its
+  * refusal as exactly the `$error` the `String` lane binds (message, class
+  * and input), or refuses it unworded for the `String` lane to parse; on
+  * the full and on pruned footprints, wherever the bytes sit (a whole
+  * array, a slice at a non-zero offset, off-heap memory). And
   * `CompiledJq.applyToUtf8` gives what `applyToText` gives on every value. */
 class Utf8LaneSpec extends AnyFunSuite {
 
@@ -69,7 +71,24 @@ class Utf8LaneSpec extends AnyFunSuite {
     bytes(0, 0, 0, 0x7B, 0, 0, 0, 0x7D), bytes(0, 0, 0) ++ b("\"é\""), // UTF-32BE-looking
     b("[0") ++ bytes(0) ++ b("]"), b("[0,") ++ bytes(0) ++ b("\"é\"]")) // NUL at a later byte
 
-  private val corpus = laneCorpus ++ nonAscii ++ invalidUtf8 ++ sniffed
+  // what a corrupt row looks like: tiny_rows' trailing garbage, and a
+  // refusal in each grammar state, after a line break or non-ASCII text
+  private val tinyGarbage = Seq("x", "}", " 1", ",", "]")
+  private val corrupt: Seq[Array[Byte]] = (tinyGarbage.map("""{"k": 7}""" + _) ++ Seq(
+    "7x", "7}", "\"s\"]", "{} 1", "[] \"a\"", "{}\t,", "-0x", "1.5e3,", "7 x", "7\rx", "7\n]", "7\t\n,",
+    "{} 7\n", "{} 7\r", "{} 7\r\n", "{} 7\t", "{} -1.5e-3 ", "{} 00", "{} 1x", "{} true", "{} true}", "{} truex",
+    "{} tru", "{} \"a", "{} [", "{}{}", "true x", "truex", "true1", "nullx y", "true{", "true\"", "[true_]",
+    "[true$]", "[truefalse]", "{\"a\": fals}", "[1, tr]", "[nul", "[1 2]", "[1,]", "[1,}", "[}", "{]", "[1}",
+    "{\"a\":1]", "{\"a\":[1}", "{\"a\":}", "{\"a\":]", "{\"a\" 1}", "{\"a\";1}", "{k: 1}", "{,", "[,",
+    "{\"a\":1 ,}", "{\"a\":1 ,]", "[@]", "[#]", "[']", "[\\]", "[.5]", "[/]", "[N]", "[Infinity]", "[+1]",
+    "[_a$b9]", "{\"k\": ", "{\"k\"", "{\"k", "{\"k\": \"v", "[1,", "[1", "{", "[", "\"abc", "{\"a\":1,",
+    "[[[", "{\"a\":{\"b\":[1}", "{\"a\":1,\"b\":2", "[1,2,\n", "\"ab\\", "\"ab\\u12",
+    "\n{\"k\": 7}\nx", "{\"k\": 7}\r\nx", "[1,\r2 x]", "[1,\n\r2 x]", "{\"a\":\n{\"b\":\n[1}", "[\"a\nb\" x]",
+    "{\"a\nb", "{\"é\": 7}x", "[\"日本\" x]", "{\"k\": \"😀\"}]", "{\"é\": \"ü\",\n \"k\": 1 ,}", "[\"ü\",\n{\"a\":1]",
+    "{\"k\": 1} " + "z" * 255, "{\"k\": 1} " + "z" * 256, "[" + "y" * 300 + "]", "[trueé]", "{\"k\": 1}é",
+    "{\"k\": 1}\u007f", "[1,\u0001]", "null+2", "1\r+2", "{} NaN", "{} Nx", "{} +1", "[01]", "[-0 1]", "{\"a\":01}")).map(b)
+
+  private val corpus = laneCorpus ++ nonAscii ++ invalidUtf8 ++ sniffed ++ corrupt
 
   private val needs: Seq[Option[Footprint.Fields]] = Seq(
     None, Some(Map.empty), Some(Map("k" -> None)),
@@ -109,17 +128,44 @@ class Utf8LaneSpec extends AnyFunSuite {
 
   private val readers = (needs ++ fuzzNeeds).distinct.map(n => n -> new Utf8Json(n, Jq.readConstraints)).toMap
 
-  /** What the reader reads `json` to under `need`, spelled out; None when
-    * it refuses. An accepted value must be the String lane's, no `$error`. */
-  private def read(json: UTF8String, need: Option[Footprint.Fields], what: => String = ""): Option[String] = {
+  // refusals the reader worded, and those it left to the String lane's Jackson
+  private var worded, jacksonWorded = 0L
+
+  /** What the reader makes of `json` under `need`: Right(the node, spelled
+    * out), Left(true) when it words a refusal, Left(false) when it leaves
+    * the refusal to the String lane. An accepted value must be the String
+    * lane's, no `$error`; a worded `$error` must be the String lane's,
+    * field for field. */
+  private def outcome(json: UTF8String, need: Option[Footprint.Fields], what: => String): Either[Boolean, String] = {
     val r = readers.getOrElse(need, new Utf8Json(need, Jq.readConstraints))
-    Option(r.read(json)).map { got =>
-      val (v, err) = Jq.parseTextWithError(json.toString, need)
-      assert(err.isNull, s"accepted what the String lane rejects ($what, footprint $need): $err")
-      assert(shape(got) == shape(v), s"node mismatch ($what, footprint $need)")
-      shape(got)
+    val text = json.toString
+    try Option(r.read(json)) match {
+      case Some(got) =>
+        val (v, err) = Jq.parseTextWithError(text, need)
+        check(err.isNull, s"accepted what the String lane rejects ($what, footprint $need): $err")
+        check(shape(got) == shape(v), s"node mismatch ($what, footprint $need)")
+        Right(shape(got))
+      case None =>
+        if (!Jq.parseTextWithError(text, need)._2.isNull) jacksonWorded += 1
+        Left(false)
+    } catch {
+      case m: Utf8Json.Malformed if json.isValid =>
+        val (message, className) = m.wording(text, json.numBytes)
+        val mine = Json.serialize(Jq.errorObject(message, className, text))
+        val jackson = Json.serialize(Jq.parseTextWithError(text, need)._2)
+        check(mine == jackson, s"worded $$error differs ($what, footprint $need):\n  $mine\n  $jackson")
+        worded += 1
+        Left(true)
+      case _: Utf8Json.Malformed =>
+        if (!Jq.parseTextWithError(text, need)._2.isNull) jacksonWorded += 1
+        Left(false)
     }
   }
+
+  /** The node `json` reads to under `need`, spelled out; None when the
+    * reader refuses it, worded or not (see [[outcome]]). */
+  private def read(json: UTF8String, need: Option[Footprint.Fields], what: => String = ""): Option[String] =
+    outcome(json, need, what).toOption
 
   private def read(raw: Array[Byte], need: Option[Footprint.Fields]): Option[String] =
     read(UTF8String.fromBytes(raw), need, hex(raw))
@@ -128,16 +174,24 @@ class Utf8LaneSpec extends AnyFunSuite {
 
   /** The same bytes three ways: a whole array, a slice at a non-zero offset
     * of a larger array (as an UnsafeRow holds it), and off-heap. */
-  private def placements(raw: Array[Byte])(body: (String, UTF8String) => Unit): Unit = {
-    body("array", UTF8String.fromBytes(raw))
-    // the bytes around the slice would break the parse if it read past them
-    val buf = b("""}x"""") ++ raw ++ b(""""]""")
-    body("slice", UTF8String.fromBytes(buf, 3, raw.length))
-    val addr = Platform.allocateMemory(math.max(raw.length, 1).toLong)
-    try {
-      Platform.copyMemory(raw, Platform.BYTE_ARRAY_OFFSET, null, addr, raw.length.toLong)
-      body("off-heap", UTF8String.fromAddress(null, addr, raw.length))
-    } finally Platform.freeMemory(addr)
+  private def placements(raw: Array[Byte])(body: (String, UTF8String) => Unit): Unit =
+    for (where <- Placements.indices) placed(raw, where)(body(Placements(where), _))
+
+  private val Placements = Seq("array", "slice", "off-heap")
+
+  /** The bytes in placement `where` (see [[placements]]). */
+  private def placed(raw: Array[Byte], where: Int)(body: UTF8String => Unit): Unit = where match {
+    case 0 => body(UTF8String.fromBytes(raw))
+    case 1 =>
+      // the bytes around the slice would break the parse if it read past them
+      val buf = b("""}x"""") ++ raw ++ b(""""]""")
+      body(UTF8String.fromBytes(buf, 3, raw.length))
+    case _ =>
+      val addr = Platform.allocateMemory(math.max(raw.length, 1).toLong)
+      try {
+        Platform.copyMemory(raw, Platform.BYTE_ARRAY_OFFSET, null, addr, raw.length.toLong)
+        body(UTF8String.fromAddress(null, addr, raw.length))
+      } finally Platform.freeMemory(addr)
   }
 
   test("the byte lane parses to the String lane's input and $error on every input and footprint") {
@@ -146,6 +200,18 @@ class Utf8LaneSpec extends AnyFunSuite {
       if (read(json, need, s"$where: ${hex(raw)}").isDefined) accepted += 1
     }
     assert(accepted > corpus.size) // most well-formed inputs are read, on all placements
+  }
+
+  test("the reader words corrupt rows as the String lane does, tiny_rows' garbage among them") {
+    val before = worded
+    for (raw <- corrupt; need <- needs) placements(raw) { (where, json) => outcome(json, need, s"$where: ${hex(raw)}") }
+    info(s"${worded - before} refusals worded by the reader")
+    assert(worded - before > corrupt.size * needs.size * 2)
+    // tiny_rows' five forms never reach Jackson, on any footprint or placement
+    for (g <- tinyGarbage; k <- Seq("7", "-12", "999"); need <- needs)
+      placements(b(s"""{"k": $k}$g""")) { (where, json) =>
+        assert(outcome(json, need, s"$where $k$g") == Left(true), s"'$g' after {\"k\": $k} ($where, $need)")
+      }
   }
 
   test("numbers: IntNode in int range, LongNode to 18 digits, longer integers refused, doubles") {
@@ -224,7 +290,9 @@ class Utf8LaneSpec extends AnyFunSuite {
 
   test("a refusal creates no stack trace") {
     assert(Utf8Json.Refused.getStackTrace.isEmpty)
-    assert(new Utf8Json(None, Jq.readConstraints).read(UTF8String.fromString("{")) == null)
+    assert(new Utf8Json(None, Jq.readConstraints).read(UTF8String.fromString("{\"k\": 1e")) == null)
+    val m = intercept[Utf8Json.Malformed](new Utf8Json(None, Jq.readConstraints).read(UTF8String.fromString("{")))
+    assert(m.getStackTrace.isEmpty)
   }
 
   // every byte pair, and 3- and 4-byte sequences with edge continuation
@@ -237,13 +305,22 @@ class Utf8LaneSpec extends AnyFunSuite {
         (0xF0 to 0xF7).flatMap(x => for (y <- edges; z <- edges; w <- edges) yield Seq(x, y, z, w)))
         .filterNot(t => t.contains('"'.toInt) || t.contains('\\'.toInt))
     val keepK: Option[Footprint.Fields] = Some(Map("k" -> None))
+    val before = worded
     for (pre <- Seq(0, 1, 3, 7, 8, 9); post <- Seq(0, 1, 8); tail <- tails) {
       val text = b("a" * pre) ++ tail.map(_.toByte) ++ b("b" * post)
       val valid = UTF8String.fromBytes(tail.map(_.toByte).toArray).isValid
       val kept = b("[\"") ++ text ++ b("\"]")
       check(read(kept, None).isDefined == valid, hex(kept))
       check(read(b("""{"drop": """") ++ text ++ b("""", "k": 1}"""), keepK).isDefined, hex(text))
+      // an error after the string is worded, its column counted in chars, iff the row is valid UTF-8
+      if (pre % 7 == 0 && post == 0) {
+        val late = UTF8String.fromBytes(kept.dropRight(1) ++ b(" x]"))
+        check(outcome(late, None, hex(kept)) == Left(valid), hex(kept))
+        val skipped = b("""{"drop": """") ++ text ++ b("""",""" + "\n" + """"k": 1 x}""")
+        check(outcome(UTF8String.fromBytes(skipped), keepK, hex(text)) == Left(valid), hex(text))
+      }
     }
+    info(s"${worded - before} refusals worded by the reader")
   }
 
   // a misread offset that still parses cannot hide behind a refusal
@@ -316,7 +393,13 @@ class Utf8LaneSpec extends AnyFunSuite {
     "999999999999999999", "1000000000000000000", "12345678901234567890", "1e400", "-0.0", "1.5",
     "2.5E-3", "1E+2", "0.1", "-1e-400", "9007199254740993", "4.9e-324", "1.7976931348623157e308")
   private val junk: Array[Array[Byte]] = Array(",", "]", "}", "\"", "\\", " x", "0", "-", ":", "{", "[",
-    "e", ".", "tru", "null").map(b) ++ Array(bytes(0), bytes(0x80), bytes(0xC3), bytes(0xEF, 0xBB, 0xBF))
+    "e", ".", "tru", "null", "\n", "\r\n", "é", "日本", "😀").map(b) ++
+    Array(bytes(0), bytes(0x80), bytes(0xC3), bytes(0xEF, 0xBB, 0xBF))
+  // content after a root value of each kind: tiny_rows' garbage, a second
+  // value, a glued literal or number, after blanks and line breaks
+  private val tails: Array[Array[Byte]] = Array("x", "}", " 1", ",", "]", "\t,", " \"a\"", "\"s\"", "1", " -2.5",
+    "{}", " [", "x1", "true", "e", " nul", "_$", "\n}", "\r\n,", "\n\n x", "\r]", " 7\n", " 7\r", " é", ":",
+    " @", "+2", " NaN", " I", "0").map(b)
 
   private val blanks = Array(" ", "\n", "\t", "\r", "  ")
   private val literals = Array("true", "false", "null")
@@ -363,10 +446,11 @@ class Utf8LaneSpec extends AnyFunSuite {
     for (_ <- 0 until 1 + r.nextInt(3)) {
       val at = if (x.isEmpty) 0 else r.nextInt(x.length)
       val piece = junk(r.nextInt(junk.length))
-      x = r.nextInt(4) match {
+      x = r.nextInt(5) match {
         case 0 if x.nonEmpty => x.patch(at, Nil, 1) // delete a byte
         case 1 => x.patch(at, piece, 0) // insert
         case 2 if x.nonEmpty => x.patch(at, piece, 1) // replace
+        case 3 => x ++ tails(r.nextInt(tails.length)) // append after the root value
         case _ => x.take(at) // truncate
       }
     }
@@ -376,16 +460,22 @@ class Utf8LaneSpec extends AnyFunSuite {
   test("seeded fuzz: 120k generated and mutated inputs on five footprints read as on the String lane") {
     val r = new SplittableRandom(20261019L)
     var accepted, refused = 0
-    for (_ <- 0 until 120000) {
+    val (worded0, jackson0) = (worded, jacksonWorded)
+    for (n <- 0 until 120000) {
       val out = new ByteArrayOutputStream()
       gen(r, out, if (r.nextInt(3) == 0) 4 else 0)
       val doc = out.toByteArray
       val raw = if (r.nextInt(3) == 0) mutate(r, doc) else doc
-      val json = UTF8String.fromBytes(raw)
-      for (need <- fuzzNeeds)
-        if (read(json, need, hex(raw)).isDefined) accepted += 1 else refused += 1
+      // each input in one placement, the three in turn
+      placed(raw, n % Placements.size) { json =>
+        for (need <- fuzzNeeds)
+          if (read(json, need, s"${Placements(n % Placements.size)}: ${hex(raw)}").isDefined) accepted += 1
+          else refused += 1
+      }
     }
-    info(s"$accepted reads accepted, $refused refused")
+    info(s"$accepted reads accepted, $refused refused: ${worded - worded0} worded by the reader, " +
+      s"${jacksonWorded - jackson0} left to Jackson to word")
     assert(accepted > 200000 && refused > 50000)
+    assert(worded - worded0 > refused / 3)
   }
 }

@@ -129,6 +129,31 @@ class GeneratorSpec extends AnyFunSuite {
       Option(e.getCause).exists(_.getMessage.contains("Unrecognized token")))
   }
 
+  test("corrupt rows held in an UnsafeRow bind the String lane's $error through jq() and jq_string") {
+    val rows = Seq(
+      // tiny_rows' garbage
+      """{"k": 7}x""", """{"k": 7}}""", """{"k": 7} 1""", """{"k": 7},""", """{"k": 7}]""",
+      // an unexpected character in each grammar state, a glued literal, a
+      // root number, a second root value, a mismatched close marker
+      """[1 2]""", """{"a" 1}""", """{k: 1}""", """{"a": 1 "b": 2}""", """[1,}""", """{"a":1]""", "[truex]",
+      "7x", """{} "a"""", "[@]",
+      // truncated: JsonEOFException in an object, an array, a string, a name
+      """{"k": {"deep": [1, 2""", """{"k": "trunc""", """{"k": """, """{"ke""",
+      // non-ASCII text and line breaks before the error
+      "{\"é\": \"日本\",\n \"k\": 1 x}", "[\"😀\"]\r\n]", "{\"ü\": [1,\n2}")
+    // after a shuffle each value lies inside its UnsafeRow's bytes
+    rows.toDF("j").repartition(2).createOrReplaceTempView("corrupt_rows")
+    val stringLane = rows.map(r => r -> graft.jq.Json.render(graft.jq.Jq.compile("$error").applyToText(r).next())).toMap
+    val viaJq = spark.sql("SELECT j, e.col1 FROM corrupt_rows LATERAL VIEW jq(j, '$error', 'string') e")
+      .as[(String, String)].collect().toMap
+    val viaJqString = spark.sql("SELECT j, jq_string(j, '$error') FROM corrupt_rows").as[(String, String)].collect().toMap
+    for (r <- rows) {
+      assert(stringLane(r).contains("\"class\":\"com.fasterxml.jackson.core"), r)
+      assert(viaJq(r) == stringLane(r), r)
+      assert(viaJqString(r) == stringLane(r), r)
+    }
+  }
+
   test("jq runtime error fails with the reference's wording (JsonQueryUDTF.java:101)") {
     val expected = """jq returned an error "boom" from input: {"a":1}"""
     def messages(t: Throwable): List[String] =
