@@ -167,7 +167,7 @@ object Bench {
       val docs = spark.read.parquet(s"$benchDir/documents.parquet").limit(200)
       pipeline.Dedup.minhashDedupPairs(docs, "doc_id", "text").count()
       val emb = spark.read.parquet(s"$benchDir/embeddings.parquet").limit(200)
-      pipeline.Similarity.lshTopK(emb, emb.limit(3), "vec_id", "embedding", k = 5).count()
+      pipeline.Similarity.lshTopKExact(emb, emb.limit(3), "vec_id", "embedding", k = 5).count()
     }
     catch { case e: Throwable => System.err.println(s"[bench] warmup failed: ${e.getMessage}") }
 

@@ -1426,9 +1426,8 @@ object SparkEntry {
       // is lshTopKExact — md5-h60-derived INTEGER hyperplanes over the
       // quantized vector, exact integer margins with plane-index ties —
       // so planes → sign buckets → margin-ranked probes → bucket join →
-      // quantized-cosine rerank replay end-to-end in DuckDB. The
-      // double-hyperplane lshTopK stays as the float option; recall
-      // floors for BOTH variants are measured in PipelineSpec
+      // quantized-cosine rerank replay end-to-end in DuckDB. The recall
+      // floor is measured in PipelineSpec
       val emb = s.table("embeddings")
       pipeline.Similarity.lshTopKExact(
           emb, emb.where(col("vec_id") < 5), "vec_id", "embedding", k = 10)
@@ -1540,8 +1539,9 @@ object SparkEntry {
       // variant is ivfTopKExact (the integer-exact quantizer the
       // emb_mutual_pairs_blocked unroll already pins), so sample → Lloyd
       // rounds → probing → ranked cosine replay end-to-end in DuckDB.
-      // The double-precision ivfTopK stays as the float-quantizer option;
-      // recall floors for BOTH are measured in PipelineSpec
+      // The float-quantizer ivfTopK stays as the in-job reference the
+      // persisted IVF index is compared against; recall floors for both
+      // are measured in PipelineSpec
       val emb = s.table("embeddings")
       pipeline.Similarity.ivfTopKExact(
           emb, emb.where(col("vec_id") < 5), "vec_id", "embedding", k = 10,
@@ -1555,10 +1555,8 @@ object SparkEntry {
       // integer scatter matrix, BigInt power iteration with
       // truncating-DIV rescale, integer Rayleigh deflation, integer
       // projected-dot shortlist, exact rerank — so the model, shortlist
-      // and ranking replay end-to-end in DuckDB. The float-Jacobi
-      // pcaTopK stays as the float option; recall floors for BOTH are
-      // spec-pinned (the integer variant's 0.94 mean BEATS the float
-      // family's 0.80 at the same r — the bigger expand does it)
+      // and ranking replay end-to-end in DuckDB. The recall floor is
+      // pinned in PcaSpec
       val emb = s.table("embeddings")
       pipeline.Similarity.pcaTopKExact(
           emb, emb.where(col("vec_id") < 5), "vec_id", "embedding", k = 10,
@@ -1571,8 +1569,8 @@ object SparkEntry {
       // r11: the registered variant is pqTopKExact — md5-h60 sample
       // order, per-subspace pure-long Lloyd codebooks, integer
       // codes/LUTs/ADC — so training, compression, the shortlist and
-      // the rerank all replay in DuckDB. The double-codebook pqTopK
-      // stays as the float option; recall floors for BOTH in PipelineSpec
+      // the rerank all replay in DuckDB. The recall floor is measured
+      // in PipelineSpec
       val emb = s.table("embeddings")
       pipeline.Similarity.pqTopKExact(
           emb, emb.where(col("vec_id") < 5), "vec_id", "embedding", k = 10)
@@ -8924,20 +8922,19 @@ object SparkEntry {
     // only ever needed if the driver regenerates testdata with a new seed
     // — which would name itself as exactly these four rows going red.
     // r11: re-pinned to lshTopKExact (the registered, hash-gated variant;
-    // mean recall 0.84 vs the double family's 0.76 on the same geometry)
+    // mean recall 0.84)
     "ann_lsh_recall" -> annRecallOracleSql(
       Seq(800000L, 1000000L, 900000L, 700000L, 800000L), floorPpm = 700000L),
     "ann_ivf_recall" -> annRecallOracleSql(
       Seq(800000L, 800000L, 1000000L, 800000L, 900000L), floorPpm = 800000L),
     // r11: re-pinned to pqTopKExact (the registered, hash-gated variant;
-    // mean recall 0.94, matching the float codebooks on the same geometry)
+    // mean recall 0.94)
     "ann_pq_recall" -> annRecallOracleSql(
       Seq(900000L, 900000L, 900000L, 1000000L, 1000000L), floorPpm = 800000L),
     // r12: re-pinned to pcaTopKExact (the registered, hash-gated variant;
-    // mean recall 0.94 — ABOVE the float family's 0.80: the integer
-    // eigenbasis is slightly noisier per-direction but the expand=24
-    // shortlist + exact rerank more than buys it back). Query 0 is still
-    // the documented near-uniform worst case, now 0.90 instead of 0.30.
+    // mean recall 0.94 — the expand=24 shortlist + exact rerank buy back
+    // the integer eigenbasis's per-direction noise). Query 0 is the
+    // documented near-uniform worst case, at 0.90.
     "ann_pca_recall" -> annRecallOracleSql(
       Seq(900000L, 1000000L, 1000000L, 1000000L, 800000L), floorPpm = 800000L),
     // r14: the Matryoshka audit's pinned finding is the LOW side — an

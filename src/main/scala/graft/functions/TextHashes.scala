@@ -362,116 +362,6 @@ case class CosineSim(left: Expression, right: Expression)
   override def prettyName: String = "cosine_sim"
 }
 
-/** lsh_buckets(vec) → array<int>: random-hyperplane sign-bucket id per LSH
-  * table, all tables in one pass over the vector. Hyperplane components are
-  * derived from splitmix64(table, plane, dim) — deterministic, no state to
-  * ship. Replaces an interpreted zip_with/aggregate formulation (higher-
-  * order functions don't codegen; measured ~10M lambda steps per 2k rows). */
-case class LshBuckets(child: Expression, numTables: Int, numPlanes: Int, dim: Int)
-    extends UnaryExpression with CodegenFallback {
-  require(numPlanes <= 30)
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = true
-
-  /** [table][plane][dim] — built once per expression instance */
-  @transient private lazy val planes: Array[Array[Array[Double]]] =
-    Array.tabulate(numTables, numPlanes, dim) { (t, p, d) =>
-      val h = Mix.splitmix64((t.toLong << 40) ^ (p.toLong << 20) ^ d.toLong ^ 0x9e37L)
-      (h >>> 11).toDouble / (1L << 52).toDouble * 2.0 - 1.0
-    }
-
-  override def nullSafeEval(v: Any): Any = {
-    val a = v.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), dim)
-    val out = new Array[Any](numTables)
-    var t = 0
-    while (t < numTables) {
-      var bucket = 0
-      var p = 0
-      while (p < numPlanes) {
-        val plane = planes(t)(p)
-        var dot = 0.0
-        var d = 0
-        while (d < n) { dot += a.getFloat(d).toDouble * plane(d); d += 1 }
-        if (dot >= 0) bucket |= (1 << p)
-        p += 1
-      }
-      out(t) = bucket
-      t += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): LshBuckets =
-    copy(child = newChild)
-  override def prettyName: String = "lsh_buckets"
-}
-
-/** lsh_probe_buckets(vec) → array<array<int>>: per LSH table, the query-side
-  * multi-probe bucket list — the vector's own bucket plus every bucket
-  * reachable by flipping up to `radius` of the `probeBits` planes with the
-  * smallest projection margin |dot|. Margin-ranked perturbation is the
-  * multi-probe LSH scheme of Lv et al., VLDB 2007: a near neighbor that
-  * landed on the wrong side of a hyperplane almost always did so on one the
-  * query itself barely cleared, so probing those buckets first buys recall
-  * without extra tables. Corpus side stays single-bucket (LshBuckets). */
-case class LshProbes(child: Expression, numTables: Int, numPlanes: Int,
-                     dim: Int, probeBits: Int, radius: Int)
-    extends UnaryExpression with CodegenFallback {
-  require(numPlanes <= 30 && probeBits <= numPlanes && radius <= probeBits)
-
-  override def dataType: DataType =
-    ArrayType(ArrayType(IntegerType, containsNull = false), containsNull = false)
-  override def nullable: Boolean = true
-
-  @transient private lazy val planes: Array[Array[Array[Double]]] =
-    Array.tabulate(numTables, numPlanes, dim) { (t, p, d) =>
-      val h = Mix.splitmix64((t.toLong << 40) ^ (p.toLong << 20) ^ d.toLong ^ 0x9e37L)
-      (h >>> 11).toDouble / (1L << 52).toDouble * 2.0 - 1.0
-    }
-
-  override def nullSafeEval(v: Any): Any = {
-    val a = v.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), dim)
-    val out = new Array[Any](numTables)
-    var t = 0
-    while (t < numTables) {
-      val dots = new Array[Double](numPlanes)
-      var bucket = 0
-      var p = 0
-      while (p < numPlanes) {
-        val plane = planes(t)(p)
-        var dot = 0.0
-        var d = 0
-        while (d < n) { dot += a.getFloat(d).toDouble * plane(d); d += 1 }
-        dots(p) = dot
-        if (dot >= 0) bucket |= (1 << p)
-        p += 1
-      }
-      val ranked = (0 until numPlanes).sortBy(p => math.abs(dots(p))).take(probeBits).toArray
-      val probes = scala.collection.mutable.ArrayBuffer[Any](Int.box(bucket))
-      def expand(start: Int, mask: Int, depth: Int): Unit = {
-        var i = start
-        while (i < ranked.length) {
-          val m = mask | (1 << ranked(i))
-          probes += Int.box(bucket ^ m)
-          if (depth + 1 < radius) expand(i + 1, m, depth + 1)
-          i += 1
-        }
-      }
-      if (radius > 0) expand(0, 0, 0)
-      out(t) = new GenericArrayData(probes.toArray)
-      t += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): LshProbes =
-    copy(child = newChild)
-  override def prettyName: String = "lsh_probe_buckets"
-}
-
 /** Shared component table for the ORACLE-REPLAYABLE LSH family (r11):
   * integer hyperplane components derived from the house md5-h60 hash —
   * `comp(t,p,d) = h60("lshx:t:p:d") % 2^21 − 2^20` ∈ [−2^20, 2^20) —
@@ -488,9 +378,10 @@ private[functions] object LshExactPlanes {
     }
 }
 
-/** lsh_buckets_exact(qvec) → array<int>: [[LshBuckets]]'s INTEGER-EXACT
-  * twin over the quantized long vector — sign buckets of md5-h60-derived
-  * integer hyperplanes, replayable in DuckDB (see [[LshExactPlanes]]). */
+/** lsh_buckets_exact(qvec) → array<int>: random-hyperplane sign-bucket id
+  * per LSH table, all tables in one pass over the quantized long vector —
+  * sign buckets of md5-h60-derived integer hyperplanes, replayable in
+  * DuckDB (see [[LshExactPlanes]]). */
 case class LshBucketsExact(child: Expression, numTables: Int, numPlanes: Int, dim: Int)
     extends UnaryExpression with CodegenFallback {
   require(numPlanes <= 30)
@@ -528,11 +419,16 @@ case class LshBucketsExact(child: Expression, numTables: Int, numPlanes: Int, di
   override def prettyName: String = "lsh_buckets_exact"
 }
 
-/** lsh_probe_buckets_exact(qvec) → array<array<int>>: [[LshProbes]]'s
-  * INTEGER-EXACT twin — margin-ranked multi-probe (Lv et al. VLDB'07)
-  * where the margin is the exact integer |dot| and ties break on the
-  * plane index, so the probe SET is deterministic and a DuckDB
-  * row_number() replay selects the same probeBits planes. */
+/** lsh_probe_buckets_exact(qvec) → array<array<int>>: per LSH table, the
+  * query-side multi-probe bucket list — the vector's own bucket plus every
+  * bucket reachable by flipping up to `radius` of the `probeBits` planes
+  * with the smallest margin. Margin-ranked perturbation is the multi-probe
+  * LSH scheme of Lv et al., VLDB 2007: a near neighbor that landed on the
+  * wrong side of a hyperplane almost always did so on one the query itself
+  * barely cleared. The margin is the exact integer |dot| and ties break on
+  * the plane index, so the probe SET is deterministic and a DuckDB
+  * row_number() replay selects the same probeBits planes. Corpus side
+  * stays single-bucket ([[LshBucketsExact]]). */
 case class LshProbesExact(child: Expression, numTables: Int, numPlanes: Int,
                           dim: Int, probeBits: Int, radius: Int)
     extends UnaryExpression with CodegenFallback {

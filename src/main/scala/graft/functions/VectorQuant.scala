@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
   * The centroid table is a plan-time constant (trained driver-side on a
   * sample, a few KB) shipped inside the expression — executors need no
   * side channel, and the corpus-assignment pass (`nProbe = 1`) is a pure
-  * map. IVF counterpart of LshBuckets/LshProbes. */
+  * map. IVF counterpart of LshBucketsExact/LshProbesExact. */
 case class NearestCentroids(child: Expression, centroids: Seq[Seq[Double]], nProbe: Int)
     extends UnaryExpression with CodegenFallback {
   require(centroids.nonEmpty && nProbe >= 1 && nProbe <= centroids.length)
@@ -48,133 +48,6 @@ case class NearestCentroids(child: Expression, centroids: Seq[Seq[Double]], nPro
   override protected def withNewChildInternal(newChild: Expression): NearestCentroids =
     copy(child = newChild)
   override def prettyName: String = "nearest_centroids"
-}
-
-/** pq_codes(vec) → array<int>: product-quantization codes — the vector is
-  * unit-normalized, split into `codebooks.length` contiguous subvectors,
-  * and each subvector is replaced by the index of its nearest (L2) entry
-  * in that subspace's codebook. `codebooks(m)(k)(d)` is a plan-time
-  * constant trained driver-side (see Similarity.trainPqCodebooks).
-  *
-  * This is the corpus-side compression pass of PQ search: a dim-float
-  * vector becomes m small ints (m bytes on disk at ksub ≤ 256) — the
-  * representation the ADC scan reads INSTEAD of raw vectors, which is
-  * what makes an exhaustive approximate scan affordable at 100 TB. */
-case class PqCodes(child: Expression, codebooks: Seq[Seq[Seq[Double]]])
-    extends UnaryExpression with CodegenFallback {
-  require(codebooks.nonEmpty && codebooks.head.nonEmpty)
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = true
-
-  @transient private lazy val books: Array[Array[Array[Double]]] =
-    codebooks.map(_.map(_.toArray).toArray).toArray
-
-  override def nullSafeEval(v: Any): Any = {
-    val vec = v.asInstanceOf[ArrayData]
-    val dim = vec.numElements()
-    val unit = PqSupport.unitVec(vec, dim)
-    val m = books.length
-    val dsub = books(0)(0).length
-    val codes = new Array[Any](m)
-    var s = 0
-    while (s < m) {
-      val book = books(s)
-      val off = s * dsub
-      var best = 0
-      var bestD = Double.MaxValue
-      var k = 0
-      while (k < book.length) {
-        val cent = book(k)
-        var d = 0.0
-        var j = 0
-        while (j < dsub && off + j < dim) {
-          val t = unit(off + j) - cent(j); d += t * t; j += 1
-        }
-        if (d < bestD) { bestD = d; best = k }
-        k += 1
-      }
-      codes(s) = best
-      s += 1
-    }
-    new GenericArrayData(codes)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): PqCodes =
-    copy(child = newChild)
-  override def prettyName: String = "pq_codes"
-}
-
-/** pq_lut(vec) → array<double> (m·ksub, flattened): the query-side ADC
-  * lookup table — dot product of the query's unit-normalized subvector
-  * with every codebook entry of its subspace. `pq_adc` then scores a
-  * candidate as Σₘ lut[m·ksub + code_m] ≈ cosine(query, candidate),
-  * m additions per candidate instead of a dim-length dot product. */
-case class PqLut(child: Expression, codebooks: Seq[Seq[Seq[Double]]])
-    extends UnaryExpression with CodegenFallback {
-  require(codebooks.nonEmpty && codebooks.head.nonEmpty)
-
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
-
-  @transient private lazy val books: Array[Array[Array[Double]]] =
-    codebooks.map(_.map(_.toArray).toArray).toArray
-
-  override def nullSafeEval(v: Any): Any = {
-    val vec = v.asInstanceOf[ArrayData]
-    val dim = vec.numElements()
-    val unit = PqSupport.unitVec(vec, dim)
-    val m = books.length
-    val ksub = books(0).length
-    val dsub = books(0)(0).length
-    val lut = new Array[Any](m * ksub)
-    var s = 0
-    while (s < m) {
-      val book = books(s)
-      val off = s * dsub
-      var k = 0
-      while (k < ksub) {
-        val cent = book(k)
-        var dot = 0.0
-        var j = 0
-        while (j < dsub && off + j < dim) { dot += unit(off + j) * cent(j); j += 1 }
-        lut(s * ksub + k) = dot
-        k += 1
-      }
-      s += 1
-    }
-    new GenericArrayData(lut)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): PqLut =
-    copy(child = newChild)
-  override def prettyName: String = "pq_lut"
-}
-
-/** pq_adc(codes, lut) → double: asymmetric-distance-computation score,
-  * Σₘ lut[m·ksub + codes[m]]. The hot inner loop of the PQ scan — m array
-  * reads and adds per (candidate, query) pair; a Spark higher-order
-  * `aggregate`/`zip_with` here would run interpreted per pair. */
-case class PqAdc(left: Expression, right: Expression, ksub: Int)
-    extends BinaryExpression with CodegenFallback {
-  require(ksub >= 1)
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(codesAny: Any, lutAny: Any): Any = {
-    val codes = codesAny.asInstanceOf[ArrayData]
-    val lut = lutAny.asInstanceOf[ArrayData]
-    val m = codes.numElements()
-    var acc = 0.0
-    var s = 0
-    while (s < m) { acc += lut.getDouble(s * ksub + codes.getInt(s)); s += 1 }
-    acc
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): PqAdc = copy(left = newLeft, right = newRight)
-  override def prettyName: String = "pq_adc"
 }
 
 /** quantized_dot(a, b) → bigint: Σ a_i·b_i over two bigint-quantized
@@ -303,10 +176,12 @@ case class UnitQuantize(child: Expression)
   override def prettyName: String = "unit_quantize"
 }
 
-/** pq_codes_int(uq) → array<int>: [[PqCodes]]'s INTEGER-EXACT twin over
-  * the UNIT-QUANTIZED long vector — per subspace, the index of the
-  * nearest (exact long d², ties → smaller code) entry of that subspace's
-  * integer codebook (`Similarity.trainPqCodebooksExact`). Magnitudes:
+/** pq_codes_int(uq) → array<int>: product-quantization codes over the
+  * UNIT-QUANTIZED long vector — per subspace, the index of the nearest
+  * (exact long d², ties → smaller code) entry of that subspace's integer
+  * codebook (`Similarity.trainPqCodebooksExact`). This is the corpus-side
+  * compression pass of PQ search: a dim-long vector becomes m small ints,
+  * the representation the ADC scan reads instead of raw vectors. Magnitudes:
   * unit-quantized components ≤ 10⁶, codebook entries are truncated means
   * of the same, so per-dim diff² ≤ 4·10¹² and a d² over any dsub ≤ 4096
   * stays < 2⁶³. NULL input / NULL element / dim mismatch → NULL (the
@@ -356,10 +231,11 @@ case class PqCodesInt(child: Expression, codebooks: Seq[Seq[Seq[Long]]])
   override def prettyName: String = "pq_codes_int"
 }
 
-/** pq_lut_int(uq) → array<bigint> (m·ksub, flattened): [[PqLut]]'s
-  * INTEGER-EXACT twin — exact long dot of the query's unit-quantized
-  * subvector with every integer codebook entry. |dot| ≤ dsub·10¹² —
-  * long-safe to dsub ≈ 9·10⁶. */
+/** pq_lut_int(uq) → array<bigint> (m·ksub, flattened): the query-side ADC
+  * lookup table — exact long dot of the query's unit-quantized subvector
+  * with every integer codebook entry, so `pq_adc_long` scores a candidate
+  * with m additions instead of a dim-length dot product. |dot| ≤
+  * dsub·10¹² — long-safe to dsub ≈ 9·10⁶. */
 case class PqLutInt(child: Expression, codebooks: Seq[Seq[Seq[Long]]])
     extends UnaryExpression with CodegenFallback {
   require(codebooks.nonEmpty && codebooks.head.nonEmpty)
@@ -403,9 +279,11 @@ case class PqLutInt(child: Expression, codebooks: Seq[Seq[Seq[Long]]])
   override def prettyName: String = "pq_lut_int"
 }
 
-/** pq_adc_long(codes, lut) → bigint: [[PqAdc]]'s integer twin —
-  * Σₘ lut[m·ksub + codes[m]], exact long adds (m ≤ 64 terms of
-  * ≤ dsub·10¹² each — no overflow at any sane geometry). */
+/** pq_adc_long(codes, lut) → bigint: asymmetric-distance-computation
+  * score, Σₘ lut[m·ksub + codes[m]] — the hot inner loop of the PQ scan,
+  * exact long adds (m ≤ 64 terms of ≤ dsub·10¹² each — no overflow at
+  * any sane geometry). A Spark higher-order `aggregate`/`zip_with` here
+  * would run interpreted per pair. */
 case class PqAdcLong(left: Expression, right: Expression, ksub: Int)
     extends BinaryExpression with CodegenFallback {
   require(ksub >= 1)
@@ -426,20 +304,4 @@ case class PqAdcLong(left: Expression, right: Expression, ksub: Int)
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): PqAdcLong = copy(left = newLeft, right = newRight)
   override def prettyName: String = "pq_adc_long"
-}
-
-private[functions] object PqSupport {
-  /** float ArrayData → unit-normalized double array (zero vector kept). */
-  def unitVec(vec: ArrayData, dim: Int): Array[Double] = {
-    val a = new Array[Double](dim)
-    var i = 0
-    var sq = 0.0
-    while (i < dim) { val x = vec.getFloat(i).toDouble; a(i) = x; sq += x * x; i += 1 }
-    if (sq > 0) {
-      val inv = 1.0 / math.sqrt(sq)
-      i = 0
-      while (i < dim) { a(i) *= inv; i += 1 }
-    }
-    a
-  }
 }

@@ -184,6 +184,13 @@ object Builtins {
     requireArray(v, who); Json.elements(v).toList
   }
 
+  /** `.[]`'s outputs as a list: an array's elements or an object's values
+    * (jq 1.6 defines `map` and `flatten` over `.[]`). */
+  private def iterated(v: JsonNode): List[JsonNode] =
+    if (v.isArray) Json.elements(v).toList
+    else if (v.isObject) Json.fields(v).map(_._2).toList
+    else throw JqError.of(s"Cannot iterate over ${Json.typeName(v)}${preview(v)}")
+
   // -- regex --------------------------------------------------------------
 
   private val namedGroupRe = JPattern.compile("\\(\\?<([a-zA-Z][a-zA-Z0-9]*)>")
@@ -490,8 +497,8 @@ object Builtins {
       else if (c.isArray) bool(in.isNumber && in.doubleValue() >= 0 && in.doubleValue() < c.size())
       else throw JqError.of(s"Cannot check whether ${Json.typeName(c)} has a key")
     },
-    fn1("contains")((in, b) => bool(containsRec(in, b))),
-    fn1("inside")((in, b) => bool(containsRec(b, in))),
+    fn1("contains")((in, b) => bool(containsTop(in, b))),
+    fn1("inside")((in, b) => bool(containsTop(b, in))),
 
     fn0("add")(in => elems(in, "added").foldLeft(NullN: JsonNode)(Values.add)),
 
@@ -567,11 +574,11 @@ object Builtins {
       } else arr(elems(in, "reversed").reverse)
     },
 
-    fn0("flatten")(in => arr(flattenRec(elems(in, "flattened"), Int.MaxValue))),
+    fn0("flatten")(in => arr(flattenRec(iterated(in), Int.MaxValue))),
     fn1("flatten") { (in, d) =>
       val depth = requireNumber(d, "flatten").toInt
       if (depth < 0) throw JqError.of("flatten depth must not be negative")
-      arr(flattenRec(elems(in, "flattened"), depth))
+      arr(flattenRec(iterated(in), depth))
     },
 
     fn1("join") { (in, sepN) =>
@@ -764,7 +771,7 @@ object Builtins {
 
     one("map", 1) { (a, in, fr) =>
       val out = F.arrayNode()
-      Json.elements(requireArray(in, "mapped")).foreach(v => a(0).run(v, fr, x => { out.add(x); () }))
+      iterated(in).foreach(v => a(0).run(v, fr, x => { out.add(x); () }))
       out
     },
     one("map_values", 1) { (a, in, fr) =>
@@ -1200,6 +1207,15 @@ object Builtins {
       if (e.isArray && depth > 0) flattenRec(Json.elements(e).toList, depth - 1)
       else List(e)
     }
+
+  /** jq 1.6's `contains`: the two top-level values must be of one kind —
+    * `true` and `false` are two kinds — or it is an error; below the top a
+    * kind mismatch is just `false`. */
+  private def containsTop(a: JsonNode, b: JsonNode): Boolean =
+    if (a.getNodeType == b.getNodeType && (!a.isBoolean || a.booleanValue == b.booleanValue))
+      containsRec(a, b)
+    else throw JqError.of(s"${Json.typeName(a)}${preview(a)} and ${Json.typeName(b)}${preview(b)} " +
+      "cannot have their containment checked")
 
   private def containsRec(a: JsonNode, b: JsonNode): Boolean =
     if (a.isObject && b.isObject)

@@ -11,14 +11,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.{GraftShim => E}
 import org.apache.spark.sql.types._
 
-/** INTEGER-EXACT PCA — the `ann_pca_topk` hash-gate graduation (r12,
-  * verdict Next #3): [[Pca]]'s float covariance + Jacobi eigensolve is
-  * correct but not oracle-replayable (per-rotation IEEE trig), so the
-  * query it backed was rows-only. This is the
-  * `pipeline_quality_classifier` precedent applied to the eigenproblem:
-  * rewrite the float algorithm as an INTEGER recurrence both engines can
-  * replay step for step, then unroll the recurrence into the DuckDB
-  * oracle.
+/** INTEGER-EXACT PCA, the model behind `ann_pca_topk`. A float covariance
+  * + Jacobi eigensolve is not oracle-replayable (per-rotation IEEE trig),
+  * so the eigenproblem is written as an INTEGER recurrence both engines
+  * can replay step for step (the `pipeline_quality_classifier`
+  * precedent), and the DuckDB oracle unrolls the recurrence.
   *
   *  - QUANTIZE: `q_j = floor(x_j·1024 + 0.5)` — ·1024 is a pure exponent
   *    shift (exact in IEEE), the +0.5/floor is exact for |x| < 2⁴¹, so
@@ -26,8 +23,8 @@ import org.apache.spark.sql.types._
   *  - SCATTER: `S = n·Σqqᵀ − (Σq)(Σq)ᵀ` — the integer scatter matrix
   *    (∝ n²·covariance; eigenVECTORS are scale-invariant, so no division
   *    ever happens). One distributed [[IntScatterAgg]] pass with a
-  *    BOUNDED long state (d + d(d+1)/2 sums), the [[CovarianceAgg]]
-  *    shape; the d×d assembly runs driver-side in BigInt.
+  *    BOUNDED long state (d + d(d+1)/2 sums); the d×d assembly runs
+  *    driver-side in BigInt.
   *  - EIGENVECTORS: power iteration with a TRUNCATING-DIV rescale,
   *    `w = S·v;  v' = (w · 2¹⁵) quot (max|w| + 1)` — every step integer
   *    (BigInt quot ≡ Spark `DIV` ≡ DuckDB `//`: all truncate toward
@@ -151,8 +148,7 @@ object PcaExact {
   * [[PcaExact.fit]]: per non-null `array<float>` row, components quantize
   * to `floor(x·1024 + 0.5)` longs and the state accumulates (n, Σq,
   * upper-triangle Σqqᵀ) — d + d(d+1)/2 longs FIXED regardless of corpus
-  * size, element-wise-add mergeable ([[CovarianceAgg]]'s shape with
-  * exact integers). Wrong-length vectors fail loudly. */
+  * size, element-wise-add mergeable. Wrong-length vectors fail loudly. */
 case class IntScatterAgg(child: Expression, d: Int,
                          mutableAggBufferOffset: Int = 0,
                          inputAggBufferOffset: Int = 0)
@@ -252,7 +248,7 @@ object IntScatterAgg {
 /** int_project(vec) with plan-constant integer directions: out_k =
   * (Σⱼ vecs(k)(j)·floor(x_j·scale + 0.5)) quot 2¹⁶ → array<bigint> of
   * length r (Java long division truncates toward zero = DuckDB `//`).
-  * One pass over the input vector (the [[PcaProject]] loop order). */
+  * One pass over the input vector. */
 case class IntProject(child: Expression, vecs: Seq[Seq[Long]], d: Int, scale: Int)
     extends UnaryExpression with CodegenFallback {
   require(vecs.nonEmpty && vecs.forall(_.length == d), "model geometry mismatch")

@@ -304,64 +304,18 @@ object Similarity {
         col("__e.id").as("neighbor_id"), col("__e.score").as("cos_scaled"))
   }
 
-  /** LSH candidate pairs for `lshTopK` — exposed so callers (and the recall
-    * spec) can measure candidate-set size against the N×Q brute-force pair
-    * count. Corpus side: one bucket per table per vector (LshBuckets, one
-    * pass). Query side: multi-probe — the query's own bucket plus every
-    * bucket within `probeRadius` flips of its `probeBits` lowest-margin
-    * hyperplanes (Lv et al., VLDB 2007). Multi-probing buys recall on the
-    * query side only, so the corpus — the 100 TB side — is still read and
-    * bucketed exactly once, and the probe list is broadcast. */
-  def lshCandidates(corpus: DataFrame, queries: DataFrame, idCol: String,
-                    vecCol: String, numTables: Int, numPlanes: Int, dim: Int,
-                    probeBits: Int, probeRadius: Int): DataFrame = {
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-        E.column(graft.functions.LshBuckets(
-          E.expression(col(vecCol)), numTables, numPlanes, dim)).as("__bs"))
-      .select(col("neighbor_id"), posexplode(col("__bs")).as(Seq("table", "bucket")))
-    val q = queries.select(col(idCol).as("query_id"),
-        E.column(graft.functions.LshProbes(
-          E.expression(col(vecCol)), numTables, numPlanes, dim, probeBits, probeRadius)).as("__ps"))
-      .select(col("query_id"), posexplode(col("__ps")).as(Seq("table", "__probes")))
-      .select(col("query_id"), col("table"), explode(col("__probes")).as("bucket"))
-    // dedup candidate IDs first — distinct over bare (id, id) pairs, not
-    // 64-float vectors — then the caller joins vectors back for the rerank
-    c.join(broadcast(q),
-        c("table") === q("table") && c("bucket") === q("bucket") &&
-          col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"))
-      .distinct()
-  }
-
-  /** LSH-bucketed ANN: `numTables` independent hash tables of `numPlanes`
-    * sign bits, query-side multi-probe (see lshCandidates); candidates are
-    * reranked exactly. Output schema matches bruteForceTopK. Recall grows
-    * with numTables and probeRadius (spec measures ≥ 0.8 on the embeddings
-    * table); candidate count stays ≪ N×Q because probing only widens the
-    * broadcast query side.
-    *
-    * Tuning at scale: numPlanes ≈ log2(corpus / target bucket size) — the
-    * candidate fraction is ~(probes per table / 2^numPlanes) × numTables,
-    * so planes must grow with the corpus; probeRadius then buys back the
-    * per-table recall the extra planes cost. Measured at 200k uniform
-    * vectors (SCALE_PROBE.md): 12×13 planes, probe 10/3 → recall 0.81 at
-    * 35% of brute-force pairs; clustered corpora do markedly better. */
-  def lshTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-              vecCol: String, k: Int, numTables: Int = 8,
-              numPlanes: Int = 10, dim: Int = 64,
-              probeBits: Int = 8, probeRadius: Int = 3): DataFrame = {
-    val cands = lshCandidates(corpus, queries, idCol, vecCol,
-      numTables, numPlanes, dim, probeBits, probeRadius)
-    rerank(cands, corpus, queries, idCol, vecCol, k)
-  }
-
-  /** [[lshCandidates]]'s INTEGER-EXACT twin (r11): buckets and margins
-    * computed over the QUANTIZED long vector against md5-h60-derived
-    * integer hyperplanes ([[graft.functions.LshExactPlanes]]), so the
-    * whole candidate generation — planes → dots → sign buckets →
-    * margin-ranked multi-probe → bucket equi-join — replays in DuckDB.
-    * Identical plan shape to the double variant: corpus bucketed in one
-    * pass, probe list broadcast, candidates deduped as bare id pairs. */
+  /** LSH candidate pairs for [[lshTopKExact]] — exposed so callers (and
+    * the recall spec) can measure candidate-set size against the N×Q
+    * brute-force pair count. Buckets and margins are computed over the
+    * QUANTIZED long vector against md5-h60-derived integer hyperplanes
+    * ([[graft.functions.LshExactPlanes]]), so the whole candidate
+    * generation — planes → dots → sign buckets → margin-ranked
+    * multi-probe → bucket equi-join — replays in DuckDB. Corpus side: one
+    * bucket per table per vector, one pass. Query side: multi-probe
+    * (Lv et al., VLDB 2007), which buys recall on the query side only, so
+    * the corpus is read and bucketed exactly once and the probe list is
+    * broadcast. Candidates are deduped as bare id pairs before the
+    * rerank joins vectors back. */
   def lshCandidatesExact(corpus: DataFrame, queries: DataFrame, idCol: String,
                          vecCol: String, numTables: Int, numPlanes: Int,
                          dim: Int, probeBits: Int, probeRadius: Int): DataFrame = {
@@ -382,13 +336,17 @@ object Similarity {
       .distinct()
   }
 
-  /** [[lshTopK]]'s INTEGER-EXACT twin (r11 graduation of `ann_lsh_topk`):
-    * exact-replayable bucketing ([[lshCandidatesExact]]) + the shared
-    * quantized-cosine rerank — every stage deterministic and DuckDB-
-    * replayable, so the ranked output hash-gates. Same recall mechanics
-    * as the double variant (the hyperplane FAMILY changes, not the
-    * geometry: components are uniform on [−2^20, 2^20) instead of
-    * [−1, 1)); floors for both variants are measured in PipelineSpec. */
+  /** LSH-bucketed ANN (`ann_lsh_topk`): `numTables` independent hash
+    * tables of `numPlanes` sign bits, query-side multi-probe
+    * ([[lshCandidatesExact]]), candidates reranked by the shared
+    * quantized cosine — every stage deterministic and DuckDB-replayable,
+    * so the ranked output hash-gates. Output schema matches
+    * bruteForceTopK; the recall floor is measured in PipelineSpec.
+    *
+    * Tuning at scale: numPlanes ≈ log2(corpus / target bucket size) — the
+    * candidate fraction is ~(probes per table / 2^numPlanes) × numTables,
+    * so planes must grow with the corpus; probeRadius then buys back the
+    * per-table recall the extra planes cost. */
   def lshTopKExact(corpus: DataFrame, queries: DataFrame, idCol: String,
                    vecCol: String, k: Int, numTables: Int = 8,
                    numPlanes: Int = 10, dim: Int = 64,
@@ -541,8 +499,9 @@ object Similarity {
       corpus, queries, idCol, vecCol, nLists, nProbe, iters,
       broadcastQueries = broadcastQueries)
 
-  /** [[ivfCandidates]] over a PRE-COLLECTED training sample — lets
-    * compositions (IVF-PQ) train both quantizers from one corpus pass. */
+  /** The shared body of [[ivfCandidates]] and [[ivfCrossCandidates]],
+    * which differ only in self-pair exclusion and in whether the query
+    * side is broadcast. */
   private def ivfCandidatesFrom(sample: Array[Array[Float]], corpus: DataFrame,
                                 queries: DataFrame, idCol: String, vecCol: String,
                                 nLists: Int, nProbe: Int, iters: Int,
@@ -808,71 +767,16 @@ object Similarity {
 
   // ---- PQ (product quantization) ANN -----------------------------------
 
-  /** PQ codebooks: the sample vectors are unit-normalized, split into `m`
-    * contiguous subvectors, and each subspace gets its own `ksub`-centroid
-    * plain (Euclidean) Lloyd run — the Jégou et al. (TPAMI 2011) product
-    * quantizer. Deterministic: seeded init per subspace, fixed iteration
-    * count. Returns codebooks(subspace)(code)(component). */
-  private[pipeline] def trainPqCodebooks(sample: Array[Array[Float]], m: Int,
-                                         ksub: Int, iters: Int): Seq[Seq[Seq[Double]]] = {
-    require(sample.nonEmpty && m >= 1)
-    val dim = sample.head.length
-    require(dim % m == 0, s"subspaces m=$m must divide dim=$dim")
-    val dsub = dim / m
-    def unit(v: Array[Double]): Array[Double] = {
-      val n = math.sqrt(v.map(x => x * x).sum)
-      if (n == 0) v else v.map(_ / n)
-    }
-    val pts = sample.map(v => unit(v.map(_.toDouble)))
-    (0 until m).map { s =>
-      val sub = pts.map(_.slice(s * dsub, (s + 1) * dsub))
-      val n = sub.length
-      // seeded per-subspace init on distinct sample indices
-      val picked = scala.collection.mutable.LinkedHashSet[Int]()
-      var t = 0L
-      while (picked.size < math.min(ksub, n)) {
-        picked += ((Mix.splitmix64(0x9e3779b9L + s * 7919 + t) >>> 1) % n).toInt
-        t += 1
-      }
-      var cents = picked.toArray.map(i => sub(i).clone())
-      var it = 0
-      while (it < iters) {
-        val sums = Array.fill(cents.length, dsub)(0.0)
-        val counts = new Array[Int](cents.length)
-        var i = 0
-        while (i < n) {
-          val v = sub(i)
-          var best = 0; var bestD = Double.MaxValue
-          var c = 0
-          while (c < cents.length) {
-            var d = 0.0; var j = 0
-            while (j < dsub) { val x = v(j) - cents(c)(j); d += x * x; j += 1 }
-            if (d < bestD) { bestD = d; best = c }
-            c += 1
-          }
-          var j = 0
-          while (j < dsub) { sums(best)(j) += v(j); j += 1 }
-          counts(best) += 1
-          i += 1
-        }
-        cents = Array.tabulate(cents.length) { c =>
-          if (counts(c) == 0) cents(c) else sums(c).map(_ / counts(c))
-        }
-        it += 1
-      }
-      cents.map(_.toSeq).toSeq
-    }
-  }
-
-  /** [[trainPqCodebooks]]'s INTEGER-EXACT twin (r11): sample arrives
-    * UNIT-QUANTIZED in (md5-h60, id) order ([[spreadSampleUq]]); per
-    * subspace — seeds = the first `ksub` sample subvectors (hash-rank
+  /** PQ codebooks — the Jégou et al. (TPAMI 2011) product quantizer in
+    * integers: the sample arrives UNIT-QUANTIZED in (md5-h60, id) order
+    * ([[spreadSampleUq]]) and is split into `m` contiguous subvectors;
+    * per subspace — seeds = the first `ksub` sample subvectors (hash-rank
     * convention, like [[trainCentroidsExact]]'s seeds), assignment =
     * exact long d² argmin with smaller-code ties, update = per-dim
     * `Σ DIV n` truncating division, empty codes keep their previous
     * entry. Plain Euclidean Lloyd (no re-normalization — codebook
-    * entries are subvector means, exactly the float variant's
-    * objective), every step DuckDB-replayable. */
+    * entries are subvector means), every step DuckDB-replayable.
+    * Returns codebooks(subspace)(code)(component). */
   private[pipeline] def trainPqCodebooksExact(sample: Array[Array[Long]], m: Int,
                                               ksub: Int, iters: Int): Seq[Seq[Seq[Long]]] = {
     require(sample.nonEmpty && m >= 1)
@@ -913,13 +817,13 @@ object Similarity {
     }.toSeq
   }
 
-  /** [[pqScore]]'s INTEGER-EXACT twin: both sides unit-quantize
+  /** ADC-scored (query, candidate) pairs: both sides unit-quantize
     * ([[unitQuantizeFrom]] — zero-norm rows drop, the NULL-cosine
     * contract), corpus compresses to integer codes
     * ([[graft.functions.PqCodesInt]]), queries precompute integer LUTs
     * ([[graft.functions.PqLutInt]]), and the ADC scan sums exact longs
-    * ([[graft.functions.PqAdcLong]]). Same plan shape as [[pqScore]]:
-    * one corpus map, broadcast LUTs, self pairs excluded. */
+    * ([[graft.functions.PqAdcLong]]): one corpus map, broadcast LUTs,
+    * self pairs excluded. */
   private def pqScoreExact(corpus: DataFrame, queries: DataFrame, idCol: String,
                            vecCol: String, books: Seq[Seq[Seq[Long]]],
                            ksub: Int): DataFrame = {
@@ -941,12 +845,16 @@ object Similarity {
       .drop("__codes", "__lut")
   }
 
-  /** [[pqTopK]]'s INTEGER-EXACT twin (r11 graduation of `ann_pq_topk`):
-    * md5-h60-ordered sample → per-subspace pure-long Lloyd codebooks →
-    * integer codes / LUTs / ADC shortlist (k·expand, (score DESC, id
-    * ASC) ties) → the shared exact quantized-cosine rerank. Every stage
-    * replays in DuckDB, so the ranked output hash-gates; recall floors
-    * for BOTH variants are measured in PipelineSpec. */
+  /** PQ ANN (`ann_pq_topk`): an exhaustive ASYMMETRIC-DISTANCE scan over
+    * compressed codes + exact rerank. md5-h60-ordered sample →
+    * per-subspace pure-long Lloyd codebooks → integer codes / LUTs / ADC
+    * shortlist (k·expand, (score DESC, id ASC) ties) → the shared exact
+    * quantized-cosine rerank. Where IVF prunes ROWS, PQ shrinks BYTES: the
+    * scan reads m codes per vector instead of dim components, and the
+    * rerank touches raw vectors for only k·expand candidates per query.
+    * Every stage replays in DuckDB, so the ranked output hash-gates; the
+    * recall floor is measured in PipelineSpec. Quantization noise is
+    * corpus-size-relative: grow m first, then expand. */
   def pqTopKExact(corpus: DataFrame, queries: DataFrame, idCol: String,
                   vecCol: String, k: Int, m: Int = 8, ksub: Int = 64,
                   sampleSize: Int = 10000, iters: Int = 10,
@@ -959,103 +867,17 @@ object Similarity {
     rerank(shortlist, corpus, queries, idCol, vecCol, k)
   }
 
-  /** PQ ANN: exhaustive ASYMMETRIC-DISTANCE scan over compressed codes +
-    * exact rerank. Corpus vectors are product-quantized to `m` codes
-    * (PqCodes, one map-side pass); each query precomputes an m×ksub dot-
-    * product lookup table (PqLut); the scan scores every (candidate,
-    * query) pair with m table reads (PqAdc) instead of a dim-length dot
-    * product, keeps the `k·expand` best per query (two-phase TopKPairs),
-    * and reranks those exactly on the raw vectors.
-    *
-    * Where IVF prunes ROWS (visit nProbe/nLists of the corpus), PQ shrinks
-    * BYTES: a dim-float vector becomes m codes (m bytes at ksub ≤ 256 —
-    * 32× smaller at dim=64), so the exhaustive pass streams the compressed
-    * table instead of the raw one. The rerank touches raw vectors for only
-    * k·expand candidates per query. At 100 TB the two compose (FAISS's
-    * IVF-PQ): coarse lists bound rows, PQ bounds bytes per row; here they
-    * share ivfCandidates/rerank so that composition is a two-line caller.
-    * Output schema matches bruteForceTopK; recall floor spec'd like
-    * LSH/IVF (rows-only oracle — quantization is data-defined).
-    *
-    * Tuning at scale: quantization noise is corpus-size-relative — the
-    * small-corpus default (m=8, ksub=64) holds recall 0.94 at 2k vectors
-    * but collapses to 0.39 at 200k near-uniform vectors; m=16/ksub=256
-    * (16-byte codes, still 16× compression at dim 64) measures 0.96 at
-    * expand=8 and 0.999 at expand=40 on the same 200k corpus
-    * (SCALE_PROBE.md). Grow m first, then expand. */
-  def pqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-             vecCol: String, k: Int, m: Int = 8, ksub: Int = 64,
-             sampleSize: Int = 10000, iters: Int = 10, expand: Int = 8): DataFrame = {
-    val books = trainPqCodebooks(spreadSample(corpus, idCol, vecCol, sampleSize), m, ksub, iters)
-    val scored = pqScore(corpus, queries, idCol, vecCol, books, ksub, cands = None)
-    val shortlist = topKPerQuery(scored, k * expand)
-      .select(col("query_id"), col("neighbor_id"))
-    rerank(shortlist, corpus, queries, idCol, vecCol, k)
-  }
-
-  /** IVF-PQ (FAISS composition): IVF lists bound the ROWS visited
-    * (candidate fraction ≈ nProbe/nLists), PQ bounds the BYTES per visited
-    * row (m codes ADC-scored instead of a raw-vector dot), and the exact
-    * rerank touches raw vectors for only k·expand winners. The same three
-    * building blocks as ivfTopK/pqTopK — this is the composition the
-    * pqTopK scaladoc promises. Training collects the spread sample ONCE
-    * and feeds both quantizers from it (one TakeOrdered corpus pass,
-    * spec-pinned by job count). */
-  def ivfPqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-                vecCol: String, k: Int, nLists: Int = 64, nProbe: Int = 8,
-                m: Int = 8, ksub: Int = 64, sampleSize: Int = 10000,
-                iters: Int = 10, expand: Int = 8): DataFrame = {
-    val sample = spreadSample(corpus, idCol, vecCol, sampleSize)
-    val cands = ivfCandidatesFrom(sample, corpus, queries, idCol, vecCol, nLists, nProbe, iters)
-    val books = trainPqCodebooks(sample, m, ksub, iters)
-    val scored = pqScore(corpus, queries, idCol, vecCol, books, ksub, Some(cands))
-    val shortlist = topKPerQuery(scored, k * expand)
-      .select(col("query_id"), col("neighbor_id"))
-    rerank(shortlist, corpus, queries, idCol, vecCol, k)
-  }
-
-  /** Persisted IVF index: training + corpus assignment run ONCE and land
-    * on storage; every later query job skips both. Layout under `dir`:
-    *  - `centroids/` — (list, centroid array<double>) parquet;
-    *  - `lists/` — (id, vec) parquet PARTITIONED BY `list`, so probing
-    *    nProbe lists is a storage-level partition-pruned read: the scan
-    *    touches nProbe/nLists of the corpus bytes — the on-disk analogue
-    *    of FAISS's inverted file, expressed entirely through Spark's
-    *    partitioned-parquet machinery (no custom format).
-    * Same seeded training as [[ivfTopK]], so a fresh index + query equals
-    * the in-job operator exactly (spec-pinned). */
-  /** PCA-reduced ANN: fit a [[Pca]] model (one covariance pass + driver
-    * eigensolve), score candidates by cosine in the r-d projected space —
-    * bounding the BYTES/FLOPs per scored pair like PQ's ADC, but with
-    * linear algebra instead of codebooks (r/d of the work; r=8 over d=64
-    * is 8×) — then exact-rerank the k·expand shortlist in the full space.
-    * Projection is a plan-constant pure map; the reduced-space score is a
-    * proxy (projection drops variance and centering shifts angles), so
-    * recall is probabilistic — floor-spec'd like the LSH/IVF/PQ family. */
-  def pcaTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-              vecCol: String, k: Int, r: Int = 8, expand: Int = 8): DataFrame = {
-    val model = Pca.fit(corpus, vecCol, r)
-    val rc = corpus.select(col(idCol).as("neighbor_id"),
-      Dedup.quantize(Pca.transform(model, col(vecCol))).as("__qc"))
-    val rq = queries.select(col(idCol).as("query_id"),
-      Dedup.quantize(Pca.transform(model, col(vecCol))).as("__qq"))
-    val scored = rc.join(broadcast(rq), col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos_scaled", cosScaled(col("__qq"), col("__qc")))
-    val shortlist = topKPerQuery(scored, k * expand)
-      .select(col("query_id"), col("neighbor_id"))
-    rerank(shortlist, corpus, queries, idCol, vecCol, k)
-  }
-
-  /** [[pcaTopK]] on the INTEGER-EXACT eigensolve ([[PcaExact]]: integer
-    * scatter matrix → BigInt power iteration with truncating-DIV rescale
-    * → integer Rayleigh deflation) — identical plan shape (one bounded-
-    * state fit pass, plan-constant projection map, reduced-space
-    * shortlist, exact full-space rerank), but every stage replays in
-    * DuckDB, so the backing query (`ann_pca_topk`, r12) HASH-GATES
-    * against a full CTE unroll instead of rows-only. The float-Jacobi
-    * [[pcaTopK]] stays as the float option; recall floors for BOTH are
-    * spec-pinned. Shortlist score = integer dot of the r projected
-    * components (ties → neighbor id); output schema = bruteForceTopK. */
+  /** PCA-reduced ANN (`ann_pca_topk`) on the INTEGER-EXACT eigensolve
+    * ([[PcaExact]]: integer scatter matrix → BigInt power iteration with
+    * truncating-DIV rescale → integer Rayleigh deflation): one
+    * bounded-state fit pass, a plan-constant projection map, a
+    * reduced-space shortlist — bounding the work per scored pair like
+    * PQ's ADC, r/d of a full dot — and an exact full-space rerank. Every
+    * stage replays in DuckDB, so the backing query HASH-GATES against a
+    * full CTE unroll. The reduced-space score is a proxy, so recall is
+    * probabilistic; its floor is pinned in PcaSpec. Shortlist score
+    * = integer dot of the r projected components (ties → neighbor id);
+    * output schema = bruteForceTopK. */
   def pcaTopKExact(corpus: DataFrame, queries: DataFrame, idCol: String,
                    vecCol: String, k: Int, r: Int = 8, iters: Int = 20,
                    expand: Int = 8): DataFrame = {
@@ -1071,6 +893,16 @@ object Similarity {
     rerank(shortlist, corpus, queries, idCol, vecCol, k)
   }
 
+  /** Persisted IVF index: training + corpus assignment run ONCE and land
+    * on storage; every later query job skips both. Layout under `dir`:
+    *  - `centroids/` — (list, centroid array<double>) parquet;
+    *  - `lists/` — (id, vec) parquet PARTITIONED BY `list`, so probing
+    *    nProbe lists is a storage-level partition-pruned read: the scan
+    *    touches nProbe/nLists of the corpus bytes — the on-disk analogue
+    *    of FAISS's inverted file, expressed entirely through Spark's
+    *    partitioned-parquet machinery (no custom format).
+    * Same seeded training as [[ivfTopK]], so a fresh index + query equals
+    * the in-job operator exactly (spec-pinned). */
   def buildIvfIndex(corpus: DataFrame, idCol: String, vecCol: String, dir: String,
                     nLists: Int = 64, sampleSize: Int = 10000, iters: Int = 10): Unit = {
     val spark = corpus.sparkSession
@@ -1149,27 +981,6 @@ object Similarity {
       .orderBy(col("__h"), col(idCol)) // id tie-break: deterministic under collisions
       .limit(n)
       .collect().map(_.getSeq[Float](0).toArray)
-
-  /** ADC-scored (query, candidate) pairs: corpus compressed to codes
-    * map-side, per-query LUTs broadcast. `cands = None` scans the full
-    * cross product (exhaustive PQ); `Some(pairs)` scores only those pairs
-    * (the IVF-PQ path). */
-  private def pqScore(corpus: DataFrame, queries: DataFrame, idCol: String,
-                      vecCol: String, books: Seq[Seq[Seq[Double]]], ksub: Int,
-                      cands: Option[DataFrame]): DataFrame = {
-    val codes = corpus.select(col(idCol).as("neighbor_id"),
-      E.column(graft.functions.PqCodes(E.expression(col(vecCol)), books)).as("__codes"))
-    val luts = queries.select(col(idCol).as("query_id"),
-      E.column(graft.functions.PqLut(E.expression(col(vecCol)), books)).as("__lut"))
-    val joined = cands match {
-      case None => codes.join(broadcast(luts), col("query_id") =!= col("neighbor_id"))
-      case Some(c) => c.join(broadcast(luts), "query_id").join(codes, "neighbor_id")
-    }
-    joined.withColumn("cos_scaled", floor(lit(1e9) *
-        E.column(graft.functions.PqAdc(
-          E.expression(col("__codes")), E.expression(col("__lut")), ksub))).cast("long"))
-      .drop("__codes", "__lut")
-  }
 
   /** Per-label embedding OUTLIERS: for each label, the `kPerLabel` vectors
     * least similar to their own label's centroid — the standard "find the

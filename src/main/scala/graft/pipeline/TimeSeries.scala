@@ -1216,58 +1216,6 @@ object TimeSeries {
         col("__m").as("n_pairs"), col("__slope").as("slope_ppm_day"))
   }
 
-  /** [[theilSen]] for LONG horizons (r15 — the r14 verdict's sampled
-    * variant): the exact estimator is deliberately quadratic in span,
-    * so past a few years the spine — not the pair set — is what must
-    * shrink. This caps each key's spine at `maxPoints` DETERMINISTIC
-    * sample days (bottom-k by h60("tss:"∥key∥":"∥epoch-day), ties by
-    * day — the samplePerGroup key, so the sample replays in any
-    * engine) and runs the same pairwise-median machinery on the
-    * sample: cost per key is ≤ maxPoints·(maxPoints−1)/2 pairs at ANY
-    * horizon (200 points ⇒ ≤ 19 900 pairs vs 604k at the exact cap).
-    * On a clean monotone series the sampled slope EQUALS the exact one
-    * (every point pair on a line yields the same slope); under noise
-    * it is the Theil–Sen estimate of a uniform day subsample —
-    * statistically consistent, and deterministic, so it still
-    * hash-gates. Output matches [[theilSen]] (`n_days` = SAMPLED spine
-    * days feeding the pairs). */
-  def theilSenSampled(events: DataFrame, keyCol: String, tsCol: String,
-                      valueCol: String, maxSpanDays: Int = 36500,
-                      maxPoints: Int = 200): DataFrame = {
-    require(maxPoints >= 2 && maxPoints <= 2000,
-      s"maxPoints must be in [2, 2000], got $maxPoints")
-    val wPick = Window.partitionBy(keyCol).orderBy(col("__h"), col("__x"))
-    val spine = Materialize.cutLazy(
-      resampleGapFill(events, keyCol, tsCol, valueCol, maxSpanDays)
-        .select(col(keyCol),
-          datediff(col("day"), lit(java.sql.Date.valueOf("1970-01-01")))
-            .cast("long").as("__x"),
-          col("value_cents").as("__y"))
-        .withColumn("__h",
-          conv(substring(md5(concat(lit("tss:"), col(keyCol).cast("string"),
-            lit(":"), col("__x").cast("string"))), 1, 15), 16, 10)
-            .cast("long"))
-        .withColumn("__rk", row_number().over(wPick))
-        .where(col("__rk") <= maxPoints)
-        .withColumn("__n", count(lit(1)).over(Window.partitionBy(keyCol)))
-        .select(col(keyCol), col("__n"), col("__x"), col("__y")))
-    val a = spine.select(col(keyCol), col("__n"),
-      col("__x").as("__xa"), col("__y").as("__ya"))
-    val bb = spine.select(col(keyCol),
-      col("__x").as("__xb"), col("__y").as("__yb"))
-    val pairs = a.join(bb, Seq(keyCol)).where(col("__xb") > col("__xa"))
-      .select(col(keyCol), col("__n"),
-        expr("((__yb - __ya) * 1000000L) DIV (__xb - __xa)").as("__slope"))
-    val wAll = Window.partitionBy(keyCol)
-    val wOrd = Window.partitionBy(keyCol).orderBy(col("__slope"))
-    pairs
-      .withColumn("__m", count(lit(1)).over(wAll))
-      .withColumn("__rn", row_number().over(wOrd))
-      .where(expr("__rn = (__m + 1) DIV 2"))
-      .select(col(keyCol), col("__n").cast("long").as("n_days"),
-        col("__m").as("n_pairs"), col("__slope").as("slope_ppm_day"))
-  }
-
   /** Per-key MANN–KENDALL trend TEST (Mann '45 / Kendall '75 — the
     * nonparametric SIGNIFICANCE companion of [[theilSen]]: Theil–Sen
     * answers "how steep", this answers "is there a monotone trend at

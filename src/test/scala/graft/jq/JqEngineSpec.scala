@@ -754,6 +754,26 @@ class JqEngineSpec extends AnyFunSuite {
       Jq.readConstraints.getMaxStringLength.toString)
     assert(run1(""""" * 1e300""") == "\"\"")
   }
+  test("contains and inside raise jq 1.6's error on a top-level kind mismatch") {
+    assert(run1("""try (1|contains("a")) catch .""") ==
+      "\"number (1) and string (\\\"a\\\") cannot have their containment checked\"")
+    assert(run1("""try (1|inside("a")) catch .""") ==
+      "\"string (\\\"a\\\") and number (1) cannot have their containment checked\"")
+    assert(run1("""try (true|contains(false)) catch .""") ==
+      "\"boolean (true) and boolean (false) cannot have their containment checked\"")
+    assert(run1("""[true|contains(true), (null|contains(null)), (1|contains(1))]""") == "[true,true,true]")
+    // below the top level a kind mismatch compares by equality
+    assert(run1("""contains({"a":["x"]})""", """{"a":[1,"x"]}""") == "true")
+    assert(run1("""contains({"a":1})""", """{"a":"x"}""") == "false")
+  }
+  test("map and flatten iterate an object's values") {
+    assert(run1("map(.+1)", """{"a":1,"b":2}""") == "[2,3]")
+    assert(run1("flatten", """{"a":[1],"b":[[2]]}""") == "[1,2]")
+    assert(run1("flatten(1)", """{"a":[1],"b":[[2]]}""") == "[1,[2]]")
+    assert(run1("[map(.), flatten]", "{}") == "[[],[]]")
+    assert(run1("try map(.) catch .") == "\"Cannot iterate over null (null)\"")
+    assert(run1("try flatten catch .", "\"abc\"") == "\"Cannot iterate over string (\\\"abc\\\")\"")
+  }
   test("interpolation: the last part is the outer loop and runs first") {
     assert(run(""""\(1,2) \(3,4)"""", "null") == List("\"1 3\"", "\"2 3\"", "\"1 4\"", "\"2 4\""))
     assert(run1("""try "\(error("a"))\(error("b"))" catch .""") == "\"b\"")

@@ -1,92 +1,78 @@
 package graft.pipeline
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.{GraftShim => E}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.SharedSpark
 
-/** PCA contracts: the Jacobi eigensolver against hand computations, model
-  * recovery of planted structure, the bounded mergeable covariance state,
-  * the persisted-model lifecycle, and the reduced-space ANN recall floor
-  * in PCA's intended regime (low-rank embeddings). */
+/** Integer-exact PCA contracts: model recovery of planted structure, the
+  * hand-checked projection, the partition-stable mergeable scatter state,
+  * and the reduced-space ANN recall floor in PCA's intended regime
+  * (low-rank embeddings). */
 class PcaSpec extends AnyFunSuite {
 
   lazy val spark = SharedSpark.session
   import spark.implicits._
 
-  test("jacobiEigen solves the hand-computable 2x2") {
-    val (evals, evecs) = Pca.jacobiEigen(Array(2.0, 1.0, 1.0, 2.0), 2)
-    val sorted = evals.sorted
-    assert(math.abs(sorted(0) - 1.0) < 1e-12 && math.abs(sorted(1) - 3.0) < 1e-12,
-      s"eigenvalues of [[2,1],[1,2]] are 1 and 3, got ${evals.toSeq}")
-    // eigenvector for eval 3 is (1,1)/sqrt2 up to sign
-    val k = if (evals(0) > evals(1)) 0 else 1
-    val v = Array(evecs(0 * 2 + k), evecs(1 * 2 + k))
-    assert(math.abs(math.abs(v(0)) - math.sqrt(0.5)) < 1e-9 &&
-      math.abs(v(0) - v(1)) < 1e-9, s"top eigenvector must be (1,1)/sqrt2: ${v.toSeq}")
-  }
+  private def unif(s: Long) =
+    (graft.functions.Mix.splitmix64(s) >>> 11).toDouble / (1L << 53).toDouble
 
   test("fit recovers a planted dominant direction; variance ordering holds") {
     // x = a*u + small noise, u = e0-ish direction in 16-d
     val d = 16
     val u = Array.tabulate(d)(j => if (j == 0) 0.8 else if (j == 1) 0.6 else 0.0)
     val rows = (0 until 2000).map { i =>
-      def unif(s: Long) = (graft.functions.Mix.splitmix64(s) >>> 11).toDouble / (1L << 53).toDouble
       val a = (unif(0xaaL + i) - 0.5) * 10
       (i.toLong, Array.tabulate(d)(j =>
         (a * u(j) + (unif(i.toLong * d + j) - 0.5) * 0.1).toFloat).toSeq)
     }.toDF("vec_id", "embedding")
-    val model = Pca.fit(rows, "embedding", r = 3)
-    assert(model.explained(0) > 10 * model.explained(1),
-      s"planted direction must dominate: ${model.explained.toSeq}")
-    val w0 = Array.tabulate(d)(j => model.w(j * 3))
+    val model = PcaExact.fit(rows, "embedding", r = 3)
+    val w0 = model.vecs(0).map(_.toDouble)
     val cosU = math.abs(w0.zip(u).map { case (a, b) => a * b }.sum) /
       math.sqrt(w0.map(x => x * x).sum)
     assert(cosU > 0.999, s"top component must align with the planted direction, cos=$cosU")
+    // variance of the projected data along each (unnormalized) direction
+    val spread = rows.select(PcaExact.project(model, col("embedding")).as("p"))
+      .select((0 until 3).map(k => variance(col("p").getItem(k)).as(s"v$k")): _*)
+      .head
+    val v = (0 until 3).map(k => spread.getDouble(k) / model.vecs(k).map(x => x.toDouble * x).sum)
+    assert(v(0) > 10 * v(1), s"planted direction must dominate: $v")
   }
 
-  test("transform is W^T(x - mean), hand-checked") {
-    val df = Seq((1L, Seq(1.0f, 0.0f)), (2L, Seq(3.0f, 0.0f))).toDF("vec_id", "embedding")
-    val model = Pca.fit(df, "embedding", r = 1)
-    // mean (2,0); only variance is along e0 → w = (1,0) sign-pinned positive
-    val got = df.select(col("vec_id"), Pca.transform(model, col("embedding")).as("t"))
-      .as[(Long, Seq[Float])].collect().toMap
-    assert(math.abs(got(1L).head - (-1.0f)) < 1e-6 && math.abs(got(2L).head - 1.0f) < 1e-6,
-      s"projection must center then project: $got")
+  test("project is (sum of v_kj * round(x_j * 1024)) quot 2^16, hand-checked") {
+    val model = PcaExact.Model(d = 2, r = 2, vecs = Array(Array(32768L, 0L), Array(-3L, 65536L)))
+    val df = Seq((1L, Seq(1.0f, -0.5f)), (2L, Seq(0.25f, 3.0f))).toDF("vec_id", "embedding")
+    val got = df.select(col("vec_id"), PcaExact.project(model, col("embedding")).as("p"))
+      .as[(Long, Seq[Long])].collect().toMap
+    // row 1: q = (1024, -512): p0 = 32768·1024 / 65536 = 512;
+    //   p1 = (−3·1024 + 65536·(−512)) / 65536 = −512.046… → −512 (toward zero)
+    // row 2: q = (256, 3072): p0 = 128; p1 = (−768 + 65536·3072) / 65536 → 3071
+    assert(got == Map(1L -> Seq(512L, -512L), 2L -> Seq(128L, 3071L)), s"$got")
   }
 
   test("covariance state: n exact under partitioning; wrong-length vector throws") {
     val rows = (0 until 1000).map(i => (i.toLong,
-      Seq(graft.functions.Mix.splitmix64(i.toLong).toFloat,
-        graft.functions.Mix.splitmix64(i + 7L).toFloat))).toDF("vec_id", "embedding")
-    val m1 = Pca.fit(rows.repartition(1), "embedding", 2)
-    val m17 = Pca.fit(rows.repartition(17), "embedding", 2)
-    m1.mean.zip(m17.mean).foreach { case (a, b) =>
-      assert(math.abs(a - b) <= math.abs(a) * 1e-9, "mean must be partition-stable (to ULP noise)") }
-    m1.explained.zip(m17.explained).foreach { case (a, b) =>
-      assert(math.abs(a - b) <= math.abs(a) * 1e-6, "spectrum must be partition-stable") }
-    val bad = Seq((1L, Seq(1.0f, 2.0f, 3.0f))).toDF("vec_id", "embedding")
+      Seq((unif(i.toLong) - 0.5).toFloat, (unif(i + 7L) * 2).toFloat,
+        (unif(i + 13L) - unif(i + 17L)).toFloat))).toDF("vec_id", "embedding")
+    def state(parts: Int) = rows.repartition(parts)
+      .agg(E.column(IntScatterAgg(E.expression(col("embedding")), 3).toAggregateExpression()).as("s"))
+      .select("s.n", "s.sums", "s.prods").as[(Long, Seq[Long], Seq[Long])].head
+    val s1 = state(1)
+    assert(s1._1 == 1000L && state(17) == s1,
+      "the integer scatter state is order-exact: n and every sum must not move with partitioning")
+    assert(PcaExact.fit(rows.repartition(1), "embedding", 2).vecs.map(_.toSeq).toSeq ==
+      PcaExact.fit(rows.repartition(17), "embedding", 2).vecs.map(_.toSeq).toSeq)
+    val bad = Seq((1L, Seq(1.0f, 2.0f))).toDF("vec_id", "embedding")
     val ex = intercept[Exception] {
-      Pca.fit(rows.union(bad), "embedding", 2)
+      PcaExact.fit(rows.union(bad), "embedding", 2)
     }
     assert(ex.getMessage != null)
   }
 
-  test("persisted model: save/load projects identically") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val model = Pca.fit(emb, "embedding", r = 8)
-    val dir = java.nio.file.Files.createTempDirectory("pca_model").toString
-    Pca.saveModel(spark, model, dir)
-    val loaded = Pca.loadModel(spark, dir)
-    val a = emb.select(Pca.transform(model, col("embedding"))).as[Seq[Float]].collect()
-    val b = emb.select(Pca.transform(loaded, col("embedding"))).as[Seq[Float]].collect()
-    assert(a.toSeq == b.toSeq, "persisted model must project bit-identically")
-  }
-
-  test("ANN pcaTopK recall >= 0.9 on a low-rank corpus (PCA's regime)") {
+  test("pcaTopKExact recall >= 0.9 on a low-rank corpus (PCA's regime)") {
     // real embedding tables are low-rank: 8 latent factors + noise in 64-d
     val d = 64; val latent = 8
-    def unif(s: Long) = (graft.functions.Mix.splitmix64(s) >>> 11).toDouble / (1L << 53).toDouble
     val basis = Array.tabulate(latent, d)((k, j) => unif(k * 1000L + j) - 0.5)
     val rows = (0 until 500).map { i =>
       val coefs = Array.tabulate(latent)(k => (unif(i * 31L + k) - 0.5) * (latent - k))
@@ -97,21 +83,10 @@ class PcaSpec extends AnyFunSuite {
     val queries = rows.where($"vec_id" < 10)
     val exact = Similarity.bruteForceTopK(rows, queries, "vec_id", "embedding", 10)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val approx = Similarity.pcaTopK(rows, queries, "vec_id", "embedding", 10, r = 8)
+    val approx = Similarity.pcaTopKExact(rows, queries, "vec_id", "embedding", 10, r = 8)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val recall = (exact & approx).size.toDouble / exact.size
     info(f"PCA(8/64) recall@10 on low-rank corpus = $recall%.3f")
     assert(recall >= 0.9, s"PCA recall $recall below 0.9 in its intended regime")
-    // near-uniform worst case (the shared test embeddings): log, floor loosely —
-    // dropping 56 of 64 near-equal variance directions MUST lose signal
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val q2 = emb.where($"vec_id" < 10)
-    val ex2 = Similarity.bruteForceTopK(emb, q2, "vec_id", "embedding", 10)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val ap2 = Similarity.pcaTopK(emb, q2, "vec_id", "embedding", 10, r = 16, expand = 8)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val r2 = (ex2 & ap2).size.toDouble / ex2.size
-    info(f"PCA(16/64) recall@10 on near-uniform corpus = $r2%.3f")
-    assert(r2 >= 0.4, s"even near-uniform recall should clear 0.4 with r=16+rerank, got $r2")
   }
 }

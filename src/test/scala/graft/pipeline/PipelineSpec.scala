@@ -126,29 +126,16 @@ class PipelineSpec extends AnyFunSuite {
     val nCorpus = emb.count()
     val exact = Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", 10)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val approx = Similarity.lshTopK(emb, queries, "vec_id", "embedding", 10)
+    val approx = Similarity.lshTopKExact(emb, queries, "vec_id", "embedding", 10)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val recall = (exact & approx).size.toDouble / exact.size
-
-    val nCands = Similarity.lshCandidates(emb, queries, "vec_id", "embedding",
+    val nCands = Similarity.lshCandidatesExact(emb, queries, "vec_id", "embedding",
       numTables = 8, numPlanes = 10, dim = 64, probeBits = 8, probeRadius = 3).count()
     val bruteForcePairs = 10.0 * (nCorpus - 1)
     info(f"LSH recall@10 = $recall%.3f; candidates = $nCands of ${bruteForcePairs.toLong} brute-force pairs (${100 * nCands / bruteForcePairs}%.1f%%)")
     assert(recall >= 0.8, s"multi-probe recall $recall below the 0.8 floor — not a usable ANN")
     assert(nCands < bruteForcePairs * 0.7,
       s"candidate set $nCands examined most of the corpus — blocking is not doing its job")
-
-    // r11: the integer-exact hyperplane variant (the oracle-replayable one
-    // ann_lsh_topk registers) holds the same floor with the same geometry
-    val exactApprox = Similarity.lshTopKExact(emb, queries, "vec_id", "embedding", 10)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val exactRecall = (exact & exactApprox).size.toDouble / exact.size
-    val nCandsExact = Similarity.lshCandidatesExact(emb, queries, "vec_id", "embedding",
-      numTables = 8, numPlanes = 10, dim = 64, probeBits = 8, probeRadius = 3).count()
-    info(f"LSH-exact recall@10 = $exactRecall%.3f; candidates = $nCandsExact")
-    assert(exactRecall >= 0.8, s"exact-hyperplane recall $exactRecall below the 0.8 floor")
-    assert(nCandsExact < bruteForcePairs * 0.7,
-      s"exact-variant candidate set $nCandsExact examined most of the corpus")
   }
 
   test("bandingPrAudit: full-band recall 1.0 on planted dups; starved banding names its misses") {
@@ -227,19 +214,11 @@ class PipelineSpec extends AnyFunSuite {
     val queries = emb.where($"vec_id" < 10)
     val exact = Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", 10)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val approx = Similarity.pqTopK(emb, queries, "vec_id", "embedding", 10)
+    val approx = Similarity.pqTopKExact(emb, queries, "vec_id", "embedding", 10)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val recall = (exact & approx).size.toDouble / exact.size
     info(f"PQ recall@10 = $recall%.3f (m=8, ksub=64, expand=8)")
     assert(recall >= 0.8, s"PQ recall $recall below 0.8")
-
-    // r11: the integer-exact codebook variant (the oracle-replayable one
-    // ann_pq_topk registers) holds the same floor with the same geometry
-    val exactApprox = Similarity.pqTopKExact(emb, queries, "vec_id", "embedding", 10)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val exactRecall = (exact & exactApprox).size.toDouble / exact.size
-    info(f"PQ-exact recall@10 = $exactRecall%.3f")
-    assert(exactRecall >= 0.8, s"exact-codebook PQ recall $exactRecall below 0.8")
   }
 
   test("pqTopKExact is deterministic across partition counts") {
@@ -255,16 +234,16 @@ class PipelineSpec extends AnyFunSuite {
   test("PQ scan is deterministic and rerank output is exact-cosine ranked") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val queries = emb.where($"vec_id" < 3)
-    val a = Similarity.pqTopK(emb, queries, "vec_id", "embedding", 5).collect().toSeq
-    val b = Similarity.pqTopK(emb, queries, "vec_id", "embedding", 5).collect().toSeq
-    assert(a.toSet == b.toSet, "seeded PQ training must be run-deterministic")
+    val a = Similarity.pqTopKExact(emb, queries, "vec_id", "embedding", 5).collect().toSeq
+    val b = Similarity.pqTopKExact(emb, queries, "vec_id", "embedding", 5).collect().toSeq
+    assert(a.toSet == b.toSet, "hash-ordered PQ training must be run-deterministic")
     // the rerank recomputes exact quantized cosine, so scores must agree
     // with brute force wherever the neighbor survived quantization
     val bf = Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", 50)
       .select("query_id", "neighbor_id", "cos_scaled")
       .as[(Long, Long, Long)].collect()
       .map { case (q, n, c) => (q, n) -> c }.toMap
-    val pq = Similarity.pqTopK(emb, queries, "vec_id", "embedding", 5)
+    val pq = Similarity.pqTopKExact(emb, queries, "vec_id", "embedding", 5)
       .select("query_id", "neighbor_id", "cos_scaled")
       .as[(Long, Long, Long)].collect()
     pq.foreach { case (q, n, c) =>
@@ -289,47 +268,6 @@ class PipelineSpec extends AnyFunSuite {
       k = 10, nProbe = 3).queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [list#") || plan.contains("PartitionFilters: [isnotnull(list"),
       s"probe scan not partition-pruned:\n$plan")
-  }
-
-  test("IVF-PQ composition holds recall while bounding rows AND bytes") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val queries = emb.where($"vec_id" < 10)
-    val exact = Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", 10)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val approx = Similarity.ivfPqTopK(emb, queries, "vec_id", "embedding", 10,
-      nLists = 16, nProbe = 12)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val recall = (exact & approx).size.toDouble / exact.size
-    info(f"IVF-PQ recall@10 = $recall%.3f (nProbe 12/16, m=8 ksub=64 expand=8)")
-    assert(recall >= 0.75, s"IVF-PQ recall $recall below 0.75 " +
-      "(compounds IVF list misses with PQ quantization — floor is below either alone)")
-  }
-
-  test("ivfPqTopK trains both quantizers from ONE corpus sample pass") {
-    // construction (no action) runs exactly the training collects; the two
-    // quantizers must share one spread-sample job — at 100 TB a second
-    // TakeOrdered training pass is a full extra corpus scan
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      Similarity.ivfPqTopK(emb, emb.where($"vec_id" < 3), "vec_id", "embedding", 5,
-        nLists = 16, nProbe = 4)
-      // listener bus is async — wait until the count is stable
-      var last = -1
-      var stable = 0
-      while (stable < 3) {
-        Thread.sleep(100)
-        val c = jobs.get
-        if (c == last) stable += 1 else { stable = 0; last = c }
-      }
-      assert(jobs.get == 1,
-        s"expected ONE sample job during ivfPqTopK construction, got ${jobs.get}")
-    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("compactParquet folds a fragmented table into target-sized files, rows intact") {

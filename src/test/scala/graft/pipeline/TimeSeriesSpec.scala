@@ -1141,36 +1141,18 @@ class TimeSeriesSpec extends AnyFunSuite {
     assert(TimeSeries.theilSen(df, "user_id", "ts", "value").count() == 0L)
   }
 
-  test("theil-sen sampled: exact on a clean line, pairs bounded on long horizons") {
+  test("theil-sen: exact on a clean line; past the span cap it fails loudly") {
     // a perfectly linear series: EVERY pair's slope is the per-day step,
-    // so any deterministic subsample recovers the exact slope — here
-    // 30 daily points at +3 cents/day, sampled down to 8 spine days
+    // 30 daily points at +3 cents/day
     val lin = (1 to 30).map(d => (1L, ts(d), 0.03 * d)).toDF("user_id", "ts", "value")
-    val sampled = TimeSeries.theilSenSampled(lin, "user_id", "ts", "value",
-        maxPoints = 8)
-      .as[(Long, Long, Long, Long)].collect().toSeq
-    assert(sampled.size == 1, s"$sampled")
-    val (_, nDays, nPairs, slope) = sampled.head
-    assert(nDays == 8L && nPairs == 28L, s"8 sampled days -> C(8,2)=28: $sampled")
-    assert(slope == 3000000L, s"3 cents/day = 3M ppm/day exactly: $sampled")
     assert(TimeSeries.theilSen(lin, "user_id", "ts", "value")
       .collect().head.getLong(3) == 3000000L)
-    // past the exact estimator's default span cap the exact form fails
-    // LOUDLY while the sampled one runs with bounded pairs — the long-
-    // horizon posture the sampled variant exists for
+    // past the default span cap the quadratic estimator refuses LOUDLY
     val far = new Timestamp(ts(1).getTime + 1299L * 86400000L) // +1299 days
     val long = Seq((1L, ts(1), 1.00), (1L, far, 14.00)).toDF("user_id", "ts", "value")
     val ex = intercept[Exception](
       TimeSeries.theilSen(long, "user_id", "ts", "value").collect())
     assert(ex.getMessage.contains("maxSpanDays"), ex.getMessage)
-    val ok = TimeSeries.theilSenSampled(long, "user_id", "ts", "value",
-      maxPoints = 50).collect()
-    assert(ok.length == 1 && ok.head.getLong(1) == 50L &&
-      ok.head.getLong(2) == 50L * 49 / 2, s"${ok.toSeq}")
-    // determinism: the md5 spine sample replays run over run
-    val again = TimeSeries.theilSenSampled(lin, "user_id", "ts", "value",
-      maxPoints = 8).as[(Long, Long, Long, Long)].collect().toSeq
-    assert(again == sampled, s"$again vs $sampled")
   }
 
   test("botScreen: metronomic high-volume user flags; slow or single-event users never do") {
