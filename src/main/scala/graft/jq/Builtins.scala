@@ -76,9 +76,11 @@ object Builtins {
   private def filter0(name: String)(p: JsonNode => Boolean): ((String, Int), Builtin) =
     gen(name, 0)((_, in, _, k) => if (p(in)) k(in))
 
-  /** Stops `body` after `n` pushes to `k`; nothing runs when n <= 0. */
+  /** Stops `body` after `n` pushes to `k`; nothing runs when n == 0, and
+    * all of it when n < 0 (jq 1.6's `limit`). */
   private def take[A](n: Int, k: A => Unit)(body: (A => Unit) => Unit): Unit =
-    if (n > 0) {
+    if (n < 0) body(k)
+    else if (n > 0) {
       var count = 0
       var stopped = false
       try body { v => k(v); count += 1; if (count >= n) { stopped = true; throw Stop } }
@@ -185,7 +187,8 @@ object Builtins {
   }
 
   /** `.[]`'s outputs as a list: an array's elements or an object's values
-    * (jq 1.6 defines `map` and `flatten` over `.[]`). */
+    * (jq 1.6 defines `map`, `flatten`, `add`, `any`, `all` and `join` over
+    * `.[]`). */
   private def iterated(v: JsonNode): List[JsonNode] =
     if (v.isArray) Json.elements(v).toList
     else if (v.isObject) Json.fields(v).map(_._2).toList
@@ -500,12 +503,12 @@ object Builtins {
     fn1("contains")((in, b) => bool(containsTop(in, b))),
     fn1("inside")((in, b) => bool(containsTop(b, in))),
 
-    fn0("add")(in => elems(in, "added").foldLeft(NullN: JsonNode)(Values.add)),
+    fn0("add")(in => iterated(in).foldLeft(NullN: JsonNode)(Values.add)),
 
-    fn0("any")(in => bool(elems(in, "examined").exists(truthy))),
-    fn0("all")(in => bool(elems(in, "examined").forall(truthy))),
-    one("any", 1)((a, in, fr) => bool(Json.elements(in).exists(v => exists(a(0), v, fr, truthy)))),
-    one("all", 1)((a, in, fr) => bool(Json.elements(in).forall(v => !exists(a(0), v, fr, x => !truthy(x))))),
+    fn0("any")(in => bool(iterated(in).exists(truthy))),
+    fn0("all")(in => bool(iterated(in).forall(truthy))),
+    one("any", 1)((a, in, fr) => bool(iterated(in).exists(v => exists(a(0), v, fr, truthy)))),
+    one("all", 1)((a, in, fr) => bool(iterated(in).forall(v => !exists(a(0), v, fr, x => !truthy(x))))),
     one("any", 2)((a, in, fr) => bool(exists(a(0), in, fr, v => exists(a(1), v, fr, truthy)))),
     one("all", 2)((a, in, fr) => bool(!exists(a(0), in, fr, v => exists(a(1), v, fr, x => !truthy(x))))),
 
@@ -583,7 +586,7 @@ object Builtins {
 
     fn1("join") { (in, sepN) =>
       val sep = requireString(sepN, "joined")
-      text(elems(in, "joined").map { e =>
+      text(iterated(in).map { e =>
         if (e.isNull) ""
         else if (e.isTextual) e.textValue()
         else if (e.isNumber || e.isBoolean) e.toString

@@ -266,7 +266,8 @@ private[jq] object Compiler {
     override def value(in: JsonNode, fr: Frame): JsonNode = fieldAccess(t.value(in, fr), name)
     override def run(in: JsonNode, fr: Frame, k: Sink): Unit =
       if (single) k(value(in, fr)) else t.run(in, fr, v => k(fieldAccess(v, name)))
-    override def paths(root: JsonNode, fr: Frame, k: PathSink): Unit = t.paths(root, fr, p => k(p :+ key))
+    override def paths(root: JsonNode, fr: Frame, k: PathSink): Unit =
+      t.paths(root, fr, p => { indexable(getPath(root, p), key); k(p :+ key) })
   }
 
   private final class IndexN(t: Node, idx: Node) extends Node {
@@ -277,9 +278,17 @@ private[jq] object Compiler {
       else t.run(in, fr, v => idx.run(in, fr, i => k(indexAccess(v, i))))
     override def paths(root: JsonNode, fr: Frame, k: PathSink): Unit =
       t.paths(root, fr, p => idx.run(root, fr, i =>
-        if (i.isTextual || i.isNumber || i.isObject) k(p :+ i)
+        if (i.isTextual || i.isNumber || i.isObject) { indexable(getPath(root, p), i); k(p :+ i) }
         else throw JqError.of(s"Invalid path component ${Json.typeName(i)}")))
   }
+
+  /** Raises jq 1.6's error for a path step `i` from a value `v` that no
+    * such step can index: a key needs an object, an index an array, a slice
+    * an array or a string; null takes any. */
+  private def indexable(v: JsonNode, i: JsonNode): Unit =
+    if (!(v.isNull || (if (i.isTextual) v.isObject else if (i.isNumber) v.isArray else v.isArray || v.isTextual)))
+      throw JqError.of(s"Cannot index ${Json.typeName(v)} with " +
+        (if (i.isTextual) s"string \"${i.textValue}\"" else Json.typeName(i)))
 
   private final class SliceN(t: Node, from: Node, to: Node) extends Node {
     override val single = t.single && from.single && to.single
@@ -289,8 +298,11 @@ private[jq] object Compiler {
       if (single) k(value(in, fr))
       else t.run(in, fr, v => from.run(in, fr, f => to.run(in, fr, e => k(sliceAccess(v, f, e)))))
     override def paths(root: JsonNode, fr: Frame, k: PathSink): Unit =
-      t.paths(root, fr, p => from.run(root, fr, f => to.run(root, fr, e =>
-        k(p :+ obj(List("start" -> f, "end" -> e))))))
+      t.paths(root, fr, p => from.run(root, fr, f => to.run(root, fr, e => {
+        val step = obj(List("start" -> f, "end" -> e))
+        indexable(getPath(root, p), step)
+        k(p :+ step)
+      })))
   }
 
   private final class IterateN(t: Node) extends Node {

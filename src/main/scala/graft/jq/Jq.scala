@@ -65,6 +65,25 @@ final class CompiledJq private[jq] (val ast: JqExpr) extends Serializable {
     else runText(json.toString, k)
   }
 
+  /** The program as a [[Projection]], or null when it is none; decided
+    * once, from the AST. */
+  @transient lazy val projection: Projection =
+    if (footprint.isEmpty) null else Projection.of(ast, reader.slot, reader.slots).orNull
+
+  /** For a [[projection]]: reads an object row's kept top-level fields into
+    * the null `slots` ([[Utf8Json.readSlots]]) and gives [[Projection.Read]];
+    * gives [[Projection.Corrupt]] for a guarded row refused with a worded
+    * error on valid UTF-8, unworded; else [[Projection.Fallback]], and the
+    * row is [[runUtf8]]'s. */
+  def project(json: UTF8String, slots: Array[JsonNode]): Int =
+    if (json == null) Projection.Fallback
+    else
+      try if (reader.readSlots(json, slots)) Projection.Read else Projection.Fallback
+      catch {
+        // runUtf8 binds $error on the same condition
+        case _: Utf8Json.Malformed => if (projection.guarded && json.isValid) Projection.Corrupt else Projection.Fallback
+      }
+
   /** The first output of [[runUtf8]], or null; nothing after it runs. */
   def firstUtf8(json: UTF8String): JsonNode = {
     val first = new Finder(Compiler.always)

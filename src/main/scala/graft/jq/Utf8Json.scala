@@ -48,7 +48,19 @@ private[jq] final class Utf8Json(need: Option[Footprint.Fields], limits: StreamR
 
   /** The node of `json` (non-null), or null when it is refused unworded;
     * throws [[Malformed]] when it words the refusal. */
-  def read(json: UTF8String): JsonNode = {
+  def read(json: UTF8String): JsonNode = run(json, null)
+
+  /** How many top-level fields the footprint keeps, and the slot of each. */
+  def slots: Int = top.names.length
+  def slot(name: String): Int = top.names.indexOf(name)
+
+  /** Reads an object row's kept top-level fields into the null `slots`, each
+    * at its [[slot]] (a field the row lacks stays null), and builds no root
+    * object. False when the row is no object, repeats a kept key, or is
+    * refused unworded; throws [[Malformed]] as [[read]] does. */
+  def readSlots(json: UTF8String, slots: Array[JsonNode]): Boolean = run(json, slots) != null
+
+  private def run(json: UTF8String, slots: Array[JsonNode]): JsonNode = {
     val n = json.numBytes
     if (n > maxBytes) return null
     val base = json.getBaseObject
@@ -59,7 +71,7 @@ private[jq] final class Utf8Json(need: Option[Footprint.Fields], limits: StreamR
       case _ => new Reader(json.getBytes, 0, n)
     }
     // a Malformed passes through to the caller
-    try r.document()
+    try r.document(slots)
     catch { case _: Refusal => null }
   }
 
@@ -88,11 +100,13 @@ private[jq] final class Utf8Json(need: Option[Footprint.Fields], limits: StreamR
     private var chars: Array[Char] = null
     private var n = 0
 
-    def document(): JsonNode = {
+    def document(slots: Array[JsonNode]): JsonNode = {
       ws()
-      if (i == end) return Json.NullN
+      if (slots != null) { if (at != '{') refuse() }
+      else if (i == end) return Json.NullN
       val s = i
-      val v = value(top)
+      // a slot read answers with a non-null mark
+      val v = if (slots == null) value(top) else { obj(top, slots); Json.NullN }
       if (i < end && (b(s) == '-' || b(s) >= '0' && b(s) <= '9')) spaced()
       ws()
       if (i != end) trailing()
@@ -159,10 +173,11 @@ private[jq] final class Utf8Json(need: Option[Footprint.Fields], limits: StreamR
       case _ => number()
     }
 
-    private def obj(keep: Keep): ObjectNode = {
+    /** An object, or with `slots` its kept fields put there and null. */
+    private def obj(keep: Keep, slots: Array[JsonNode] = null): ObjectNode = {
       val s = i
       enter()
-      val o = Json.F.objectNode()
+      val o = if (slots == null) Json.F.objectNode() else null
       if (at == '}') i += 1
       else {
         var more = true
@@ -175,7 +190,10 @@ private[jq] final class Utf8Json(need: Option[Footprint.Fields], limits: StreamR
           } else {
             val idx = keyIndex(keep)
             ws(); expect(':', Colon, -1)
-            if (idx < 0) skip() else o.set[JsonNode](keep.names(idx), value(keep.subs(idx)))
+            if (idx < 0) skip()
+            else if (slots == null) o.set[JsonNode](keep.names(idx), value(keep.subs(idx)))
+            else if (slots(idx) == null) slots(idx) = value(keep.subs(idx))
+            else refuse() // a repeated key: the node path keeps its last value
           }
           ws()
           if (at == ',') { i += 1; ws() } else { expect('}', AfterObject, s); more = false }

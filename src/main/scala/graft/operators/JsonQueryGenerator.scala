@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.jq.{Jq, JqError, Json}
+import graft.jq.{Jq, JqError, Json, Projection}
 
 /** Spark-native equivalent of the reference UDTF
   * (reference: JsonQueryUDTF.java — jq(JSON, JQ, TYPE...) Hive generator).
@@ -47,9 +47,32 @@ case class JsonQueryGenerator(child: Expression, program: String, typeArgs: Seq[
 
   /** The reference's contract (JsonQueryUDTF.java:74-107): every output of
     * the row is forwarded, and a jq error anywhere in the row fails it, so
-    * the row runs to its end before its first output is returned. */
+    * the row runs to its end before its first output is returned. A path
+    * projection ([[Projection]]) reads its leaves without the row's tree
+    * where it can; every other row takes the node path. */
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val json = child.eval(input).asInstanceOf[UTF8String]
+    val projected = if (lane == null) null else project(json)
+    if (projected != null) projected else evalNodes(json)
+  }
+
+  @transient private lazy val lane: Projection = compiled.projection
+  // the guard's rows, marshalled once
+  @transient private lazy val errorRows: Array[InternalRow] =
+    if (lane == null || !lane.guarded) null else lane.onError.map(marshal)
+
+  /** The lane's outputs for `json`, or null when the row takes the node path. */
+  private def project(json: UTF8String): Iterator[InternalRow] = {
+    val slots = new Array[JsonNode](lane.slots)
+    compiled.project(json, slots) match {
+      case Projection.Read => val v = lane.value(slots); if (v == null) null else Iterator.single(marshal(v))
+      case Projection.Corrupt => errorRows.iterator
+      case _ => null
+    }
+  }
+
+  /** Runs the row on the compiled program and marshals each output. */
+  private[operators] def evalNodes(json: UTF8String): IterableOnce[InternalRow] = {
     val rows = new JsonQueryGenerator.Rows
     try compiled.runUtf8(json, node => rows += marshal(node))
     catch { case e: JqError => throw JqOutput.failure(e, json) }

@@ -774,6 +774,33 @@ class JqEngineSpec extends AnyFunSuite {
     assert(run1("try map(.) catch .") == "\"Cannot iterate over null (null)\"")
     assert(run1("try flatten catch .", "\"abc\"") == "\"Cannot iterate over string (\\\"abc\\\")\"")
   }
+  test("add, any, all and join iterate an object's values") {
+    assert(run1("add", """{"a":1,"b":2}""") == "3")
+    assert(run1("any", """{"a":true}""") == "true")
+    assert(run1("[any, all]", """{"a":true,"b":false}""") == "[true,false]")
+    assert(run1("join(\",\")", """{"a":"x","b":"y"}""") == "\"x,y\"")
+    assert(run1("[add, any, all, join(\",\")]", "{}") == "[null,false,true,\"\"]")
+    assert(run1("try add catch .", "1") == "\"Cannot iterate over number (1)\"")
+    assert(run1("try join(\",\") catch .", "\"ab\"") == "\"Cannot iterate over string (\\\"ab\\\")\"")
+    assert(run1("[any(. > 1), all(. > 1)]", """{"a":1,"b":2}""") == "[true,false]")
+    assert(run1("try any(. > 0) catch .", "1") == "\"Cannot iterate over number (1)\"")
+  }
+  test("path steps raise jq 1.6's error on a value they cannot index") {
+    assert(run1("try (1|path(.a)) catch .") == "\"Cannot index number with string \\\"a\\\"\"")
+    assert(run1("try (2|path(.[-1])) catch .") == "\"Cannot index number with number\"")
+    assert(run1("try path(.[0]) catch .", """{"a":1}""") == "\"Cannot index object with number\"")
+    assert(run1("try path(.a.b) catch .", """{"a":1}""") == "\"Cannot index number with string \\\"b\\\"\"")
+    assert(run1("try path(.a) catch .", "[1]") == "\"Cannot index array with string \\\"a\\\"\"")
+    assert(run1("try (1|path(.[1:2])) catch .") == "\"Cannot index number with object\"")
+    assert(run1("try path(.[1:]) catch .", "{}") == "\"Cannot index object with object\"")
+    assert(run1("try del(.[1:2]) catch .", "true") == "\"Cannot index boolean with object\"")
+    // null takes any step, and a string a slice
+    assert(run1("null | [path(.a), path(.[-1]), path(.a.b)]") == """[["a"],[-1],["a","b"]]""")
+    assert(run1("[path(.[1:2])]", "\"abc\"") == """[[{"start":1,"end":2}]]""")
+    assert(run1("[path(.[1:2])]") == """[[{"start":1,"end":2}]]""")
+    assert(run1("[path(.a?)]", "1") == "[]")
+    assert(run1("try del(.k) catch .", "[]") == "\"Cannot index array with string \\\"k\\\"\"")
+  }
   test("interpolation: the last part is the outer loop and runs first") {
     assert(run(""""\(1,2) \(3,4)"""", "null") == List("\"1 3\"", "\"2 3\"", "\"1 4\"", "\"2 4\""))
     assert(run1("""try "\(error("a"))\(error("b"))" catch .""") == "\"b\"")
@@ -784,6 +811,12 @@ class JqEngineSpec extends AnyFunSuite {
     assert(run1("""[limit(2; 1, 2, error("x"))]""") == "[1,2]")
     assert(run1("""[limit(3; 0, 1, 2, error("x"))]""") == "[0,1,2]")
     assert(run1("""[limit(2; first(1, 2), 3, error("x"))]""") == "[1,3]")
+  }
+  test("limit with a negative count yields every output, as in jq 1.6") {
+    assert(run1("[limit(-1; 1, 2)]") == "[1,2]")
+    assert(run1("[limit(-5; empty)]") == "[]")
+    assert(run1("[path(limit(-1; .a, .b))]") == """[["a"],["b"]]""")
+    assert(run1("[limit(0; 1, 2)]") == "[]") // the jq 1.7 way (SURVEY §5)
   }
   test("first does not look ahead into a pipe's source") {
     assert(run1("""first(1, error("x"))""") == "1")

@@ -37,7 +37,20 @@ class JqGoldenSpec extends AnyFunSuite {
       (p => Seq("fromjson", "@base64d", "test", "match", "splits", "sub").exists(p.contains)),
     // map and flatten run over .[]: an object's values are iterated, and
     // anything else raises "Cannot iterate over ..."
-    "map and flatten iterate objects" -> (p => p.contains("map(") || p.contains("flatten")))
+    "map and flatten iterate objects" -> (p => p.contains("map(") || p.contains("flatten")),
+    // limit with a negative count yields every output of its generator
+    "negative limit" -> (_.contains("limit(-")),
+    // a path step raises the error its access would on a value it cannot
+    // index (`1|path(.a)`: Cannot index number with string "a"); null
+    // takes any step. paths, del and every assignment are built on them
+    "path steps need an indexable value" -> (p => Seq("path", "del(").exists(p.contains) || assignment.findFirstIn(p).isDefined),
+    // add, any, all and join run over .[]: an object's values are
+    // iterated, and anything else raises "Cannot iterate over ..."
+    "add, any, all and join iterate objects" ->
+      (p => Seq("add", "any", "all", "join", "ANY", "ALL").exists(p.contains)))
+
+  // `=`, `|=`, `+=`, `//=`, …, but not `==`, `!=`, `<=` or `>=`
+  private val assignment = "(^|[^=!<>])=($|[^=])".r
 
   test("the corpus holds at least 10k cases") {
     assert(corpus.size >= 10000, s"${corpus.size} cases")

@@ -154,6 +154,30 @@ class GeneratorSpec extends AnyFunSuite {
     }
   }
 
+  test("guarded path projections under LATERAL VIEW OUTER give the node path's rows on rows held in an UnsafeRow") {
+    val rows = Seq(
+      """{"k": 7}""", """{"k": "12"}""", "null", "{}", """{"k": 1, "k": 2}""", // read, or left to the node path
+      """{"k": 7}x""", """{"k": 7} 1""", """{"a": 1 "k": 2}""", """{"k": {"deep": [1, 2""", "{\"ü\": [1,\n2}", // worded
+      """{"k": 01}""", """{"k": 1.}""") // refused unworded, so worded by Jackson
+    // after a shuffle each value lies inside its UnsafeRow's bytes
+    rows.zipWithIndex.toDF("j", "id").repartition(2).createOrReplaceTempView("guarded_rows")
+    for ((p, t) <- Seq("if $error then empty else .k end" -> "int",
+        "if $error then empty else {k: .k} end" -> "k:int",
+        "if $error then {k: -1} else {k} end" -> "k:int")) {
+      val got = spark.sql(s"SELECT id, x.* FROM guarded_rows LATERAL VIEW OUTER jq(j, '$p', '$t') x").collect()
+        .groupBy(_.getInt(0)).map { case (id, rs) => id -> rs.map(r => if (r.isNullAt(1)) None else Some(r.getInt(1))).toList }
+      for ((r, id) <- rows.zipWithIndex) {
+        val outputs = graft.jq.Jq.compile(p).applyToText(r).map { n =>
+          val v = if (n.isObject) n.get("k") else n
+          if (v == null || v.isNull) None else Some(v.asInt)
+        }.toList
+        assert(got(id) == (if (outputs.isEmpty) List(None) else outputs), s"$p on $r")
+      }
+      assert(got(0) == List(Some(7)) && got(1) == List(Some(12)) && got(4) == List(Some(2)))
+      assert(got(5) == List(if (p.contains("-1")) Some(-1) else None))
+    }
+  }
+
   test("jq runtime error fails with the reference's wording (JsonQueryUDTF.java:101)") {
     val expected = """jq returned an error "boom" from input: {"a":1}"""
     def messages(t: Throwable): List[String] =
